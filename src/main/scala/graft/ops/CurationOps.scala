@@ -50,24 +50,17 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps {
 
-  /** Session-scoped memo of the funnels' SHARED stage-0–2 prefix —
-    * (masked, s2): the per-doc rule-mask frame and the exact-dedup
-    * survivor frame, both per-doc integers and already
+  /** Session-scoped cache ([[ArtifactCache]]) of the funnels' SHARED
+    * stage-0–2 prefix — (masked, s2): the per-doc rule-mask frame and the
+    * exact-dedup survivor frame, both per-doc integers and already
     * localCheckpoint'ed. The q71 base funnel and the q96 near-dup funnel
     * run IDENTICAL quality + exact-dedup stages over the same corpus, so
     * the second caller per (session, key) skips the corpus tokenization,
-    * the mask pass and the prefix-key shuffle entirely — the
-    * [[RetrievalOps.moreLikeThisShared]] / [[GraphOps.symmetricEdgesShared]]
-    * convention, third instance. Every stage-0–2 parameter folds into
-    * the key as a TUPLE FIELD (the stopword list as a List, not a
+    * the mask pass and the prefix-key shuffle entirely. Every stage-0–2
+    * parameter folds into the key (the stopword list as a List, not a
     * delimiter-joined string — a stopword containing the delimiter can
-    * never alias two parameterizations), plus [[MemoFingerprint]] of the
-    * docs relation, so a reused srcKey over changed backing data
-    * recomputes instead of serving a stale prefix. */
-  private val stageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Any), (DataFrame, DataFrame)]()
-  /** Memo-hit counter, exposed for the spec only. */
-  private[graft] val stageMemoHits = new java.util.concurrent.atomic.AtomicLong(0)
+    * never alias two parameterizations). */
+  private[graft] val stageMemo = new ArtifactCache[(DataFrame, DataFrame)]
 
   def curationFunnel(
       docs: DataFrame, textCol: String, idCol: String,
@@ -106,16 +99,8 @@ object CurationOps {
     val (masked, s2) = sharedStageKey match {
       case None => buildStages()
       case Some(srcKey) =>
-        stageMemo.forEach { (key, _) =>
-          if (key._1.sparkContext.isStopped) stageMemo.remove(key)
-        }
-        val key = (docs.sparkSession,
-          (MemoFingerprint.of(docs), srcKey, textCol, idCol,
-            stopwords.toList, minTokens, maxTokens, minStops, prefixLen,
-            benchMod))
-        val prev = stageMemo.get(key)
-        if (prev != null) { stageMemoHits.incrementAndGet(); prev }
-        else stageMemo.computeIfAbsent(key, _ => buildStages())
+        stageMemo(docs, (srcKey, textCol, idCol, stopwords.toList,
+          minTokens, maxTokens, minStops, prefixLen, benchMod))(buildStages())
     }
     val s1 = masked.filter(col("rule_mask") === 0L).select("doc_id", "n_tokens")
 

@@ -50,45 +50,34 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
       .distinct()
 
-  /** Session-scoped memo of materialized [[symmetricEdges]] relations —
-    * see [[symmetricEdgesShared]]. The [[RetrievalOps.moreLikeThisShared]]
-    * convention: keys carry the session, stopped sessions' entries drop
-    * on the next lookup, hits counted for the spec. */
-  private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Any), DataFrame]()
-  /** Memo-hit counter, exposed for the spec only. */
-  private[graft] val edgeMemoHits = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Session-scoped cache of materialized [[symmetricEdges]] relations —
+    * see [[symmetricEdgesShared]]. */
+  private[graft] val edgeMemo = new ArtifactCache[DataFrame]
 
   /** [[symmetricEdges]] as a SHARED, SESSION-SCOPED MATERIALIZED
-    * ARTIFACT — the in-session equivalent of [[writeEdges]]/[[readEdges]]
-    * for runs that consume the SAME graph several ways (the catalog's
-    * q104 PageRank / q121 k-core / q133 label propagation all analyze
-    * the customer–supplier interaction graph; before r9 each re-ran the
-    * fact-table join + union/distinct, ~1.5 s apiece at sf0.1). First
-    * caller per (session, sourceKey, content) computes and checkpoints
-    * the canonical edge relation; later callers reuse it. `sourceKey`
-    * names the pair relation's construction (the catalog passes the sf
-    * directory + graph name); the key ALSO folds in [[MemoFingerprint]]
-    * of the pair plan's backing files, so a reused sourceKey over
-    * CHANGED data recomputes instead of serving stale edges. The
-    * fingerprint needs the ANALYZED plan (cheap — file-index listing,
-    * no job), so `pairs` is forced once per lookup; only the EXECUTION
-    * of the join/distinct is skipped on a hit. The memoized value is the
-    * EDGE relation — the same thing [[writeEdges]] would persist; at
-    * billion-edge scale prefer the on-disk artifact, which this memo
-    * deliberately mirrors one-to-one. */
+    * ARTIFACT ([[ArtifactCache]]) — the in-session equivalent of
+    * [[writeEdges]]/[[readEdges]] for runs that consume the SAME graph
+    * several ways (the catalog's q104 PageRank / q121 k-core / q133
+    * label propagation all analyze the customer–supplier interaction
+    * graph; before r9 each re-ran the fact-table join + union/distinct,
+    * ~1.5 s apiece at sf0.1). First caller per (session, pairs content,
+    * sourceKey) computes and checkpoints the canonical edge relation;
+    * later callers reuse it. `sourceKey` names the pair relation's
+    * construction (the catalog passes the sf directory + graph name).
+    * The content fingerprint needs the ANALYZED plan (cheap — file-index
+    * listing, no job), so `pairs` is forced once per lookup; only the
+    * EXECUTION of the join/distinct is skipped on a hit. The memoized
+    * value is the EDGE relation — the same thing [[writeEdges]] would
+    * persist; at billion-edge scale prefer the on-disk artifact, which
+    * this memo deliberately mirrors one-to-one. The cache keys on the
+    * session that owns `pairs`; `spark` stays for source compatibility. */
   def symmetricEdgesShared(spark: org.apache.spark.sql.SparkSession,
       sourceKey: String, aCol: String, bCol: String)
       (pairs: => DataFrame): DataFrame = {
-    edgeMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) edgeMemo.remove(key)
-    }
     val p = pairs
-    val key = (spark, (MemoFingerprint.of(p), sourceKey, aCol, bCol))
-    val prev = edgeMemo.get(key)
-    if (prev != null) { edgeMemoHits.incrementAndGet(); prev }
-    else edgeMemo.computeIfAbsent(key, _ =>
-      symmetricEdges(p, aCol, bCol).localCheckpoint())
+    edgeMemo(p, (sourceKey, aCol, bCol)) {
+      symmetricEdges(p, aCol, bCol).localCheckpoint()
+    }
   }
 
   /** Persist a [[symmetricEdges]] relation: range-partitioned and sorted

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,48 +22,29 @@ import org.apache.spark.sql.functions._
   */
 object RetrievalOps {
 
-  /** Session-scoped memo of materialized [[moreLikeThis]] rankings —
-    * see [[moreLikeThisShared]]. Values are localCheckpoint'ed top-k
-    * relations (|queries| × k rows, tiny); keys carry the session so a
-    * restarted session can never serve another session's plan. */
-  private val mltMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Any), DataFrame]()
-  /** Memo-hit counter, exposed for the spec only. */
-  private[graft] val mltMemoHits = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Session-scoped cache of materialized [[moreLikeThis]] rankings —
+    * see [[moreLikeThisShared]]. */
+  private[graft] val mltMemo = new ArtifactCache[DataFrame]
 
-  /** [[moreLikeThis]] as a SHARED, SESSION-SCOPED MATERIALIZED ARTIFACT:
-    * the first caller per (session, sourceKey, params) computes the
-    * ranking and checkpoints it; every later caller gets the same tiny
-    * relation back — the materialized-view move for rankings consumed by
-    * several downstream queries (q115's brute-force hybrid and q126's
-    * index-backed hybrid share an IDENTICAL lexical side; before r9 each
-    * rebuilt it from the corpus, ~5 s apiece at sf0.1).
+  /** [[moreLikeThis]] as a SHARED, SESSION-SCOPED MATERIALIZED ARTIFACT
+    * ([[ArtifactCache]]): the first caller per (session, docs content,
+    * sourceKey, params) computes the ranking and checkpoints it; every
+    * later caller gets the same tiny relation back — the
+    * materialized-view move for rankings consumed by several downstream
+    * queries (q115's brute-force hybrid and q126's index-backed hybrid
+    * share an IDENTICAL lexical side; before r9 each rebuilt it from the
+    * corpus, ~5 s apiece at sf0.1).
     *
     * The memoized value is the RESULT relation (per-query top-k — small
     * by construction), never the corpus-sized intermediates, so the memo
     * costs |queries| × k rows of executor storage per distinct key.
     * `sourceKey` names the docs relation (the catalog passes the sf
-    * directory), and the key ALSO folds in [[MemoFingerprint]] of the
-    * relation itself, so a reused sourceKey over CHANGED backing data
-    * recomputes instead of serving a stale ranking — the content check
-    * is structural, not a caller contract. Parameters are key fields
-    * (a tuple, not a joined string — no delimiter collisions), so
-    * differing knobs never collide. Stopped sessions' entries are
-    * dropped on the next lookup. */
+    * directory). */
   def moreLikeThisShared(docs: DataFrame, textCol: String, idCol: String,
-      queryMod: Int, k: Int, maxQueryTerms: Int, sourceKey: String): DataFrame = {
-    val spark = docs.sparkSession
-    mltMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) mltMemo.remove(key)
+      queryMod: Int, k: Int, maxQueryTerms: Int, sourceKey: String): DataFrame =
+    mltMemo(docs, (sourceKey, textCol, idCol, queryMod, k, maxQueryTerms)) {
+      moreLikeThis(docs, textCol, idCol, queryMod, k, maxQueryTerms).localCheckpoint()
     }
-    val key = (spark,
-      (MemoFingerprint.of(docs), sourceKey, textCol, idCol, queryMod, k, maxQueryTerms))
-    val prev = mltMemo.get(key)
-    if (prev != null) { mltMemoHits.incrementAndGet(); prev }
-    else mltMemo.computeIfAbsent(key, _ =>
-      moreLikeThis(docs, textCol, idCol, queryMod, k, maxQueryTerms)
-        .localCheckpoint())
-  }
 
   /** INVERTED-INDEX STATS: the term dictionary + postings summary of a
     * distributed index build. One explode pass, a partial-agg shuffle on

@@ -1005,35 +1005,20 @@ object SimilarityOps {
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, ksub: Int, iters: Int,
       queryMod: Int, k: Int): DataFrame = {
-    // the trained codebooks + code table through the session memo (r14
-    // — the [[kmeansIndexShared]]/[[idResidueIndexShared]] convention):
+    // the trained codebooks + code table through the session memo (r14):
     // a PQ deployment trains once and PERSISTS the index; repeated
     // searches over the same corpus and parameters read the artifacts.
     // The memoized codebooks are m × ksub rows; the codes relation is m
     // small ints per vector — the compressed index, never raw vectors.
-    val spark = emb.sparkSession
-    pqIndexMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) pqIndexMemo.remove(key)
+    val (codebooks, codes) = pqMemo(emb, (idCol, vecCol, dim, m, ksub, iters)) {
+      // materialize the trained codebooks ONCE (m × ksub rows): they
+      // feed both the encode branch and the query LUT branch, and
+      // without the checkpoint each branch embeds — and re-executes —
+      // the whole iters-deep training DAG over the corpus
+      val cb = pqTrainCodebooks(emb, idCol, vecCol, dim, m, ksub, iters)
+        .localCheckpoint()
+      (cb, pqEncode(emb, idCol, vecCol, cb, dim, m).localCheckpoint())
     }
-    val key = (spark, (graft.ops.MemoFingerprint.of(emb), "pq",
-      idCol, vecCol, dim, m, ksub, iters))
-    val prev = pqIndexMemo.get(key)
-    val (codebooks, codes) =
-      if (prev != null) { pqIndexMemoHits.incrementAndGet(); (prev._2, prev._3) }
-      else {
-        val built = pqIndexMemo.computeIfAbsent(key, _ => {
-          // materialize the trained codebooks ONCE (m × ksub rows): they
-          // feed both the encode branch and the query LUT branch, and
-          // without the checkpoint each branch embeds — and re-executes —
-          // the whole iters-deep training DAG over the corpus. The first
-          // tuple slot (the coarse-centroid relation of the IVF variants)
-          // is unused by plain PQ; codebooks stand in.
-          val cb = pqTrainCodebooks(emb, idCol, vecCol, dim, m, ksub, iters)
-            .localCheckpoint()
-          (cb, cb, pqEncode(emb, idCol, vecCol, cb, dim, m).localCheckpoint())
-        })
-        (built._2, built._3)
-      }
     val lut = pqSubvectors(
         emb.filter(col(idCol) % queryMod === 0), idCol, vecCol, m, dim / m)
       .join(broadcast(codebooks.select(col("sub"), col("cid"), col("cv"))), "sub")
@@ -1105,29 +1090,19 @@ object SimilarityOps {
     * instead of re-running the whole training DAG — exactly what a
     * production deployment does by PERSISTING the index
     * ([[ivfPqIndex]]'s documented durable form) instead of retraining
-    * per query. Key: corpus fingerprint + every training parameter;
-    * stopped sessions' entries drop on the next lookup. */
+    * per query. */
   private def idResidueIndexShared(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, coarseMod: Int, m: Int, ksub: Int, iters: Int):
-      (DataFrame, DataFrame, DataFrame) = {
-    val spark = emb.sparkSession
-    pqIndexMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) pqIndexMemo.remove(key)
-    }
-    val key = (spark, (graft.ops.MemoFingerprint.of(emb), "idres",
-      idCol, vecCol, dim, coarseMod, m, ksub, iters))
-    val prev = pqIndexMemo.get(key)
-    if (prev != null) { pqIndexMemoHits.incrementAndGet(); prev }
-    else pqIndexMemo.computeIfAbsent(key, _ => {
+      (DataFrame, DataFrame, DataFrame) =
+    idResidueIndexMemo(emb, (idCol, vecCol, dim, coarseMod, m, ksub, iters)) {
       val (c, codebooks, codes) =
         ivfPqIndex(emb, idCol, vecCol, dim, coarseMod, m, ksub, iters)
       // the memoized value is the compressed index a deployment persists
       // (cells + m codes per vector), never raw vectors — checkpointed so
       // consumers read the artifact instead of re-running the encode
       (c, codebooks, codes.localCheckpoint())
-    })
-  }
+    }
 
   /** IVF-PQ over TRAINED coarse cells (the r8 verdict's ask): Lloyd
     * k-means supplies the `kCoarse` coarse centroids, so the coarse
@@ -1150,39 +1125,27 @@ object SimilarityOps {
       c, codebooks, codes, idCol, vecCol, dim, m, k, nprobe)
   }
 
-  /** Session-scoped memo of the TRAINED IVF-PQ index triple (coarse
-    * centroids, residual codebooks, code table) — the in-session form of
-    * the [[ivfPqIndex]] persisted artifacts, shared by every consumer of
+  /** Session-scoped caches ([[ArtifactCache]]) of trained PQ indexes,
+    * one per quantizer: plain PQ's (codebooks, codes) for [[pqAnn]], and
+    * the IVF-PQ triple (coarse centroids, residual codebooks, code table)
+    * over id-residue cells ([[idResidueIndexShared]]) and over trained
+    * kmeans cells ([[kmeansIndexShared]]). The memoized codes relation is
+    * m small ints (+ a cell id) per vector — the compressed index a
+    * production deployment PERSISTS, never the raw corpus. */
+  private[graft] val pqMemo = new ArtifactCache[(DataFrame, DataFrame)]
+  private[graft] val idResidueIndexMemo = new ArtifactCache[(DataFrame, DataFrame, DataFrame)]
+  private[graft] val kmeansIndexMemo = new ArtifactCache[(DataFrame, DataFrame, DataFrame)]
+
+  /** The kmeans-cell IVF-PQ index triple, shared by every consumer of
     * the same (content, params) index: the catalog's q129 ADC search and
     * q175 rerank search train IDENTICAL kmeans centroids + codebooks
     * over the same corpus, so the second caller skips the whole training
-    * DAG (Lloyd rounds, residual pass, codebook iterations, encode). The
-    * [[graft.ops.RetrievalOps.moreLikeThisShared]] convention: keys
-    * carry the session + [[MemoFingerprint]] of the corpus + every
-    * training parameter (a tuple — no delimiter collisions); stopped
-    * sessions' entries drop on the next lookup; hits counted for the
-    * spec. The memoized codes relation is m small ints + a cell id per
-    * vector — the compressed index a production deployment PERSISTS
-    * (never the raw corpus), checkpointed so consumers read the artifact
-    * instead of re-running the encode window. */
-  private val pqIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Any), (DataFrame, DataFrame, DataFrame)]()
-  /** Memo-hit counter, exposed for the spec only. */
-  private[graft] val pqIndexMemoHits = new java.util.concurrent.atomic.AtomicLong(0)
-
+    * DAG (Lloyd rounds, residual pass, codebook iterations, encode). */
   private def kmeansIndexShared(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, kCoarse: Int, kmIters: Int, m: Int, ksub: Int, iters: Int):
-      (DataFrame, DataFrame, DataFrame) = {
-    val spark = emb.sparkSession
-    pqIndexMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) pqIndexMemo.remove(key)
-    }
-    val key = (spark, (graft.ops.MemoFingerprint.of(emb),
-      idCol, vecCol, dim, kCoarse, kmIters, m, ksub, iters))
-    val prev = pqIndexMemo.get(key)
-    if (prev != null) { pqIndexMemoHits.incrementAndGet(); prev }
-    else pqIndexMemo.computeIfAbsent(key, _ => {
+      (DataFrame, DataFrame, DataFrame) =
+    kmeansIndexMemo(emb, (idCol, vecCol, dim, kCoarse, kmIters, m, ksub, iters)) {
       // trained once; feeds the residual assignment AND the query-side
       // probe ranking — checkpoint keeps the Lloyd iterations from
       // re-running per consumer (the codebook-materialization
@@ -1193,8 +1156,7 @@ object SimilarityOps {
       val (c, codebooks, codes) =
         ivfPqIndexWith(emb, idCol, vecCol, cents, dim, m, ksub, iters)
       (c, codebooks, codes.localCheckpoint())
-    })
-  }
+    }
 
   /** Build the THREE persisted artifacts of an IVF-PQ index —
     * (coarse centroids, residual codebooks, code table) — the durable

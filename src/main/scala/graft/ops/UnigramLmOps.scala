@@ -255,33 +255,32 @@ object UnigramLmOps {
   def readVocab(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select(col("piece"), col("cnt"), col("cost_micro"))
 
-  private val vocabMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, (String, String)), String]
+  private val vocabMemo = new ArtifactCache[String]
 
   /** Train-and-persist ONCE per (session, corpus content, sourceKey) —
-    * the [[GraphOps.symmetricEdgesShared]] artifact-memo contract, but
+    * an [[ArtifactCache]] like [[GraphOps.symmetricEdgesShared]], but
     * the memoized value is an ON-DISK path, not a cached relation: the
     * first caller trains and writes the parquet artifact, later callers
     * get the path and READ the frozen file (the production inference
-    * shape — the artifact outlives any session cache). The key folds in
-    * [[MemoFingerprint]] of the corpus relation, so a reused sourceKey
-    * over changed data re-trains instead of serving a stale
-    * vocabulary. */
+    * shape — the artifact outlives any session cache). Each artifact
+    * lives in its own temp directory, deleted when the JVM exits. The
+    * cache keys on the session that owns `corpus`; `spark` stays for
+    * source compatibility. */
   def vocabArtifactShared(
       spark: org.apache.spark.sql.SparkSession, sourceKey: String,
-      corpus: DataFrame)(train: => DataFrame): String = {
-    vocabMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) vocabMemo.remove(key)
-    }
-    val key = (spark, (MemoFingerprint.of(corpus), sourceKey))
-    vocabMemo.computeIfAbsent(key, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-unigram-vocab")
-        .resolve("vocab.parquet").toString
+      corpus: DataFrame)(train: => DataFrame): String =
+    vocabMemo(corpus, sourceKey) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-unigram-vocab")
+      sys.addShutdownHook {
+        val paths = java.nio.file.Files.walk(dir)
+        try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p =>
+          java.nio.file.Files.deleteIfExists(p))
+        finally paths.close()
+      }
+      val path = dir.resolve("vocab.parquet").toString
       writeVocab(train, path)
       path
-    })
-  }
+    }
 
   /** Fertility of a shard under a FROZEN persisted vocabulary — the
     * delta-scoring entry point (the q97/q184 persisted-screen shape):

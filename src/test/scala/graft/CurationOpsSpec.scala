@@ -111,12 +111,12 @@ class CurationOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     val base = run(None, nd = false)
     val baseNd = run(None, nd = true)
-    val hits0 = CurationOps.stageMemoHits.get()
+    val hits0 = CurationOps.stageMemo.hits
     // first shared call builds the stages; the second (the q96-after-q71
     // bench shape) is a memo HIT and must produce the identical report
     assert(run(Some(key), nd = false) == base)
     assert(run(Some(key), nd = true) == baseNd)
-    assert(CurationOps.stageMemoHits.get() >= hits0 + 1)
+    assert(CurationOps.stageMemo.hits >= hits0 + 1)
   }
 
   test("funnel stage memo: mutating the backing dir under a constant key recomputes") {

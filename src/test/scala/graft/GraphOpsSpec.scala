@@ -168,13 +168,13 @@ class GraphOpsSpec extends AnyFunSuite {
     def pairs = { builds += 1; Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b") }
     val fresh = GraphOps.symmetricEdges(pairs, "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hits0 = GraphOps.edgeMemoHits.get()
+    val hits0 = GraphOps.edgeMemo.hits
     val first = GraphOps.symmetricEdgesShared(spark, key, "a", "b")(pairs)
     val second = GraphOps.symmetricEdgesShared(spark, key, "a", "b")(pairs)
     assert(second eq first)
     // >=: the counter is global and other suites run in parallel (the
     // catalog queries share the interaction graph through this memo)
-    assert(GraphOps.edgeMemoHits.get() >= hits0 + 1)
+    assert(GraphOps.edgeMemo.hits >= hits0 + 1)
     // by-name pairs: every lookup constructs the plan ONCE to take its
     // content fingerprint (fresh build + first + second = 3), but a hit
     // skips the join/distinct EXECUTION — `second eq first` above

@@ -171,7 +171,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
     val key = "retrievalspec-shared-" + System.nanoTime() // unique per run
     val fresh = RetrievalOps.moreLikeThis(docs, "text", "doc_id",
       queryMod = 100, k = 10, maxQueryTerms = 30).collect().toSeq
-    val hits0 = RetrievalOps.mltMemoHits.get()
+    val hits0 = RetrievalOps.mltMemo.hits
     val first = RetrievalOps.moreLikeThisShared(docs, "text", "doc_id",
       queryMod = 100, k = 10, maxQueryTerms = 30, sourceKey = key)
     val second = RetrievalOps.moreLikeThisShared(docs, "text", "doc_id",
@@ -181,7 +181,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
     assert(second eq first)
     // >=: the counter is global and other suites run in parallel (the
     // catalog hybrids share their lexical side through this memo)
-    assert(RetrievalOps.mltMemoHits.get() >= hits0 + 1)
+    assert(RetrievalOps.mltMemo.hits >= hits0 + 1)
     assert(first.collect().toSeq == fresh)
     // a different parameterization never collides
     val other = RetrievalOps.moreLikeThisShared(docs, "text", "doc_id",

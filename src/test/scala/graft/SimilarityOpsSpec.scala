@@ -249,6 +249,13 @@ class SimilarityOpsSpec extends AnyFunSuite {
       dim = 4, m = 2, ksub = 2, iters = 2, queryMod = 5, k = 3).collect()
     val q5 = ann.filter(_.getLong(0) == 5L).sortBy(_.getLong(3)).map(_.getLong(1))
     assert(q5.take(2).toSet == Set(1L, 2L), s"ADC misranked: ${q5.mkString(",")}")
+    // a repeated search reads the memoized codebooks + codes and must
+    // return exactly what the training call did
+    val hits0 = SimilarityOps.pqMemo.hits
+    val again = SimilarityOps.pqAnn(df, "vec_id", "embedding",
+      dim = 4, m = 2, ksub = 2, iters = 2, queryMod = 5, k = 3).collect()
+    assert(SimilarityOps.pqMemo.hits >= hits0 + 1, "pqAnn must reuse the trained index")
+    assert(again.toSeq == ann.toSeq, "memo hit diverged from the training call")
   }
 
   test("ivf-pq: residual ADC ranks the true cluster first; refine equals brute force on the shortlist") {
@@ -265,6 +272,15 @@ class SimilarityOpsSpec extends AnyFunSuite {
     val ann = SimilarityOps.ivfPqAnn(df, "vec_id", "embedding",
       dim = 4, coarseMod = 30, m = 2, ksub = 4, iters = 2,
       queryMod = 16, k = 3, nprobe = 1).collect()
+    // a repeated search reads the memoized id-residue index and must
+    // return exactly what the training call did
+    val hits0 = SimilarityOps.idResidueIndexMemo.hits
+    val again = SimilarityOps.ivfPqAnn(df, "vec_id", "embedding",
+      dim = 4, coarseMod = 30, m = 2, ksub = 4, iters = 2,
+      queryMod = 16, k = 3, nprobe = 1).collect()
+    assert(SimilarityOps.idResidueIndexMemo.hits >= hits0 + 1,
+      "ivfPqAnn must reuse the trained index")
+    assert(again.toSeq == ann.toSeq, "memo hit diverged from the training call")
     // queries 0 and 16 are even = cluster A; with nprobe=1 every reported
     // neighbor must come from the probed (same) cell = even ids only
     assert(ann.nonEmpty)
@@ -356,11 +372,11 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // cosine equals brute force's, and per-query order is cosine desc.
     // nprobe/queryMod are SEARCH params, not training params, so this
     // call must reuse the trained-index memo the ADC call above built
-    val hits0 = SimilarityOps.pqIndexMemoHits.get()
+    val hits0 = SimilarityOps.kmeansIndexMemo.hits
     val refined = SimilarityOps.ivfPqKmeansRerankAnn(df, "vec_id", "embedding",
       dim = 4, kCoarse = 2, kmIters = 2, m = 2, ksub = 4, iters = 2,
       queryMod = 16, k = 3, nprobe = 2, rerank = 6).collect()
-    assert(SimilarityOps.pqIndexMemoHits.get() >= hits0 + 1,
+    assert(SimilarityOps.kmeansIndexMemo.hits >= hits0 + 1,
       "rerank must reuse the session-memoized trained index")
     val bf = SimilarityOps.annBruteForce(df, "vec_id", "embedding",
         queryMod = 16, k = 31)
