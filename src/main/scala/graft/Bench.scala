@@ -220,7 +220,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "BENCH_SUMMARY.json")
     val nPasses = 3
     val nExtra = 2
@@ -242,7 +241,7 @@ object Bench {
           parseNumObject(txt, "canary"))
       }
     }
-    val spark = GraftSession.local(cores = cpus, appName = "graft-bench")
+    val spark = GraftSession.local(appName = "graft-bench")
     // Materialize through the `noop` sink, NOT `.count()`: count() lets
     // Catalyst prune every payload column (a simhash/fingerprint query would
     // be benched without computing its kernel); noop forces full row

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   def local(
-      cores: Int = 32,
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       appName: String = "graft",
       extraConfigs: Map[String, String] = Map.empty): SparkSession = {
     val base = SparkSession

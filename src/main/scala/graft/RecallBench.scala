@@ -201,8 +201,7 @@ object RecallBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "RECALL.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cores = cpus, appName = "graft-recall")
+    val spark = GraftSession.local(appName = "graft-recall")
     val out = render(dir, compute(spark, dir))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), out)
     print(out)

@@ -151,11 +151,10 @@ object ScaleBench {
     val dirs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIRS",
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = GraftSession.local(cores = cpus, appName = "graft-scalebench")
+    val spark = GraftSession.local(appName = "graft-scalebench")
 
     val points = runScale(spark, dirs, names)
     // rows were already counted once per dir inside runScale and ride in

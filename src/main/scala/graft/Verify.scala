@@ -14,8 +14,7 @@ object Verify {
     // optional trailing args: run only the named queries (local iteration;
     // the driver always runs the full catalog)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cores = cpus, appName = "graft-verify")
+    val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // a failing query is recorded and the rest still run (every query
     // that does run is dumped); fatal errors propagate

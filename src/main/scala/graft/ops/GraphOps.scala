@@ -43,7 +43,10 @@ object GraphOps {
     * graph family's PERSISTED ARTIFACT (the q97/q105 pattern): derive it
     * once from the expensive upstream joins, [[writeEdges]] it, and every
     * analysis run starts from [[readEdges]] instead of re-joining the
-    * fact tables. Write→reload bit-identity is spec-pinned. */
+    * fact tables. Write→reload bit-identity is spec-pinned. The
+    * `*FromEdges` entry points use their input as given (a parquet read,
+    * or a materialized relation such as [[symmetricEdgesShared]]'s); the
+    * pair-relation wrappers checkpoint the edges they derive. */
   def symmetricEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
     pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -124,13 +127,14 @@ object GraphOps {
   def pageRankSymmetric(pairs: DataFrame, aCol: String, bCol: String,
       iters: Int, scale: Long = 1000000L,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame =
-    pageRankFromEdges(symmetricEdges(pairs, aCol, bCol), iters, scale, dampNum, dampDen)
+    pageRankFromEdges(symmetricEdges(pairs, aCol, bCol).localCheckpoint(),
+      iters, scale, dampNum, dampDen)
 
   /** [[pageRankSymmetric]] from an already-canonical [[symmetricEdges]]
     * relation — the persisted-artifact entry point: a run that starts
     * from [[readEdges]] skips the fact-table joins and the union/distinct
     * entirely. */
-  def pageRankFromEdges(edgesIn: DataFrame,
+  def pageRankFromEdges(edges: DataFrame,
       iters: Int, scale: Long = 1000000L,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     require(iters >= 1, s"bad iters: $iters")
@@ -138,10 +142,9 @@ object GraphOps {
       s"damping must be a fraction in [0,1]: $dampNum/$dampDen")
     val base = scale * (dampDen - dampNum) / dampDen
 
-    // checkpoint the static relations once: edges feed deg + eout, deg
-    // feeds eout + the rank init + the final join — without the
-    // checkpoints each consumer would re-run the upstream derivation
-    val edges = edgesIn.localCheckpoint()
+    // checkpoint the static relations once: deg feeds eout + the rank
+    // init + the final join — without the checkpoints each consumer
+    // would re-run the upstream derivation
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .localCheckpoint()
     val eout = edges.join(deg, "src").localCheckpoint()
@@ -203,14 +206,14 @@ object GraphOps {
     * shape). Integer degrees only — nothing to diverge by a ulp. */
   def kCore(pairs: DataFrame, aCol: String, bCol: String,
       k: Int, rounds: Int): DataFrame =
-    kCoreFromEdges(symmetricEdges(pairs, aCol, bCol), k, rounds)
+    kCoreFromEdges(symmetricEdges(pairs, aCol, bCol).localCheckpoint(), k, rounds)
 
   /** [[kCore]] from an already-canonical [[symmetricEdges]] relation —
     * the persisted-artifact entry point. */
   def kCoreFromEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"bad k: $k")
     require(rounds >= 1, s"bad rounds: $rounds")
-    var e = edges.localCheckpoint()
+    var e = edges
     // one-time node count gates the per-round broadcast of the survivor
     // set (see [[BroadcastNodeLimit]]); survivors only shrink, so the
     // initial count is a sound bound for every round
@@ -264,13 +267,12 @@ object GraphOps {
     * once. Returns (node, label) ordered by node. */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
       rounds: Int): DataFrame =
-    labelPropagationFromEdges(symmetricEdges(pairs, aCol, bCol), rounds)
+    labelPropagationFromEdges(symmetricEdges(pairs, aCol, bCol).localCheckpoint(), rounds)
 
   /** [[labelPropagation]] from an already-canonical [[symmetricEdges]]
     * relation — the persisted-artifact entry point. */
-  def labelPropagationFromEdges(edgesIn: DataFrame, rounds: Int): DataFrame = {
+  def labelPropagationFromEdges(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"bad rounds: $rounds")
-    val edges = edgesIn.localCheckpoint()
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint()

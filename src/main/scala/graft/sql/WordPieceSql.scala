@@ -19,8 +19,7 @@ package graft.sql
   * boundary applyMergeWp's explicit length check encodes.
   *
   * Non-recursive CTEs are MATERIALIZED (the unigram finding: geometric
-  * subtree re-execution otherwise). `tools/wp_proto.py` is the
-  * development mirror of this generator — keep in sync. */
+  * subtree re-execution otherwise). */
 object WordPieceSql {
 
   private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Column <-> Catalyst Expression bridge for graft's custom expressions.
+/** Shim to Spark-private API: Column <-> Expression conversion, listener bus.
   *
   * Spark 4 made the converters (`classic.ExpressionUtils`) `private[sql]`;
   * the supported way for a library to register custom Catalyst nodes from
@@ -22,4 +22,8 @@ object GraftSqlBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(id, info, builder)
+
+  /** Waits until every posted listener event is delivered (the bus is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
