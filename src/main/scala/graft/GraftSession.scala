@@ -59,6 +59,12 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowExec warns "No Partition Defined" on every global window; the
+    // engine's four are over bounded-domain relations (PlanSpec pins that
+    // bound), so the warning carries no signal
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     // graft SQL functions + the literal-rlike optimizer rule are part of
     // the engine's standard surface (idempotent registration)
     graft.sql.GraftFunctions.register(spark)

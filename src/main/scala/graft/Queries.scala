@@ -1120,10 +1120,7 @@ GROUP BY segment ORDER BY segment""")),
       // closed form — lossless PNG makes decode-vs-formula exact.
       (s: SparkSession, dir: String) =>
         MultimodalOps.imageDecodeStats(
-          MultimodalOps.imageCorpus(s, Tables.documents(s, dir)))
-          // pinned before the total sort — the range sort's bounds
-          // sampling would run the decode chain twice (q94's fix)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.imageCorpus(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.imageDecodeStats("documents"))),
 
     ("q135_image_ahash",
@@ -1134,10 +1131,7 @@ GROUP BY segment ORDER BY segment""")),
       // generator formula — one flipped pixel anywhere flips bits.
       (s: SparkSession, dir: String) =>
         MultimodalOps.imageAHash(
-          MultimodalOps.imageCorpus(s, Tables.documents(s, dir)))
-          // pinned before the total sort — the range sort's bounds
-          // sampling would run the decode chain twice (q94's fix)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.imageCorpus(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.imageAHash("documents"))),
 
     ("q136_image_ahash_pairs",
@@ -1662,9 +1656,7 @@ GROUP BY segment ORDER BY segment""")),
       // generator's closed form.
       (s: SparkSession, dir: String) =>
         MultimodalOps.compressedAudioHeaderStats(
-          MultimodalOps.compressedAudioCorpus(s, Tables.documents(s, dir)))
-          // pinned before the total sort (the q94 convention)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.compressedAudioCorpus(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.compressedAudioHeaderStats("documents"))),
 
     ("q186_audio_catalog_summary",
@@ -1715,9 +1707,7 @@ GROUP BY segment ORDER BY segment""")),
       // perceptual codecs only.
       (s: SparkSession, dir: String) =>
         MultimodalOps.adpcmDecodeStats(
-          MultimodalOps.adpcmCorpus(s, Tables.documents(s, dir)))
-          // pinned before the total sort (the q94 convention)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.adpcmCorpus(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.adpcmDecodeStats("documents"))),
 
     ("q190_video_pframe_decode",
@@ -1731,9 +1721,7 @@ GROUP BY segment ORDER BY segment""")),
       // generator formulas in closed form (the q95 contract).
       (s: SparkSession, dir: String) =>
         MultimodalOps.videoDeltaDecodeStats(
-          MultimodalOps.videoCorpusDelta(s, Tables.documents(s, dir)))
-          // pinned before the total sort (the q94 convention)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.videoCorpusDelta(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.videoDeltaDecodeStats("documents"))),
 
     ("q191_unigram_frozen_vocab",
@@ -1822,13 +1810,9 @@ GROUP BY segment ORDER BY segment""")),
       // decoded back with JDK AudioSystem; sample/rate/amplitude stats
       // come off the decoded stream. Lossless PCM makes decode-vs-formula
       // exact, so the oracle recomputes the generator in closed form.
-      // stats pinned before the total sort: the range sort SAMPLES its
-      // child for partition bounds, which would run the whole
-      // synth->encode->decode chain twice; the checkpoint is 6 longs/row
       (s: SparkSession, dir: String) =>
         MultimodalOps.audioDecodeStats(
-          MultimodalOps.audioCorpus(s, Tables.documents(s, dir)))
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.audioCorpus(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.audioDecodeStats("documents"))),
 
     ("q95_video_decode_stats",
@@ -1840,10 +1824,7 @@ GROUP BY segment ORDER BY segment""")),
       // formula in closed form, same contract as q92/q94.
       (s: SparkSession, dir: String) =>
         MultimodalOps.videoDecodeStats(
-          MultimodalOps.videoCorpus(s, Tables.documents(s, dir)))
-          // pinned before the total sort — the range sort's bounds
-          // sampling would run the decode chain twice (q94's fix)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.videoCorpus(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.videoDecodeStats("documents"))),
 
     ("q127_video_mjpeg_decode",
@@ -1855,10 +1836,7 @@ GROUP BY segment ORDER BY segment""")),
       // now OFF the compressed-codec stub list entirely.
       (s: SparkSession, dir: String) =>
         MultimodalOps.videoDecodeStats(
-          MultimodalOps.videoCorpusMjpeg(s, Tables.documents(s, dir)))
-          // pinned before the total sort — the range sort's bounds
-          // sampling would run the decode chain twice (q94's fix)
-          .localCheckpoint().orderBy("doc_id"),
+          MultimodalOps.videoCorpusMjpeg(s, Tables.documents(s, dir))),
       Some(graft.sql.MultimodalSql.videoDecodeStatsMjpeg("documents"))),
 
     ("q100_inverted_index",

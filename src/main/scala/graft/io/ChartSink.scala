@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** S5 chart sink — the reference's matplotlib PNG reports
   * (`/root/reference/main.py:570-787`: horizontal bar charts for industry
@@ -172,18 +173,33 @@ $texts
   /** First `maxRows` of an already-ordered 2-column report as (label, value)
     * pairs; the bounded collect is the sink's contract (see class doc). */
   private def reportRows(df: DataFrame, labelCol: String, valueCol: String,
-      maxRows: Int): Seq[(String, Double)] = {
-    import org.apache.spark.sql.functions.col
-    df.select(col(labelCol).cast("string"), col(valueCol).cast("double"))
+      maxRows: Int): Seq[(String, Double)] =
+    bars(df.select(col(labelCol).cast("string"), col(valueCol).cast("double"))
       .limit(maxRows)
-      .collect()
-      .map(r => (Option(r.getString(0)).getOrElse(""), r.getDouble(1)))
-      .toSeq
-  }
+      .collect())
+
+  /** (label, value) from rows whose first two columns are the label as a
+    * string and the value as a double. */
+  private def bars(rows: Array[Row]): Seq[(String, Double)] =
+    rows.map(r => (Option(r.getString(0)).getOrElse(""), r.getDouble(1))).toSeq
 
   def writeBarChart(df: DataFrame, labelCol: String, valueCol: String,
       title: String, path: String, maxRows: Int = 50): Unit =
     writeSvg(path, barChartSvg(reportRows(df, labelCol, valueCol, maxRows), title))
+
+  /** One bar chart per distinct `groupCol` value, in sorted group order,
+    * each of its group's first `maxRows` rows — all from ONE collect of
+    * `df`, a per-group top-K report (groups × K rows) already ordered
+    * within each group. */
+  def writeBarChartPerGroup(df: DataFrame, groupCol: String, labelCol: String,
+      valueCol: String, title: String => String, path: String => String,
+      maxRows: Int = 50): Unit =
+    df.select(col(labelCol).cast("string"), col(valueCol).cast("double"), col(groupCol))
+      .collect()
+      .groupBy(_.getString(2)).toSeq.sortBy(_._1)
+      .foreach { case (g, rows) =>
+        writeSvg(path(g), barChartSvg(bars(rows.take(maxRows)), title(g)))
+      }
 
   def writeLineChart(df: DataFrame, labelCol: String, valueCol: String,
       title: String, path: String, maxRows: Int = 500): Unit =

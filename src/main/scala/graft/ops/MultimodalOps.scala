@@ -8,6 +8,8 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Riff.{le16, le32}
+
 /** Multimodal column plumbing (SURVEY.md §2.10): image/audio/video content
   * travels as opaque `binary` columns with a typed metadata struct; heavy
   * per-item work (decode, feature extraction, resize, frame sampling) runs
@@ -30,8 +32,9 @@ import org.apache.spark.sql.functions._
   * VIDEO decode is REAL for uncompressed RIFF/AVI: the JDK ships no video
   * *codec*, but an uncompressed AVI is just a RIFF container (WAV's
   * sibling) with `avih`/`strh`/`strf` headers and raw `00db` DIB frames —
-  * [[encodeAvi]]/[[decodeAvi]] build and parse that container by hand in
-  * pure JDK (no new dependencies), so [[videoDecodeStats]] reports frame
+  * [[encodeAvi]]/[[decodeAvi]] build and parse that container in pure
+  * JDK through the [[Riff]] chunk writer and reader, which also frame the
+  * ADPCM WAVs (no new dependencies), so [[videoDecodeStats]] reports frame
   * count/dims/fps/channel sums off genuinely decoded rasters and
   * [[sampleVideoFrames]] emits REAL decoded frames re-encoded as PNG.
   * For COMPRESSED audio the WAVEFORM decode is real too where the format
@@ -207,7 +210,7 @@ object MultimodalOps {
   // The JDK has no video codec, but an *uncompressed* AVI needs none: it is
   // a RIFF container (same framing as WAV) whose `movi` list carries raw
   // 24-bit DIB rasters in `00db` chunks. Both directions are implemented
-  // by hand here — little-endian chunk framing, avih/strh/strf headers,
+  // by hand here — chunk framing through [[Riff]], avih/strh/strf headers,
   // bottom-up BGR rows padded to 4 bytes — so the decode path is a genuine
   // container parse, not a simulation.
 
@@ -215,13 +218,95 @@ object MultimodalOps {
     * as row-major packed 0xRRGGBB ints (top-down scan order). */
   final case class DecodedVideo(width: Int, height: Int, fps: Int, frames: Array[Array[Int]])
 
-  private def putFourcc(buf: java.nio.ByteBuffer, s: String): Unit = {
-    var i = 0
-    while (i < 4) { buf.put(s.charAt(i).toByte); i += 1 }
-  }
-
   /** DIB rows are padded to 4-byte boundaries. */
   private def dibRowBytes(width: Int): Int = ((width * 3 + 3) / 4) * 4
+
+  private def requireVideo(width: Int, height: Int, fps: Int, frames: Seq[Array[Int]]): Unit = {
+    require(width >= 1 && height >= 1 && fps >= 1, s"bad video shape ${width}x$height@$fps")
+    require(frames.nonEmpty, "video needs at least one frame")
+    frames.foreach(f => require(f.length == width * height, "frame/dims mismatch"))
+  }
+
+  /** One-stream AVI: RIFF + hdrl[avih, strl[strh, strf]] + movi[one
+    * chunk per frame], no idx1 index. The codecs differ only in the strh
+    * `handler`, the strf biCompression and `maxChunk`, the largest frame
+    * chunk, which the headers declare as suggested buffer size, bytes per
+    * second (× fps) and biSizeImage. */
+  private def buildAvi(width: Int, height: Int, fps: Int, handler: String,
+      compression: Int, maxChunk: Int, movi: Seq[Riff.Leaf]): Array[Byte] = {
+    val nf = movi.length
+    val avih = Riff.Leaf("avih", 56) { buf =>
+      buf.putInt(1000000 / fps)      // dwMicroSecPerFrame
+      buf.putInt(maxChunk * fps)     // dwMaxBytesPerSec
+      buf.putInt(0)                  // dwPaddingGranularity
+      buf.putInt(0)                  // dwFlags (no idx1 index written)
+      buf.putInt(nf)                 // dwTotalFrames
+      buf.putInt(0)                  // dwInitialFrames
+      buf.putInt(1)                  // dwStreams
+      buf.putInt(maxChunk)           // dwSuggestedBufferSize
+      buf.putInt(width); buf.putInt(height)
+      buf.putInt(0); buf.putInt(0); buf.putInt(0); buf.putInt(0) // dwReserved[4]
+    }
+    val strh = Riff.Leaf("strh", 56) { buf =>
+      buf.putInt(Riff.fourcc("vids")); buf.putInt(Riff.fourcc(handler))
+      buf.putInt(0)                  // dwFlags
+      buf.putShort(0); buf.putShort(0) // wPriority, wLanguage
+      buf.putInt(0)                  // dwInitialFrames
+      buf.putInt(1)                  // dwScale
+      buf.putInt(fps)                // dwRate (fps = rate/scale)
+      buf.putInt(0)                  // dwStart
+      buf.putInt(nf)                 // dwLength (in frames)
+      buf.putInt(maxChunk)           // dwSuggestedBufferSize
+      buf.putInt(0)                  // dwQuality
+      buf.putInt(0)                  // dwSampleSize (0 = variable/frame-based)
+      buf.putShort(0); buf.putShort(0) // rcFrame left, top
+      buf.putShort(width.toShort); buf.putShort(height.toShort) // rcFrame right, bottom
+    }
+    val strf = Riff.Leaf("strf", 40) { buf =>
+      buf.putInt(40)                 // biSize
+      buf.putInt(width); buf.putInt(height)
+      buf.putShort(1)                // biPlanes
+      buf.putShort(24)               // biBitCount
+      buf.putInt(compression)        // biCompression
+      buf.putInt(maxChunk)           // biSizeImage
+      buf.putInt(0); buf.putInt(0)   // biXPelsPerMeter, biYPelsPerMeter
+      buf.putInt(0); buf.putInt(0)   // biClrUsed, biClrImportant
+    }
+    Riff.write("AVI ", Seq(
+      Riff.ListOf("hdrl", Seq(avih, Riff.ListOf("strl", Seq(strh, strf)))),
+      Riff.ListOf("movi", movi)))
+  }
+
+  /** One DIB chunk per frame: frame f is a `00db` keyframe when `isKey(f)`,
+    * else a `00dc` chunk of per-channel mod-256 deltas against frame f-1.
+    * A keyframe is the delta against black, so both store bottom-up BGR
+    * rows padded to 4 bytes (pad bytes zero). */
+  private def dibChunks(width: Int, height: Int, frames: Seq[Array[Int]],
+      isKey: Int => Boolean): Seq[Riff.Leaf] = {
+    val rowBytes = dibRowBytes(width)
+    frames.indices.map { fi =>
+      val key = isKey(fi)
+      val frame = frames(fi)
+      val prev = if (key) null else frames(fi - 1)
+      Riff.Leaf(if (key) "00db" else "00dc", rowBytes * height) { buf =>
+        var row = height - 1       // DIB: bottom row first
+        while (row >= 0) {
+          var x = 0
+          while (x < width) {
+            val p = frame(row * width + x)
+            val q = if (key) 0 else prev(row * width + x)
+            buf.put(((p - q) & 0xff).toByte)                 // B
+            buf.put((((p >> 8) - (q >> 8)) & 0xff).toByte)   // G
+            buf.put((((p >> 16) - (q >> 16)) & 0xff).toByte) // R
+            x += 1
+          }
+          var pad = rowBytes - width * 3
+          while (pad > 0) { buf.put(0.toByte); pad -= 1 }
+          row -= 1
+        }
+      }
+    }
+  }
 
   /** Build an uncompressed AVI (RIFF + hdrl[avih, strl[strh,strf]] +
     * movi[00db…]) around raw 24-bit frames. Frames are row-major packed
@@ -231,74 +316,9 @@ object MultimodalOps {
     * byte-for-byte: same input, same container. */
   private[graft] def encodeAvi(
       width: Int, height: Int, fps: Int, frames: Seq[Array[Int]]): Array[Byte] = {
-    require(width >= 1 && height >= 1 && fps >= 1, s"bad video shape ${width}x$height@$fps")
-    require(frames.nonEmpty, "video needs at least one frame")
-    frames.foreach(f => require(f.length == width * height, "frame/dims mismatch"))
-    val rowBytes = dibRowBytes(width)
-    val frameBytes = rowBytes * height
-    val nf = frames.length
-    val strlSize = 4 + (8 + 56) + (8 + 40)              // 'strl' + strh + strf
-    val hdrlSize = 4 + (8 + 56) + (8 + strlSize)        // 'hdrl' + avih + LIST strl
-    val moviSize = 4 + nf * (8 + frameBytes)            // 'movi' + 00db chunks
-    val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)  // 'AVI ' + both LISTs
-    val buf = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    putFourcc(buf, "RIFF"); buf.putInt(riffSize); putFourcc(buf, "AVI ")
-    putFourcc(buf, "LIST"); buf.putInt(hdrlSize); putFourcc(buf, "hdrl")
-    putFourcc(buf, "avih"); buf.putInt(56)
-    buf.putInt(1000000 / fps)      // dwMicroSecPerFrame
-    buf.putInt(frameBytes * fps)   // dwMaxBytesPerSec
-    buf.putInt(0)                  // dwPaddingGranularity
-    buf.putInt(0)                  // dwFlags (no idx1 index written)
-    buf.putInt(nf)                 // dwTotalFrames
-    buf.putInt(0)                  // dwInitialFrames
-    buf.putInt(1)                  // dwStreams
-    buf.putInt(frameBytes)         // dwSuggestedBufferSize
-    buf.putInt(width); buf.putInt(height)
-    buf.putInt(0); buf.putInt(0); buf.putInt(0); buf.putInt(0) // dwReserved[4]
-    putFourcc(buf, "LIST"); buf.putInt(strlSize); putFourcc(buf, "strl")
-    putFourcc(buf, "strh"); buf.putInt(56)
-    putFourcc(buf, "vids"); putFourcc(buf, "DIB ")
-    buf.putInt(0)                  // dwFlags
-    buf.putShort(0); buf.putShort(0) // wPriority, wLanguage
-    buf.putInt(0)                  // dwInitialFrames
-    buf.putInt(1)                  // dwScale
-    buf.putInt(fps)                // dwRate (fps = rate/scale)
-    buf.putInt(0)                  // dwStart
-    buf.putInt(nf)                 // dwLength (in frames)
-    buf.putInt(frameBytes)         // dwSuggestedBufferSize
-    buf.putInt(0)                  // dwQuality
-    buf.putInt(0)                  // dwSampleSize (0 = variable/frame-based)
-    buf.putShort(0); buf.putShort(0) // rcFrame left, top
-    buf.putShort(width.toShort); buf.putShort(height.toShort) // rcFrame right, bottom
-    putFourcc(buf, "strf"); buf.putInt(40)
-    buf.putInt(40)                 // biSize
-    buf.putInt(width); buf.putInt(height)
-    buf.putShort(1)                // biPlanes
-    buf.putShort(24)               // biBitCount
-    buf.putInt(0)                  // biCompression = BI_RGB (uncompressed)
-    buf.putInt(frameBytes)         // biSizeImage
-    buf.putInt(0); buf.putInt(0)   // biXPelsPerMeter, biYPelsPerMeter
-    buf.putInt(0); buf.putInt(0)   // biClrUsed, biClrImportant
-    putFourcc(buf, "LIST"); buf.putInt(moviSize); putFourcc(buf, "movi")
-    frames.foreach { frame =>
-      putFourcc(buf, "00db"); buf.putInt(frameBytes)
-      var row = height - 1       // DIB: bottom row first
-      while (row >= 0) {
-        var x = 0
-        while (x < width) {
-          val p = frame(row * width + x)
-          buf.put((p & 0xff).toByte)           // B
-          buf.put(((p >> 8) & 0xff).toByte)    // G
-          buf.put(((p >> 16) & 0xff).toByte)   // R
-          x += 1
-        }
-        var pad = rowBytes - width * 3
-        while (pad > 0) { buf.put(0.toByte); pad -= 1 }
-        row -= 1
-      }
-    }
-    buf.array()
+    requireVideo(width, height, fps, frames)
+    buildAvi(width, height, fps, "DIB ", 0, dibRowBytes(width) * height,
+      dibChunks(width, height, frames, _ => true))
   }
 
   /** JPEG-encode a raster at quality 1.0 — the per-frame codec of the
@@ -335,10 +355,9 @@ object MultimodalOps {
   }
 
   /** 'MJPG' as the little-endian BITMAPINFOHEADER biCompression value. */
-  private[graft] val MjpgFourcc: Int =
-    'M'.toInt | ('J'.toInt << 8) | ('P'.toInt << 16) | ('G'.toInt << 24)
+  private[graft] val MjpgFourcc: Int = Riff.fourcc("MJPG")
 
-  /** Build a MOTION-JPEG AVI: the same RIFF framing as [[encodeAvi]] but
+  /** Build a MOTION-JPEG AVI: the [[Riff]] framing of [[encodeAvi]] but
     * every frame is an actual JPEG (quality 1.0) in a variable-size
     * `00dc` chunk, strh/strf declare the MJPG codec, and odd-sized
     * chunks get the RIFF word-alignment pad byte. This is the one
@@ -347,80 +366,28 @@ object MultimodalOps {
     * compressed-codec stub list entirely. */
   private[graft] def encodeAviMjpeg(
       width: Int, height: Int, fps: Int, frames: Seq[Array[Int]]): Array[Byte] = {
-    require(width >= 1 && height >= 1 && fps >= 1, s"bad video shape ${width}x$height@$fps")
-    require(frames.nonEmpty, "video needs at least one frame")
-    frames.foreach(f => require(f.length == width * height, "frame/dims mismatch"))
+    requireVideo(width, height, fps, frames)
     val jpegs = frames.map { frame =>
       val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
       var i = 0
       while (i < frame.length) { img.setRGB(i % width, i / width, frame(i)); i += 1 }
       encodeJpeg(img)
     }
-    val nf = jpegs.length
-    val maxFrame = jpegs.map(_.length).max
-    val strlSize = 4 + (8 + 56) + (8 + 40)
-    val hdrlSize = 4 + (8 + 56) + (8 + strlSize)
-    val moviSize = 4 + jpegs.map(j => 8 + j.length + (j.length & 1)).sum
-    val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
-    val buf = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    putFourcc(buf, "RIFF"); buf.putInt(riffSize); putFourcc(buf, "AVI ")
-    putFourcc(buf, "LIST"); buf.putInt(hdrlSize); putFourcc(buf, "hdrl")
-    putFourcc(buf, "avih"); buf.putInt(56)
-    buf.putInt(1000000 / fps)
-    buf.putInt(maxFrame * fps)
-    buf.putInt(0); buf.putInt(0)
-    buf.putInt(nf)
-    buf.putInt(0)
-    buf.putInt(1)
-    buf.putInt(maxFrame)
-    buf.putInt(width); buf.putInt(height)
-    buf.putInt(0); buf.putInt(0); buf.putInt(0); buf.putInt(0)
-    putFourcc(buf, "LIST"); buf.putInt(strlSize); putFourcc(buf, "strl")
-    putFourcc(buf, "strh"); buf.putInt(56)
-    putFourcc(buf, "vids"); putFourcc(buf, "MJPG")
-    buf.putInt(0)
-    buf.putShort(0); buf.putShort(0)
-    buf.putInt(0)
-    buf.putInt(1)
-    buf.putInt(fps)
-    buf.putInt(0)
-    buf.putInt(nf)
-    buf.putInt(maxFrame)
-    buf.putInt(0)
-    buf.putInt(0)
-    buf.putShort(0); buf.putShort(0)
-    buf.putShort(width.toShort); buf.putShort(height.toShort)
-    putFourcc(buf, "strf"); buf.putInt(40)
-    buf.putInt(40)
-    buf.putInt(width); buf.putInt(height)
-    buf.putShort(1)
-    buf.putShort(24)
-    putFourcc(buf, "MJPG")             // biCompression = MJPG
-    buf.putInt(maxFrame)               // biSizeImage (informational for MJPG)
-    buf.putInt(0); buf.putInt(0)
-    buf.putInt(0); buf.putInt(0)
-    putFourcc(buf, "LIST"); buf.putInt(moviSize); putFourcc(buf, "movi")
-    jpegs.foreach { j =>
-      putFourcc(buf, "00dc"); buf.putInt(j.length)
-      buf.put(j)
-      if ((j.length & 1) == 1) buf.put(0.toByte) // RIFF word alignment
-    }
-    buf.array()
+    buildAvi(width, height, fps, "MJPG", MjpgFourcc, jpegs.map(_.length).max,
+      jpegs.map(j => Riff.Leaf("00dc", j.length)(_.put(j))))
   }
 
   /** 'DLT8' as the little-endian BITMAPINFOHEADER biCompression value —
     * the temporal-delta inter-frame codec (keyframe + per-channel mod-256
     * pixel deltas). */
-  private[graft] val Dlt8Fourcc: Int =
-    'D'.toInt | ('L'.toInt << 8) | ('T'.toInt << 16) | ('8'.toInt << 24)
+  private[graft] val Dlt8Fourcc: Int = Riff.fourcc("DLT8")
 
   /** Keyframe interval of the synthetic delta corpus: frame f is a
     * keyframe iff f % 3 == 0. */
   private[graft] val DeltaKeyInt = 3
 
   /** Build a TEMPORAL-DELTA (inter-frame) AVI — the r12 verdict's ask:
-    * the same RIFF framing as [[encodeAvi]], strf declaring the DLT8
+    * the [[Riff]] framing of [[encodeAvi]], strf declaring the DLT8
     * codec, keyframes (every `keyInt`-th frame) as full bottom-up BGR
     * DIBs in `00db` chunks and every other frame as a `00dc` P-frame
     * whose bytes are the PER-CHANNEL MOD-256 DELTAS vs the previous
@@ -434,86 +401,10 @@ object MultimodalOps {
   private[graft] def encodeAviDelta(
       width: Int, height: Int, fps: Int, frames: Seq[Array[Int]],
       keyInt: Int = DeltaKeyInt): Array[Byte] = {
-    require(width >= 1 && height >= 1 && fps >= 1, s"bad video shape ${width}x$height@$fps")
-    require(frames.nonEmpty, "video needs at least one frame")
+    requireVideo(width, height, fps, frames)
     require(keyInt >= 1, s"bad keyframe interval: $keyInt")
-    frames.foreach(f => require(f.length == width * height, "frame/dims mismatch"))
-    val rowBytes = dibRowBytes(width)
-    val frameBytes = rowBytes * height
-    val nf = frames.length
-    val strlSize = 4 + (8 + 56) + (8 + 40)
-    val hdrlSize = 4 + (8 + 56) + (8 + strlSize)
-    val moviSize = 4 + nf * (8 + frameBytes)
-    val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
-    val buf = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    putFourcc(buf, "RIFF"); buf.putInt(riffSize); putFourcc(buf, "AVI ")
-    putFourcc(buf, "LIST"); buf.putInt(hdrlSize); putFourcc(buf, "hdrl")
-    putFourcc(buf, "avih"); buf.putInt(56)
-    buf.putInt(1000000 / fps)
-    buf.putInt(frameBytes * fps)
-    buf.putInt(0); buf.putInt(0)
-    buf.putInt(nf)
-    buf.putInt(0)
-    buf.putInt(1)
-    buf.putInt(frameBytes)
-    buf.putInt(width); buf.putInt(height)
-    buf.putInt(0); buf.putInt(0); buf.putInt(0); buf.putInt(0)
-    putFourcc(buf, "LIST"); buf.putInt(strlSize); putFourcc(buf, "strl")
-    putFourcc(buf, "strh"); buf.putInt(56)
-    putFourcc(buf, "vids"); putFourcc(buf, "DLT8")
-    buf.putInt(0)
-    buf.putShort(0); buf.putShort(0)
-    buf.putInt(0)
-    buf.putInt(1)
-    buf.putInt(fps)
-    buf.putInt(0)
-    buf.putInt(nf)
-    buf.putInt(frameBytes)
-    buf.putInt(0)
-    buf.putInt(0)
-    buf.putShort(0); buf.putShort(0)
-    buf.putShort(width.toShort); buf.putShort(height.toShort)
-    putFourcc(buf, "strf"); buf.putInt(40)
-    buf.putInt(40)
-    buf.putInt(width); buf.putInt(height)
-    buf.putShort(1)
-    buf.putShort(24)
-    putFourcc(buf, "DLT8")             // biCompression = DLT8
-    buf.putInt(frameBytes)
-    buf.putInt(0); buf.putInt(0)
-    buf.putInt(0); buf.putInt(0)
-    putFourcc(buf, "LIST"); buf.putInt(moviSize); putFourcc(buf, "movi")
-    var fi = 0
-    while (fi < nf) {
-      val key = fi % keyInt == 0
-      putFourcc(buf, if (key) "00db" else "00dc"); buf.putInt(frameBytes)
-      val frame = frames(fi)
-      val prev = if (key) null else frames(fi - 1)
-      var row = height - 1       // DIB: bottom row first
-      while (row >= 0) {
-        var x = 0
-        while (x < width) {
-          val p = frame(row * width + x)
-          if (key) {
-            buf.put((p & 0xff).toByte)           // B
-            buf.put(((p >> 8) & 0xff).toByte)    // G
-            buf.put(((p >> 16) & 0xff).toByte)   // R
-          } else {
-            val q = prev(row * width + x)
-            buf.put((((p & 0xff) - (q & 0xff)) & 0xff).toByte)
-            buf.put(((((p >> 8) & 0xff) - ((q >> 8) & 0xff)) & 0xff).toByte)
-            buf.put(((((p >> 16) & 0xff) - ((q >> 16) & 0xff)) & 0xff).toByte)
-          }
-          x += 1
-        }
-        var pad = rowBytes - width * 3
-        while (pad > 0) { buf.put(0.toByte); pad -= 1 }
-        row -= 1
-      }
-      fi += 1
-    }
-    buf.array()
+    buildAvi(width, height, fps, "DLT8", Dlt8Fourcc, dibRowBytes(width) * height,
+      dibChunks(width, height, frames, _ % keyInt == 0))
   }
 
   /** Parse an uncompressed AVI container: walk the RIFF chunk tree
@@ -538,92 +429,50 @@ object MultimodalOps {
   private[graft] def decodeAviKeyed(
       content: Array[Byte]): Option[(DecodedVideo, Array[Boolean])] =
     try {
-      if (content.length < 12) return None
-      def fourccAt(off: Int): String = {
-        val cs = new Array[Char](4)
-        var i = 0
-        while (i < 4) { cs(i) = (content(off + i) & 0xff).toChar; i += 1 }
-        new String(cs)
+      val chunks = Riff.read(content, "AVI ") match {
+        case Some(riff) => riff.flatten
+        case None => return None
       }
-      def le32(off: Int): Int =
-        (content(off) & 0xff) | ((content(off + 1) & 0xff) << 8) |
-          ((content(off + 2) & 0xff) << 16) | ((content(off + 3) & 0xff) << 24)
-      def le16(off: Int): Int = (content(off) & 0xff) | ((content(off + 1) & 0xff) << 8)
-      if (fourccAt(0) != "RIFF" || fourccAt(8) != "AVI ") return None
       var width = -1; var height = -1
       var scale = 0; var rate = 0
       var bitCount = -1; var compression = -1
       var sawVids = false
-      val frameChunks = scala.collection.mutable.ArrayBuffer.empty[Int] // data offsets
-      val frameSizes = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val frameIsKey = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-      def walk(start: Int, end: Int): Unit = {
-        var off = start
-        while (off + 8 <= end) {
-          val id = fourccAt(off)
-          val size = le32(off + 4)
-          val data = off + 8
-          if (size < 0 || data + size > end) return
-          id match {
-            case "LIST" if size >= 4 => walk(data + 4, data + size)
-            case "strh" if size >= 56 =>
-              if (fourccAt(data) == "vids") {
-                sawVids = true
-                scale = le32(data + 20); rate = le32(data + 24)
-              }
-            case "strf" if size >= 40 && bitCount < 0 =>
-              width = le32(data + 4); height = le32(data + 8)
-              bitCount = le16(data + 14); compression = le32(data + 16)
-            case "00db" | "00dc" =>
-              frameChunks += data; frameSizes += size; frameIsKey += (id == "00db")
-            case _ => ()
-          }
-          off = data + size + (size & 1) // chunks are word-aligned
+      chunks.foreach { c =>
+        c.id match {
+          case "strh" if c.size >= 56 =>
+            if (Riff.fourccAt(content, c.off) == "vids") {
+              sawVids = true
+              scale = le32(content, c.off + 20); rate = le32(content, c.off + 24)
+            }
+          case "strf" if c.size >= 40 && bitCount < 0 =>
+            width = le32(content, c.off + 4); height = le32(content, c.off + 8)
+            bitCount = le16(content, c.off + 14); compression = le32(content, c.off + 16)
+          case _ => ()
         }
       }
-      walk(12, math.min(content.length, 8 + le32(4)))
+      val frameChunks = chunks.filter(c => c.id == "00db" || c.id == "00dc")
+      val nf = frameChunks.length
       if (!sawVids || width <= 0 || height <= 0 ||
-        scale <= 0 || rate <= 0 || rate % scale != 0 ||
-        frameChunks.isEmpty) return None
-      if (bitCount == 24 && compression == 0) {
-        // raw DIB frames (BI_RGB): bottom-up padded BGR rows
+        scale <= 0 || rate <= 0 || rate % scale != 0 || nf == 0) return None
+      if (bitCount == 24 && (compression == 0 || compression == Dlt8Fourcc)) {
+        // DIB frames, bottom-up padded BGR rows. A `00db` keyframe holds
+        // the pixels; a DLT8 `00dc` chunk holds per-channel mod-256 pixel
+        // DELTAS in the same layout, and the frame is reconstructed by
+        // accumulation onto the PREVIOUS decoded frame — the defining
+        // inter-frame (P-frame) semantics. BI_RGB is DLT8 with every frame
+        // a keyframe. The first chunk must be a keyframe (nothing to
+        // reference).
+        val keys =
+          if (compression == 0) Array.fill(nf)(true)
+          else frameChunks.map(_.id == "00db").toArray
         val rowBytes = dibRowBytes(width)
-        if (frameSizes.exists(_ != rowBytes * height)) return None
-        val frames = frameChunks.toArray.map { data =>
-          val out = new Array[Int](width * height)
-          var row = 0
-          while (row < height) {
-            val srcRow = data + (height - 1 - row) * rowBytes // bottom-up
-            var x = 0
-            while (x < width) {
-              val b = content(srcRow + 3 * x) & 0xff
-              val g = content(srcRow + 3 * x + 1) & 0xff
-              val r = content(srcRow + 3 * x + 2) & 0xff
-              out(row * width + x) = (r << 16) | (g << 8) | b
-              x += 1
-            }
-            row += 1
-          }
-          out
-        }
-        Some((DecodedVideo(width, height, rate / scale, frames),
-          Array.fill(frames.length)(true)))
-      } else if (compression == Dlt8Fourcc && bitCount == 24) {
-        // DLT8 temporal-delta codec: `00db` chunks are full bottom-up BGR
-        // DIB keyframes (the BI_RGB layout above); `00dc` chunks carry
-        // per-channel mod-256 pixel DELTAS in the same DIB layout, and
-        // the frame is reconstructed by accumulation onto the PREVIOUS
-        // decoded frame — the defining inter-frame (P-frame) semantics.
-        // The first chunk must be a keyframe (nothing to reference).
-        val rowBytes = dibRowBytes(width)
-        if (frameSizes.exists(_ != rowBytes * height)) return None
-        if (!frameIsKey(0)) return None
-        val frames = new Array[Array[Int]](frameChunks.length)
+        if (frameChunks.exists(_.size != rowBytes * height) || !keys(0)) return None
+        val frames = new Array[Array[Int]](nf)
         var fi = 0
-        while (fi < frameChunks.length) {
-          val data = frameChunks(fi)
+        while (fi < nf) {
+          val data = frameChunks(fi).off
           val out = new Array[Int](width * height)
-          val prev = if (fi > 0) frames(fi - 1) else null
+          val prev = if (keys(fi)) null else frames(fi - 1)
           var row = 0
           while (row < height) {
             val srcRow = data + (height - 1 - row) * rowBytes // bottom-up
@@ -634,7 +483,7 @@ object MultimodalOps {
               val r0 = content(srcRow + 3 * x + 2) & 0xff
               val idx = row * width + x
               out(idx) =
-                if (frameIsKey(fi)) (r0 << 16) | (g0 << 8) | b0
+                if (prev == null) (r0 << 16) | (g0 << 8) | b0
                 else {
                   val p = prev(idx)
                   val r = (((p >> 16) & 0xff) + r0) & 0xff
@@ -649,17 +498,16 @@ object MultimodalOps {
           frames(fi) = out
           fi += 1
         }
-        Some((DecodedVideo(width, height, rate / scale, frames),
-          frameIsKey.toArray))
+        Some((DecodedVideo(width, height, rate / scale, frames), keys))
       } else if (compression == MjpgFourcc) {
         // Motion JPEG: every chunk is a standalone JPEG — a REAL
         // compressed-codec decode through ImageIO's JPEG reader
         ImageIO.setUseCache(false)
-        val frames = new Array[Array[Int]](frameChunks.length)
+        val frames = new Array[Array[Int]](nf)
         var fi = 0
-        while (fi < frameChunks.length) {
-          val img = ImageIO.read(
-            new ByteArrayInputStream(content, frameChunks(fi), frameSizes(fi)))
+        while (fi < nf) {
+          val img = ImageIO.read(new ByteArrayInputStream(
+            content, frameChunks(fi).off, frameChunks(fi).size))
           if (img == null || img.getWidth != width || img.getHeight != height)
             return None
           val out = new Array[Int](width * height)
@@ -1847,39 +1695,34 @@ object MultimodalOps {
     * bit-equal, the q94 lossless contract. */
   private[graft] def synthAdpcmWav(docId: Long): Array[Byte] = {
     val nb = (1 + docId % 3).toInt
-    val dataBytes = nb * AdpcmBlockAlign
-    val buf = java.nio.ByteBuffer
-      .allocate(12 + (8 + 20) + (8 + 4) + (8 + dataBytes))
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    putFourcc(buf, "RIFF"); buf.putInt(4 + 28 + 12 + 8 + dataBytes)
-    putFourcc(buf, "WAVE")
-    putFourcc(buf, "fmt "); buf.putInt(20)
-    buf.putShort(0x11)                  // wFormatTag = IMA/DVI ADPCM
-    buf.putShort(1)                     // mono
-    buf.putInt(AudioRateHz)
-    buf.putInt(AudioRateHz * AdpcmBlockAlign / AdpcmSamplesPerBlock)
-    buf.putShort(AdpcmBlockAlign.toShort)
-    buf.putShort(4)                     // wBitsPerSample = 4
-    buf.putShort(2)                     // cbSize
-    buf.putShort(AdpcmSamplesPerBlock.toShort)
-    putFourcc(buf, "fact"); buf.putInt(4)
-    buf.putInt(nb * AdpcmSamplesPerBlock)
-    putFourcc(buf, "data"); buf.putInt(dataBytes)
-    var blk = 0
-    while (blk < nb) {
-      buf.putShort(adpcmInitPred(docId, blk).toShort)
-      buf.put(adpcmInitIdx(docId, blk).toByte)
-      buf.put(0.toByte)                 // reserved
-      var k = 0
-      while (k < AdpcmBlockAlign - 4) {
-        val lo = adpcmNibble(docId, blk, 2 * k)
-        val hi = adpcmNibble(docId, blk, 2 * k + 1)
-        buf.put((lo | (hi << 4)).toByte)
-        k += 1
-      }
-      blk += 1
+    val fmt = Riff.Leaf("fmt ", 20) { buf =>
+      buf.putShort(0x11)                  // wFormatTag = IMA/DVI ADPCM
+      buf.putShort(1)                     // mono
+      buf.putInt(AudioRateHz)
+      buf.putInt(AudioRateHz * AdpcmBlockAlign / AdpcmSamplesPerBlock)
+      buf.putShort(AdpcmBlockAlign.toShort)
+      buf.putShort(4)                     // wBitsPerSample = 4
+      buf.putShort(2)                     // cbSize
+      buf.putShort(AdpcmSamplesPerBlock.toShort)
     }
-    buf.array()
+    val fact = Riff.Leaf("fact", 4)(_.putInt(nb * AdpcmSamplesPerBlock))
+    val data = Riff.Leaf("data", nb * AdpcmBlockAlign) { buf =>
+      var blk = 0
+      while (blk < nb) {
+        buf.putShort(adpcmInitPred(docId, blk).toShort)
+        buf.put(adpcmInitIdx(docId, blk).toByte)
+        buf.put(0.toByte)                 // reserved
+        var k = 0
+        while (k < AdpcmBlockAlign - 4) {
+          val lo = adpcmNibble(docId, blk, 2 * k)
+          val hi = adpcmNibble(docId, blk, 2 * k + 1)
+          buf.put((lo | (hi << 4)).toByte)
+          k += 1
+        }
+        blk += 1
+      }
+    }
+    Riff.write("WAVE", Seq(fmt, fact, data))
   }
 
   /** REAL IMA ADPCM WAV decode: walk the RIFF/WAVE chunks (fmt with the
@@ -1895,46 +1738,27 @@ object MultimodalOps {
     * corpus. */
   private[graft] def decodeImaAdpcmWav(
       content: Array[Byte]): Option[(Long, Int, Array[Int])] = {
-    if (content.length < 12) return None
-    def fourccAt(off: Int): String = {
-      val cs = new Array[Char](4)
-      var i = 0
-      while (i < 4) { cs(i) = (content(off + i) & 0xff).toChar; i += 1 }
-      new String(cs)
+    // top-level chunks only; one that overruns the file rejects it
+    val chunks = Riff.read(content, "WAVE") match {
+      case Some(riff) if !riff.cut => riff.children
+      case _ => return None
     }
-    def le32(off: Int): Int =
-      (content(off) & 0xff) | ((content(off + 1) & 0xff) << 8) |
-        ((content(off + 2) & 0xff) << 16) | ((content(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (content(off) & 0xff) | ((content(off + 1) & 0xff) << 8)
-    if (fourccAt(0) != "RIFF" || fourccAt(8) != "WAVE") return None
-    var fmtOff = -1; var fmtSize = 0
-    var factCount = -1L
-    var dataOff = -1; var dataSize = 0
-    var off = 12
-    val end = math.min(content.length, 8 + le32(4))
-    while (off + 8 <= end) {
-      val id = fourccAt(off)
-      val size = le32(off + 4)
-      val data = off + 8
-      if (size < 0 || data + size > end) return None
-      id match {
-        case "fmt " => fmtOff = data; fmtSize = size
-        case "fact" if size >= 4 => factCount = le32(data).toLong & 0xffffffffL
-        case "data" => dataOff = data; dataSize = size
-        case _ => ()
+    val factCount = chunks.findLast(c => c.id == "fact" && c.size >= 4)
+      .fold(-1L)(c => le32(content, c.off).toLong & 0xffffffffL)
+    val (fmtOff, fmtSize, dataOff, dataSize) =
+      (chunks.findLast(_.id == "fmt "), chunks.findLast(_.id == "data")) match {
+        case (Some(f), Some(d)) if f.size >= 16 => (f.off, f.size, d.off, d.size)
+        case _ => return None
       }
-      off = data + size + (size & 1)
-    }
-    if (fmtOff < 0 || fmtSize < 16 || dataOff < 0) return None
-    if (le16(fmtOff) != 0x11) return None // not IMA/DVI ADPCM
-    val channels = le16(fmtOff + 2)
-    val rate = le32(fmtOff + 4).toLong
-    val blockAlign = le16(fmtOff + 12)
+    if (le16(content, fmtOff) != 0x11) return None // not IMA/DVI ADPCM
+    val channels = le16(content, fmtOff + 2)
+    val rate = le32(content, fmtOff + 4).toLong
+    val blockAlign = le16(content, fmtOff + 12)
     require(channels == 1, s"multi-channel ADPCM unsupported: $channels")
-    require(le16(fmtOff + 14) == 4, "IMA ADPCM must declare 4 bits per sample")
-    require(fmtSize >= 20 && le16(fmtOff + 16) >= 2,
+    require(le16(content, fmtOff + 14) == 4, "IMA ADPCM must declare 4 bits per sample")
+    require(fmtSize >= 20 && le16(content, fmtOff + 16) >= 2,
       "ADPCM fmt chunk must carry the samples-per-block extension")
-    val spb = le16(fmtOff + 18)
+    val spb = le16(content, fmtOff + 18)
     require(blockAlign >= 5 && spb == (blockAlign - 4) * 2 + 1,
       s"samples-per-block $spb inconsistent with block align $blockAlign")
     require(dataSize % blockAlign == 0,
@@ -1946,7 +1770,7 @@ object MultimodalOps {
     var blk = 0
     while (blk < nb) {
       val base = dataOff + blk * blockAlign
-      val pred = le16(base).toShort.toInt  // signed int16
+      val pred = le16(content, base).toShort.toInt  // signed int16
       val idx = content(base + 2) & 0xff
       require(idx <= 88, s"ADPCM step index out of range at block $blk: $idx")
       val nibbles = new Array[Int]((blockAlign - 4) * 2)

@@ -102,15 +102,9 @@ object Pipeline {
         "Posts per week", s"$outDir/5_trend.svg"))
     // the reference's per-industry chart loop (`main.py:516-543,787`): one
     // word-frequency chart per industry off the SAME single-pass report —
-    // the bounded collect pulls only the top-K report rows
-    import org.apache.spark.sql.functions.col
-    report.wordFrequencyByIndustry
-      .select("category").distinct().collect().map(_.getString(0)).sorted
-      .foreach { ind =>
-        ChartSink.writeBarChart(
-          report.wordFrequencyByIndustry.filter(col("category") === ind),
-          "word", "n", s"Word frequency — $ind",
-          s"$outDir/4_word_frequency_${ind.replaceAll("[^A-Za-z0-9_-]", "_")}.svg")
-      }
+    // one bounded collect pulls the industries × top-K report rows
+    ChartSink.writeBarChartPerGroup(report.wordFrequencyByIndustry,
+      "category", "word", "n", ind => s"Word frequency — $ind",
+      ind => s"$outDir/4_word_frequency_${ind.replaceAll("[^A-Za-z0-9_-]", "_")}.svg")
   }
 }

@@ -85,6 +85,24 @@ class ChartSinkSpec extends AnyFunSuite {
         assert(java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$out/4_word_frequency_$ind.svg")), s"missing chart for $ind")
       }
+      // ... whose bars are exactly that industry's report rows, in rank order
+      val byIndustry = report.wordFrequencyByIndustry.collect()
+        .groupBy(_.getAs[String]("category"))
+      def unesc(s: String) = s.replace("&lt;", "<").replace("&gt;", ">")
+        .replace("&quot;", "\"").replace("&amp;", "&")
+      Defaults.config.taxonomy.industryNames.foreach { ind =>
+        val svg = java.nio.file.Files.readString(
+          java.nio.file.Paths.get(s"$out/4_word_frequency_$ind.svg"))
+        val labels = """text-anchor="end" font-size="14">([^<]*)<""".r
+          .findAllMatchIn(svg).map(m => unesc(m.group(1))).toSeq
+        val values = """fill="#333">([^<]*)<""".r.findAllMatchIn(svg).map(_.group(1)).toSeq
+        val want = byIndustry.getOrElse(ind, Array.empty).toSeq
+        assert(want.nonEmpty, s"no report rows for $ind")
+        assert(labels == want.map(_.getAs[String]("word")), s"$ind chart labels")
+        assert(values == want.map(r => ChartSink.fmt(r.getAs[Long]("n").toDouble)),
+          s"$ind chart values")
+        assert(svg.contains(s">Word frequency — $ind<"))
+      }
     } finally Pipeline.unpersist(report)
   }
 }

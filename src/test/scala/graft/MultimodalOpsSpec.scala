@@ -608,6 +608,12 @@ class MultimodalOpsSpec extends AnyFunSuite {
     putLe32(trunc, 4, trunc.length - 8)
     putLe32(trunc, 56, trunc.length - 60) // data chunk size (header at 52)
     intercept[IllegalArgumentException](MultimodalOps.decodeImaAdpcmWav(trunc))
+    // a chunk declaring a size past the end of the file is framing damage:
+    // None, also when offset + size overflows an Int
+    for (size <- Seq(wav.length, 0x7ffffff8)) {
+      val overrun = wav.clone(); putLe32(overrun, 16, size) // fmt chunk size
+      assert(MultimodalOps.decodeImaAdpcmWav(overrun).isEmpty, s"fmt size $size")
+    }
   }
 
   test("adpcmDecodeStats matches a local recomputation through the corpus") {
@@ -688,5 +694,30 @@ class MultimodalOpsSpec extends AnyFunSuite {
     assert(r.getLong(1) == 2L && r.getLong(2) == 1L)  // n_frames, n_key
     assert(r.getLong(7) == 4L && r.getLong(8) == 4L && r.getLong(9) == 4L)
     assert(r.getLong(10) == 256L, s"motion energy ${r.getLong(10)}")
+  }
+
+  test("container encoders are byte-stable: output digests over synthetic ids") {
+    // SHA-256 over each encoder's containers for ids 0..23, in id order —
+    // odd widths (DIB row padding), 2..8 frames, P-frames, odd-length
+    // JPEG chunks (RIFF pad byte) and 1..3 ADPCM blocks all occur.
+    def digest(bytes: Long => Array[Byte]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (0L until 24L).foreach(id => md.update(bytes(id)))
+      md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }
+    def avi(synth: Long => MultimodalOps.DecodedVideo,
+        enc: (Int, Int, Int, Seq[Array[Int]]) => Array[Byte]): String =
+      digest { id => val v = synth(id); enc(v.width, v.height, v.fps, v.frames.toSeq) }
+    assert(avi(MultimodalOps.synthVideo, MultimodalOps.encodeAvi(_, _, _, _)) ==
+      "54231f07f3f668e07f93a77914312f7f5f8e7f33b06c058af59c5fe19aba0afa")
+    assert(avi(MultimodalOps.synthVideoDelta, MultimodalOps.encodeAviDelta(_, _, _, _)) ==
+      "ffef65259ae342e97070b6035a4881e5dcee54b0d5ecbd5682a001ff98b19f68")
+    // the frame payloads come from `encodeJpeg`, whose bytes belong to the
+    // bundled JRE codec (see its JRE COUPLING note): a JDK bump may move
+    // this digest with no container change
+    assert(avi(MultimodalOps.synthVideoGray, MultimodalOps.encodeAviMjpeg(_, _, _, _)) ==
+      "a7fdec1aa19c8c3b92867679ac80d92693aa64aafece81aa8a1e69bd95d9ab16")
+    assert(digest(MultimodalOps.synthAdpcmWav) ==
+      "6d3f3d0528bb69ccb8be1c8c3420da834d1274ce0a5259d770c1e47cabf83987")
   }
 }
