@@ -61,7 +61,8 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec warns "No Partition Defined" on every global window; the
     // engine's four are over bounded-domain relations (PlanSpec pins that
-    // bound), so the warning carries no signal
+    // bound), so the warning carries no signal. It is off for ALL windows,
+    // so a new global window logs nothing: give it its own bound in PlanSpec
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

@@ -183,22 +183,24 @@ $texts
   private def bars(rows: Array[Row]): Seq[(String, Double)] =
     rows.map(r => (Option(r.getString(0)).getOrElse(""), r.getDouble(1))).toSeq
 
+  /** Bars per bar chart unless the caller asks for another count. */
+  private val BarRows = 50
+
   def writeBarChart(df: DataFrame, labelCol: String, valueCol: String,
-      title: String, path: String, maxRows: Int = 50): Unit =
+      title: String, path: String, maxRows: Int = BarRows): Unit =
     writeSvg(path, barChartSvg(reportRows(df, labelCol, valueCol, maxRows), title))
 
   /** One bar chart per distinct `groupCol` value, in sorted group order,
-    * each of its group's first `maxRows` rows — all from ONE collect of
+    * each of its group's first `BarRows` rows — all from ONE collect of
     * `df`, a per-group top-K report (groups × K rows) already ordered
     * within each group. */
   def writeBarChartPerGroup(df: DataFrame, groupCol: String, labelCol: String,
-      valueCol: String, title: String => String, path: String => String,
-      maxRows: Int = 50): Unit =
+      valueCol: String, title: String => String, path: String => String): Unit =
     df.select(col(labelCol).cast("string"), col(valueCol).cast("double"), col(groupCol))
       .collect()
       .groupBy(_.getString(2)).toSeq.sortBy(_._1)
       .foreach { case (g, rows) =>
-        writeSvg(path(g), barChartSvg(bars(rows.take(maxRows)), title(g)))
+        writeSvg(path(g), barChartSvg(bars(rows.take(BarRows)), title(g)))
       }
 
   def writeLineChart(df: DataFrame, labelCol: String, valueCol: String,

@@ -421,6 +421,23 @@ class MultimodalOpsSpec extends AnyFunSuite {
     (dcAt + 8 until math.min(dcAt + 24, corrupted.length)).foreach(corrupted(_) = 0)
     assert(MultimodalOps.decodeAvi(corrupted).isEmpty,
       "corrupt MJPEG frame payload must decode to None, not throw")
+    // a movi frame chunk declaring a size past the end of its list ends
+    // that list: the frames before it still decode, also when offset +
+    // size overflows an Int
+    val aviRaw = MultimodalOps.encodeAvi(raw.width, raw.height, raw.fps, raw.frames.toSeq)
+    val firstDb = aviRaw.indices.find(i =>
+      new String(aviRaw, i, 4, "US-ASCII") == "00db").get
+    val firstSize = (0 until 4).map(k => (aviRaw(firstDb + 4 + k) & 0xff) << (8 * k)).sum
+    val secondDb = firstDb + 8 + firstSize + (firstSize & 1)
+    assert(new String(aviRaw, secondDb, 4, "US-ASCII") == "00db")
+    for (size <- Seq(aviRaw.length, 0x7ffffff8)) {
+      val overrun = aviRaw.clone()
+      (0 until 4).foreach(k => overrun(secondDb + 4 + k) = ((size >>> (8 * k)) & 0xff).toByte)
+      val (d, keys) = MultimodalOps.decodeAviKeyed(overrun).getOrElse(
+        fail(s"frame size $size: the frame before the overrun must decode"))
+      assert(d.frames.length == 1 && keys.toSeq == Seq(true), s"frame size $size")
+      assert(d.frames(0).toSeq == raw.frames(0).toSeq, s"frame size $size")
+    }
   }
 
   test("videoCorpusMjpeg decode stats match the closed-form gray formula") {
