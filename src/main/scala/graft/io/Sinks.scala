@@ -40,19 +40,20 @@ object Sinks {
     df.write.mode("overwrite").option("header", "true").csv(path)
 
   /** COMPACT a hive `batch=<id>`-partitioned artifact directory (the
-    * layout [[graft.streaming.StreamingOps.nearDupIngest]] /
-    * [[graft.streaming.StreamingOps.ivfIngest]] grow one small partition
-    * per micro-batch) into a single `batch=<epochId>` epoch under a NEW
-    * directory: the maintenance job that keeps an always-appending index
-    * readable. Thousands of per-batch files become `numFiles`
-    * range-partitioned files sorted on `sortCols` within each file, so
-    * every row group carries tight min/max stats on the probe keys and
-    * the per-screen scan does metadata-sized file listing again.
+    * [[BatchArtifact]] layout the streaming ingest loops grow one small
+    * partition per micro-batch) into a single `batch=<epochId>` epoch
+    * under a NEW directory: the maintenance job that keeps an
+    * always-appending index readable. Thousands of per-batch files
+    * become `numFiles` range-partitioned files sorted on `sortCols`
+    * within each file, so every row group carries tight min/max stats on
+    * the probe keys and the per-screen scan does metadata-sized file
+    * listing again.
     *
     * Contract: `dstDir` is fresh (never compact in place — readers of
     * `srcDir` stay consistent while the epoch is written; cut readers
-    * over to `dstDir` after this returns, then retire `srcDir`). The
-    * rewrite only reorganizes rows — same schema minus the consumed
+    * over to `dstDir` after this returns, then retire `srcDir`; the
+    * in-place fold with that cut-over built in is [[BatchArtifact.fold]]).
+    * The rewrite only reorganizes rows — same schema minus the consumed
     * `batch` column re-emitted as the single epoch partition — so any
     * consumer joining the artifact gets bit-identical results before and
     * after (spec-pinned for the near-dup screen). `partitionBy` preserves
@@ -63,28 +64,8 @@ object Sinks {
       srcDir: String, dstDir: String, epochId: Long,
       numFiles: Int, sortCols: Seq[String],
       partitionBy: Seq[String] = Nil): Unit =
-    compactBatches(spark.read.parquet(srcDir), dstDir, epochId,
+    BatchArtifact.compact(spark.read.parquet(srcDir), dstDir, epochId,
       numFiles, sortCols, partitionBy)
-
-  /** [[compactBatches]] over a caller-filtered source relation — the
-    * form the streaming ingest loops' in-place epoch fold needs (their
-    * source must EXCLUDE the current batchId's partition for replay
-    * safety, which a whole-directory read cannot express). Same
-    * contract otherwise. */
-  def compactBatches(
-      src: DataFrame, dstDir: String, epochId: Long,
-      numFiles: Int, sortCols: Seq[String],
-      partitionBy: Seq[String]): Unit = {
-    require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    require(sortCols.nonEmpty, "compaction needs at least one sort column")
-    val cols = sortCols.map(org.apache.spark.sql.functions.col)
-    val df = src.drop("batch")
-      .repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-    val w = df.write.mode("errorifexists")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(s"$dstDir/batch=$epochId")
-  }
 
   /** JDBC write-back — the sink half of the S1 source (the engine could
     * read a database but not publish results back to one). Each write

@@ -21,8 +21,6 @@ g AS (SELECT left_sym, right_sym, CAST(SUM(wc) AS BIGINT) AS pair_count
 SELECT left_sym, right_sym, pair_count FROM g
 ORDER BY pair_count DESC, left_sym ASC, right_sym ASC LIMIT $n"""
 
-  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
-
   /** Mirror of [[graft.ops.BpeOps.bpeFertility]]: the greedy
     * left-to-right non-overlapping `applyMerge` pass is expressed as a
     * `list_reduce` fold over a '|'-wrapped symbol string — the

@@ -8,7 +8,6 @@ package graft.sql
   * agreement of every stage. */
 object CurationSql {
 
-  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
   private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
 
   def curationFunnel(

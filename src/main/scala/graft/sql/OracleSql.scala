@@ -14,8 +14,6 @@ import graft.model.AnalysisConfig
   */
 object OracleSql {
 
-  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
-
   /** The clean-stage WHERE clause (P3 + P5 + P6) for the posts table. */
   def cleanWhere(cfg: AnalysisConfig): String = {
     val m = cfg.posts

@@ -6,7 +6,6 @@ package graft.sql
   * integer in both engines (float-sum-order immune). */
 object RetrievalSql {
 
-  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
   private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
 
   /** Mirror of [[graft.ops.RetrievalOps.hybridSearch]]: document-derived

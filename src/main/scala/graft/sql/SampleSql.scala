@@ -152,7 +152,7 @@ FROM k GROUP BY 1 ORDER BY 1"""
       table: String, groupCol: String,
       weights: Seq[(String, Long)], budgetTokens: Long): String = {
     val wSum = weights.map(_._2).sum
-    val wVals = weights.map { case (g, w) => s"('${g.replace("'", "''")}', $w)" }
+    val wVals = weights.map { case (g, w) => s"(${sq(g)}, $w)" }
       .mkString(", ")
     s"""WITH w(g, w) AS (VALUES $wVals),
 a AS (SELECT $groupCol AS g,

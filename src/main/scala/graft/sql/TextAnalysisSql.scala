@@ -7,7 +7,6 @@ import graft.ops.TextAnalysisOps
   * the Spark plans use, so they cannot drift. */
 object TextAnalysisSql {
 
-  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
   private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
 
   def langIdConfusion(table: String): String = {

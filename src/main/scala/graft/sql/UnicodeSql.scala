@@ -15,8 +15,6 @@ import graft.text.UnicodeAnalyzer
   */
 object UnicodeSql {
 
-  private def q(s: String): String = "'" + s.replace("'", "''") + "'"
-
   /** Word frequency over `table.text` augmented with a deterministic
     * Persian-ish phrase keyed on `doc_id % phrases.size` — the fixture that
     * exercises ZWNJ tokens, Arabic-codepoint unification, diacritics,
@@ -26,12 +24,12 @@ object UnicodeSql {
     require(!a.correctSpacing && !a.decreaseRepeatedChars,
       "oracle SQL cannot mirror correctSpacing/decreaseRepeatedChars (RE2)")
     val phraseCase = phrases.zipWithIndex
-      .map { case (p, i) => s"WHEN $i THEN ${q(p)}" }
+      .map { case (p, i) => s"WHEN $i THEN ${sq(p)}" }
       .mkString(" ")
     val norm = {
       var e = "t"
       if (a.unicodeReplacement)
-        e = s"translate($e, ${q(UnicodeAnalyzer.CharMapFrom)}, ${q(UnicodeAnalyzer.CharMapTo)})"
+        e = s"translate($e, ${sq(UnicodeAnalyzer.CharMapFrom)}, ${sq(UnicodeAnalyzer.CharMapTo)})"
       if (a.removeDiacritics)
         e = s"regexp_replace($e, '[\\x{064B}-\\x{065F}\\x{0670}\\x{0640}]', '', 'g')"
       e
@@ -39,11 +37,11 @@ object UnicodeSql {
     val lemmaCase =
       if (a.lemmas.isEmpty) "w0"
       else a.lemmas.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"WHEN ${q(k)} THEN ${q(v)}" }
+        .map { case (k, v) => s"WHEN ${sq(k)} THEN ${sq(v)}" }
         .mkString("CASE w0 ", " ", " ELSE w0 END")
-    val stopList = a.stopwords.map(s => q(s.toLowerCase(java.util.Locale.ROOT))).mkString(", ")
-    val webPred = a.webNoise.map(n => s"contains(lower(w), ${q(n)})").mkString(" OR ")
-    val noiseList = a.asciiNoise.map(s => q(s.toLowerCase(java.util.Locale.ROOT))).mkString(", ")
+    val stopList = a.stopwords.map(s => sq(s.toLowerCase(java.util.Locale.ROOT))).mkString(", ")
+    val webPred = a.webNoise.map(n => s"contains(lower(w), ${sq(n)})").mkString(" OR ")
+    val noiseList = a.asciiNoise.map(s => sq(s.toLowerCase(java.util.Locale.ROOT))).mkString(", ")
     s"""WITH base AS (
   SELECT text || ' ' || CASE CAST(doc_id % ${phrases.size} AS BIGINT) $phraseCase END AS t
   FROM $table WHERE text IS NOT NULL),

@@ -1,8 +1,9 @@
 package graft.streaming
 
+import graft.io.BatchArtifact
 import graft.model.AnalysisConfig
 import graft.ops.KeywordOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -244,6 +245,13 @@ object StreamingOps {
         expr("sp.dup * 1000000 div n_tokens").as("dup_ppm"))
   }
 
+  // The near-dup artifacts, shared by the near-dup and curation loops.
+  // Each ingest artifact is declared once as a [[graft.io.BatchArtifact]]
+  // (dir, fold sort keys, inner partitioning), which owns the layout, the
+  // replay-safe read, the overwrite and the epoch fold.
+  private def bandKeys(dir: String) = BatchArtifact(dir, Seq("band", "bh"))
+  private def hashSets(dir: String) = BatchArtifact(dir, Seq("id"))
+
   /** PRODUCTION ingest loop for the persisted WINDOW index — the span
     * family's growing-index half ([[nearDupIngest]]'s contract at window
     * granularity): each micro-batch screens against the on-disk
@@ -268,97 +276,13 @@ object StreamingOps {
     * stay correct either way — repeated hit intervals merge into one
     * island — but the COST would not; the anti-join keeps the index's
     * key multiset globally distinct.)
-    * Layout contract = [[nearDupIngest]]: hive `batch=<id>` partitions,
-    * the seed epoch at `batch=-1`, each batch OVERWRITING its own
-    * partition. Retry safety: the index read EXCLUDES the current
-    * batchId's partition, so a micro-batch replayed after its partition
-    * was written (crash between the parquet write and the streaming
-    * commit) screens against the same index state as the original
-    * attempt and rewrites the same partition content — without the
+    * The index is a [[graft.io.BatchArtifact]] (layout, replay safety,
+    * every-`compactEvery`-epochs fold). Without the own-partition
     * exclusion, a replay would read its OWN previously-appended windows
     * (minDocs = 1) and report every doc, novel ones included, as
-    * near-fully self-duplicated. For long-running streams, periodically
-    * fold the accumulated `batch=*` partitions into one via
-    * [[graft.io.Sinks.compactBatches]] (operational file-count hygiene;
-    * the key multiset is already distinct).
+    * near-fully self-duplicated.
     * `onBatch(report, batchId)` gets the per-batch
     * [[graft.ops.DedupOps.exactDupSpansAgainstIndex]]-shaped report. */
-  /** The reserved epoch partition id a compaction at `batchId` folds
-    * into: negative (like the `batch=-1` seed, so it can never collide
-    * with a real micro-batch id) and unique per folding batch (so a
-    * replay of batch B can tell ITS epoch from an older one). */
-  private[graft] def compactEpochId(batchId: Long): Long = -batchId - 2
-
-  /** EVERY-N-EPOCHS COMPACTION for one growing `batch=<id>` artifact
-    * directory (the r11 verdict's ask): all five ingest loops grow one
-    * hive partition per micro-batch, so partition discovery and file
-    * listing grow linearly with stream age even though the key multiset
-    * stays distinct. Called at the TOP of a batch body (before the
-    * batch's artifact reads — `foreachBatch` bodies are serial, so
-    * there is no concurrent reader to cut over), it folds every
-    * partition EXCEPT the current batch's own into one fresh epoch
-    * partition via [[graft.io.Sinks.compactBatches]] and retires the
-    * folded ones. The fold only reorganizes rows, so the batch's screen
-    * verdicts and appended content are bit-identical before and after
-    * (spec-pinned).
-    *
-    * Crash safety, step by step (a replayed batch B re-runs ALL of
-    * this):
-    *  1. the epoch is STAGED under a dot-prefixed temp dir — invisible
-    *     to partition discovery — and atomically renamed to
-    *     `batch=<epochId>`; a crash mid-stage leaves only the invisible
-    *     temp, which the replay deletes and rebuilds;
-    *  2. a replay that finds `batch=<epochId>` already present skips
-    *     the rewrite (the fold is a pure function of the pre-B
-    *     partitions, which the exclusion read pins) and resumes at the
-    *     retire step — a crash mid-retire just finishes the deletes;
-    *  3. `batch=<B>` itself is never folded and never retired, so the
-    *     replay-safety contract of the batch bodies (reads exclude the
-    *     own partition) is preserved verbatim.
-    * Rename-as-commit assumes an atomic-rename filesystem (local/HDFS);
-    * object stores need a manifest-pointer commit instead — documented
-    * boundary, same class as the sinks' direct-write contract. */
-  private[graft] def maybeCompactArtifact(
-      spark: SparkSession, dir: String, batchId: Long, every: Int,
-      numFiles: Int, sortCols: Seq[String],
-      partitionBy: Seq[String] = Nil): Unit = {
-    if (every <= 0 || batchId <= 0 || batchId % every != 0) return
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return
-    val epoch = compactEpochId(batchId)
-    val epochPath = new org.apache.hadoop.fs.Path(base, s"batch=$epoch")
-    val tmp = new org.apache.hadoop.fs.Path(base, s".compact_tmp_$batchId")
-    if (!fs.exists(epochPath)) {
-      if (fs.exists(tmp)) fs.delete(tmp, true) // crashed mid-stage: rebuild
-      graft.io.Sinks.compactBatches(
-        spark.read.parquet(dir).filter(col("batch") =!= batchId),
-        tmp.toString, epoch, numFiles, sortCols, partitionBy)
-      val staged = new org.apache.hadoop.fs.Path(tmp, s"batch=$epoch")
-      require(fs.rename(staged, epochPath),
-        s"compaction commit rename failed: $staged -> $epochPath")
-    }
-    // Delete the staging dir UNCONDITIONALLY (r12 ADVICE): a crash after
-    // the rename-commit — or a replay taking the epoch-exists skip branch
-    // above — would otherwise leave the dot-prefixed temp on disk forever
-    // (invisible to partition discovery, but garbage per crashed
-    // compaction).
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // retire the folded partitions; idempotent on replay (see above)
-    fs.listStatus(base).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("batch=")) {
-        // a non-numeric partition name (a hive null partition, a stray
-        // dir) is not ours to retire: skip it rather than failing the
-        // whole stream on a bare NumberFormatException (r12 ADVICE)
-        scala.util.Try(name.substring("batch=".length).toLong).toOption
-          .foreach { id =>
-            if (id != epoch && id != batchId) fs.delete(st.getPath, true)
-          }
-      }
-    }
-  }
-
   def spanIngest(
       docs: DataFrame, indexDir: String,
       textCol: String, idCol: String, l: Int,
@@ -378,25 +302,18 @@ object StreamingOps {
       batch: DataFrame, batchId: Long, indexDir: String,
       textCol: String, idCol: String, l: Int,
       compactEvery: Int = 0): DataFrame = {
-    val spark = batch.sparkSession
-    maybeCompactArtifact(spark, indexDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("wk"))
-    // the micro-batch feeds the screen and its own index append — pin
-    // it once instead of recomputing the source per consumer
-    val b = batch.localCheckpoint()
-    // Index keys minus this batch's own partition (retry safety, above).
-    // NOT checkpointed: it feeds two actions, but two pruned scans of a
-    // 16-byte-key parquet column beat pinning the whole index — at
-    // corpus scale this relation is the thing too big to cache per batch.
-    val idx = spark.read.parquet(indexDir)
-      .filter(col("batch") =!= batchId)
-      .select("wk")
-    val report = graft.ops.DedupOps.exactDupSpansAgainstIndex(
-      b, idx, textCol, idCol, l).localCheckpoint()
-    graft.ops.DedupOps.frequentWindowIndex(b, textCol, idCol, l, minDocs = 1)
-      .join(idx, Seq("wk"), "left_anti")
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    report
+    val index = BatchArtifact(indexDir, Seq("wk"))
+    BatchArtifact.step(batch, batchId, compactEvery, index) { b =>
+      // NOT checkpointed: it feeds two actions, but two pruned scans of a
+      // 16-byte-key parquet column beat pinning the whole index — at
+      // corpus scale this relation is the thing too big to cache per batch.
+      val idx = index.readExcept(b.sparkSession, batchId).select("wk")
+      val report = graft.ops.DedupOps.exactDupSpansAgainstIndex(
+        b, idx, textCol, idCol, l).localCheckpoint()
+      index.write(graft.ops.DedupOps.frequentWindowIndex(b, textCol, idCol, l, minDocs = 1)
+        .join(idx, Seq("wk"), "left_anti"), batchId)
+      report
+    }
   }
 
   /** PRODUCTION ingest loop for the persisted near-dup index: a
@@ -409,21 +326,14 @@ object StreamingOps {
     * [[streamingNearDupScreen]] cannot express (its static side is
     * re-read per batch but never grows mid-query from the stream itself).
     *
-    * Layout contract: both dirs are hive-partitioned by micro-batch
-    * (`batch=<id>` subdirs); the SEED corpus index must be written the
-    * same way (e.g. `batch=-1`) so partition discovery stays consistent.
-    * Each batch OVERWRITES its own partition — a retried micro-batch
-    * rewrites the same files instead of double-appending — and the
-    * artifact reads EXCLUDE the current batchId's partition, which is
-    * what actually makes the retry idempotent: without the exclusion, a
-    * micro-batch replayed after its partitions were written (crash
-    * between the writes and the streaming commit) would screen its own
-    * docs against their OWN appended keys, every first-attempt survivor
-    * would self-match at jaccard 1.0 and flip to blocked, and the
-    * partitions would be rewritten EMPTY — the accepted docs silently
-    * vanishing from the index. With the exclusion the replay sees the
-    * same index state as the original attempt and rewrites identical
-    * content (spec-pinned).
+    * Both dirs are [[graft.io.BatchArtifact]]s (layout, replay safety,
+    * every-`compactEvery`-epochs fold). Without the own-partition
+    * exclusion, a micro-batch replayed after its partitions were written
+    * would screen its own docs against their OWN appended keys, every
+    * first-attempt survivor would self-match at jaccard 1.0 and flip to
+    * blocked, and the partitions would be rewritten EMPTY — the accepted
+    * docs silently vanishing from the index. With the exclusion the
+    * replay rewrites identical content (spec-pinned).
     * Within-batch near-dups are NOT screened against each other (same
     * corpus-vs-shard contract as [[graft.ops.DedupOps.minhashDedupDelta]];
     * run the pair path inside the batch if intra-shard dups matter).
@@ -451,27 +361,19 @@ object StreamingOps {
       textCol: String, idCol: String,
       w: Int, nBands: Int, r: Int, minJaccard: Double,
       compactEvery: Int = 0): (DataFrame, DataFrame) = {
-    val spark = batch.sparkSession
-    maybeCompactArtifact(spark, indexDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("band", "bh"))
-    maybeCompactArtifact(spark, hashSetsDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("id"))
-    // the micro-batch feeds the screen and the accepted anti join —
-    // pin it once instead of recomputing the source per consumer
-    val b = batch.localCheckpoint()
-    // replay safety: never read this batch's own partitions (see the
-    // layout contract above — a replay must see the pre-write state)
-    val blocked = graft.ops.DedupOps.minhashDeltaIndexed(
-      b, spark.read.parquet(indexDir).filter(col("batch") =!= batchId),
-      spark.read.parquet(hashSetsDir).filter(col("batch") =!= batchId),
-      textCol, idCol, w, nBands, r, minJaccard).localCheckpoint()
-    val accepted = b.join(blocked.select(col("doc_id").as("__bid")),
-      col(idCol) === col("__bid"), "left_anti")
-    graft.ops.DedupOps.bandKeyIndex(accepted, textCol, idCol, w, nBands, r)
-      .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    graft.ops.DedupOps.shingleHashSets(accepted, textCol, idCol, w)
-      .write.mode("overwrite").parquet(s"$hashSetsDir/batch=$batchId")
-    (accepted, blocked)
+    val (index, sets) = (bandKeys(indexDir), hashSets(hashSetsDir))
+    BatchArtifact.step(batch, batchId, compactEvery, index, sets) { b =>
+      val spark = b.sparkSession
+      val blocked = graft.ops.DedupOps.minhashDeltaIndexed(
+        b, index.readExcept(spark, batchId), sets.readExcept(spark, batchId),
+        textCol, idCol, w, nBands, r, minJaccard).localCheckpoint()
+      val accepted = b.join(blocked.select(col("doc_id").as("__bid")),
+        col(idCol) === col("__bid"), "left_anti")
+      index.write(graft.ops.DedupOps.bandKeyIndex(accepted, textCol, idCol, w, nBands, r),
+        batchId)
+      sets.write(graft.ops.DedupOps.shingleHashSets(accepted, textCol, idCol, w), batchId)
+      (accepted, blocked)
+    }
   }
 
   /** STREAMING CURATION FUNNEL — the live half of the q71/q96 batch
@@ -501,14 +403,11 @@ object StreamingOps {
     *    single micro-batch can see — rate-based is the streaming-native
     *    budget).
     *
-    * Layout contract ([[nearDupIngest]]'s): all three artifact dirs are
-    * hive-partitioned by micro-batch with seed epochs at `batch=-1`
-    * (empty frames for a fresh corpus); each batch OVERWRITES its own
-    * partition, and the artifact reads EXCLUDE the current batchId's
-    * partition — the replay-safety contract [[nearDupIngestBatch]]
-    * documents (without it, a replayed batch's first-attempt survivors
+    * All three artifact dirs are [[graft.io.BatchArtifact]]s (seed
+    * epochs at `batch=-1`, empty frames for a fresh corpus). Without the
+    * own-partition exclusion, a replayed batch's first-attempt survivors
     * would hit their OWN keys at the exact-dedup and near-dup stages,
-    * flip to rejected, and the partitions would be rewritten empty).
+    * flip to rejected, and the partitions would be rewritten empty.
     * `onBatch(report, accepted, id)` gets the q71-shaped per-stage
     * report (stage, stage_name, n_docs, n_tokens) plus the accepted
     * frame. */
@@ -543,14 +442,10 @@ object StreamingOps {
       budgetNum: Long, budgetDen: Long,
       nBands: Int, r: Int, minJaccard: Double,
       compactEvery: Int = 0): (DataFrame, DataFrame) = {
-      val spark = batch.sparkSession
-      maybeCompactArtifact(spark, keysDir, batchId, compactEvery,
-        numFiles = 4, sortCols = Seq("__key"))
-      maybeCompactArtifact(spark, indexDir, batchId, compactEvery,
-        numFiles = 4, sortCols = Seq("band", "bh"))
-      maybeCompactArtifact(spark, hashSetsDir, batchId, compactEvery,
-        numFiles = 4, sortCols = Seq("id"))
-      val b = batch.localCheckpoint()
+    val (keys, index, sets) =
+      (BatchArtifact(keysDir, Seq("__key")), bandKeys(indexDir), hashSets(hashSetsDir))
+    BatchArtifact.step(batch, batchId, compactEvery, keys, index, sets) { b =>
+      val spark = b.sparkSession
       // stage 0+1: per-doc token counts and rule mask in one pass
       val masked = graft.ops.TextAnalysisOps.gopherRuleMask(
         b, textCol, idCol, stopwords, minTokens, maxTokens, minStops)
@@ -565,18 +460,14 @@ object StreamingOps {
       val wKey = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__key")).orderBy(col(idCol).asc)
       val s2 = keyed
-        // replay safety: never read this batch's own partition
-        .join(spark.read.parquet(keysDir).filter(col("batch") =!= batchId)
-          .select("__key").distinct(),
+        .join(keys.readExcept(spark, batchId).select("__key").distinct(),
           Seq("__key"), "left_anti")
         .withColumn("__rn", row_number().over(wKey))
         .filter(col("__rn") === 1).drop("__rn")
         .localCheckpoint()
       // stage 3: near-dup screen against the persisted artifacts
-      // (minus this batch's own partition — replay safety again)
       val blocked = graft.ops.DedupOps.minhashDeltaIndexed(
-        s2, spark.read.parquet(indexDir).filter(col("batch") =!= batchId),
-        spark.read.parquet(hashSetsDir).filter(col("batch") =!= batchId),
+        s2, index.readExcept(spark, batchId), sets.readExcept(spark, batchId),
         textCol, idCol, w, nBands, r, minJaccard)
       val s3 = s2.join(blocked.select(col("doc_id").as("__bid")),
         col(idCol) === col("__bid"), "left_anti")
@@ -598,12 +489,9 @@ object StreamingOps {
       val s5 = graft.ops.SampleOps.hashSample(s4, idCol, budgetNum, budgetDen)
         .localCheckpoint()
       // grow the artifacts with the ACCEPTED docs (the corpus being built)
-      s5.select("__key").distinct()
-        .write.mode("overwrite").parquet(s"$keysDir/batch=$batchId")
-      graft.ops.DedupOps.bandKeyIndex(s5, textCol, idCol, w, nBands, r)
-        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      graft.ops.DedupOps.shingleHashSets(s5, textCol, idCol, w)
-        .write.mode("overwrite").parquet(s"$hashSetsDir/batch=$batchId")
+      keys.write(s5.select("__key").distinct(), batchId)
+      index.write(graft.ops.DedupOps.bandKeyIndex(s5, textCol, idCol, w, nBands, r), batchId)
+      sets.write(graft.ops.DedupOps.shingleHashSets(s5, textCol, idCol, w), batchId)
       def stage(df: DataFrame, i: Int, name: String): DataFrame =
         df.agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
@@ -617,6 +505,7 @@ object StreamingOps {
         .unionByName(stage(s5, 5, "budget"))
         .orderBy("stage")
       (report, s5.drop("__key"))
+    }
   }
 
   /** PRODUCTION ingest loop for the persisted IVF index —
@@ -630,20 +519,15 @@ object StreamingOps {
     * is no accept/reject verdict: ANN indexes every arrival; the match
     * report is the per-batch product (`onBatch(matches, batchId)`).
     *
-    * Layout contract (same as [[nearDupIngest]]): `listsDir` is
-    * hive-partitioned by micro-batch (`batch=<id>` subdirs, seed corpus
-    * at e.g. `batch=-1`); each batch OVERWRITES its own partition, so a
-    * retried micro-batch rewrites instead of double-appending, and the
-    * list read EXCLUDES the current batchId's partition so a replayed
-    * batch reports the same matches as the original attempt (the index
-    * content is idempotent either way — the assignments are a pure
-    * function of the batch — but without the exclusion the replay's
-    * match report would include the batch's own vectors). The
-    * within-partition layout further partitions by `cid`, keeping probe
-    * scans prunable to the probed lists. The centroid relation is fixed
-    * at seed time (re-train + re-index offline to re-center — standard
-    * IVF practice; the lists stay valid for the centroids they were
-    * assigned under). */
+    * `listsDir` is a [[graft.io.BatchArtifact]] whose partitions are
+    * further partitioned by `cid`, keeping probe scans prunable to the
+    * probed lists. The index content is idempotent under replay either
+    * way — the assignments are a pure function of the batch — but
+    * without the own-partition exclusion the replay's match report would
+    * include the batch's own vectors. The centroid relation is fixed at
+    * seed time (re-train + re-index offline to re-center — standard IVF
+    * practice; the lists stay valid for the centroids they were assigned
+    * under). */
   def ivfIngest(
       vecs: DataFrame, centroidsDir: String, listsDir: String,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
@@ -661,23 +545,17 @@ object StreamingOps {
       batch: DataFrame, batchId: Long, centroidsDir: String, listsDir: String,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       compactEvery: Int = 0): DataFrame = {
-    val spark = batch.sparkSession
-    // epoch fold preserves the inner cid partitioning (probe prunability)
-    maybeCompactArtifact(spark, listsDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("id"), partitionBy = Seq("cid"))
-    // the micro-batch feeds the match query and the index append
-    val b = batch.localCheckpoint()
-    val cents = spark.read.parquet(centroidsDir)
-    val matches = graft.ops.SimilarityOps.annIvfDelta(
-      b, cents,
-      // replay safety: never match against this batch's own partition
-      spark.read.parquet(listsDir).filter(col("batch") =!= batchId),
-      idCol, vecCol, k, nprobe)
-      .localCheckpoint()
-    graft.ops.SimilarityOps.ivfAssignments(b, idCol, vecCol, cents)
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$listsDir/batch=$batchId")
-    matches
+    // cid partitions keep probe scans prunable to the probed lists
+    val lists = BatchArtifact(listsDir, Seq("id"), Seq("cid"))
+    BatchArtifact.step(batch, batchId, compactEvery, lists) { b =>
+      val spark = b.sparkSession
+      val cents = spark.read.parquet(centroidsDir)
+      val matches = graft.ops.SimilarityOps.annIvfDelta(
+        b, cents, lists.readExcept(spark, batchId), idCol, vecCol, k, nprobe)
+        .localCheckpoint()
+      lists.write(graft.ops.SimilarityOps.ivfAssignments(b, idCol, vecCol, cents), batchId)
+      matches
+    }
   }
 
   /** PRODUCTION ingest loop for the persisted IVF-PQ index —
@@ -691,15 +569,13 @@ object StreamingOps {
     * index stays m small ints + a cell id per vector — the layout that
     * makes a billion-vector growing index storable.
     *
-    * Layout contract (same as [[ivfIngest]]): `codesDir` hive-partitions
-    * by micro-batch (`batch=<id>`, seed at e.g. `batch=-1`), each batch
-    * OVERWRITES its own partition so retries rewrite instead of
-    * double-appending, and the code read EXCLUDES the current batchId's
-    * partition so a replayed batch's ADC report matches the original
-    * attempt's; centroids AND codebooks are frozen at seed time
-    * (residual codes are only valid under the codebooks they were
-    * quantized with — re-train + re-encode offline to re-center, the
-    * same IVF practice as the raw-vector loop). */
+    * `codesDir` is a [[graft.io.BatchArtifact]] whose partitions are
+    * further partitioned by `ccell`; the own-partition exclusion keeps a
+    * replayed batch's ADC report equal to the original attempt's.
+    * Centroids AND codebooks are frozen at seed time (residual codes are
+    * only valid under the codebooks they were quantized with — re-train +
+    * re-encode offline to re-center, the same IVF practice as the
+    * raw-vector loop). */
   def ivfPqIngest(
       vecs: DataFrame, centroidsDir: String, codebooksDir: String, codesDir: String,
       idCol: String, vecCol: String, dim: Int, m: Int, k: Int, nprobe: Int,
@@ -719,55 +595,47 @@ object StreamingOps {
       centroidsDir: String, codebooksDir: String, codesDir: String,
       idCol: String, vecCol: String, dim: Int, m: Int, k: Int, nprobe: Int,
       compactEvery: Int = 0): DataFrame = {
-    val spark = batch.sparkSession
-    // epoch fold preserves the inner ccell partitioning (ADC prunability)
-    maybeCompactArtifact(spark, codesDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("id", "sub"), partitionBy = Seq("ccell"))
-    // the micro-batch feeds the ADC match query and the code append
-    val b = batch.localCheckpoint()
-    val cents = spark.read.parquet(centroidsDir)
-    val books = spark.read.parquet(codebooksDir)
-    val matches = graft.ops.SimilarityOps.ivfPqFromIndex(
-      b, cents, books,
-      // partition discovery infers the hive columns (ccell, batch) as
-      // INT; the inline index carries BIGINT ccell — cast explicitly so
-      // the ADC join never rides on implicit casts (and survives
-      // partition values past Int range)
-      spark.read.parquet(codesDir)
-        // replay safety: never match against this batch's own partition
-        .filter(col("batch") =!= batchId)
-        .select(col("id").cast("long").as("id"),
-          col("ccell").cast("long").as("ccell"),
-          col("sub").cast("int").as("sub"),
-          col("code").cast("long").as("code")),
-      idCol, vecCol, dim, m, k, nprobe)
-      .localCheckpoint()
-    graft.ops.SimilarityOps.ivfPqCodesFor(b, idCol, vecCol, cents, books, dim, m)
-      .write.mode("overwrite").partitionBy("ccell")
-      .parquet(s"$codesDir/batch=$batchId")
-    matches
+    // ccell partitions keep ADC scans prunable to the probed cells
+    val codes = BatchArtifact(codesDir, Seq("id", "sub"), Seq("ccell"))
+    BatchArtifact.step(batch, batchId, compactEvery, codes) { b =>
+      val spark = b.sparkSession
+      val cents = spark.read.parquet(centroidsDir)
+      val books = spark.read.parquet(codebooksDir)
+      val matches = graft.ops.SimilarityOps.ivfPqFromIndex(
+        b, cents, books,
+        // partition discovery infers the hive columns (ccell, batch) as
+        // INT; the inline index carries BIGINT ccell — cast explicitly so
+        // the ADC join never rides on implicit casts (and survives
+        // partition values past Int range)
+        codes.readExcept(spark, batchId)
+          .select(col("id").cast("long").as("id"),
+            col("ccell").cast("long").as("ccell"),
+            col("sub").cast("int").as("sub"),
+            col("code").cast("long").as("code")),
+        idCol, vecCol, dim, m, k, nprobe)
+        .localCheckpoint()
+      codes.write(graft.ops.SimilarityOps.ivfPqCodesFor(
+        b, idCol, vecCol, cents, books, dim, m), batchId)
+      matches
+    }
   }
 
   /** PRODUCTION ingest loop for the persisted BM25 index —
     * [[nearDupIngest]]'s retrieval sibling: a `foreachBatch` writer that
     * APPENDS each micro-batch's postings
     * ([[graft.ops.RetrievalOps.bm25Postings]]) and doc lengths
-    * ([[graft.ops.RetrievalOps.docLengths]]) as idempotent hive
-    * `batch=<id>` partitions, so
+    * ([[graft.ops.RetrievalOps.docLengths]]) as idempotent
+    * [[graft.io.BatchArtifact]] partitions, so
     * [[graft.ops.RetrievalOps.bm25FromIndex]] over the two directories
     * answers queries against everything ingested so far — the
     * build-incrementally/query-many search story. There is no
     * accept/reject verdict (an index wants every document);
     * `onBatch(batchId)` signals downstream that the index grew.
     *
-    * Layout contract (same as the near-dup loop): both dirs hive-partition
-    * by micro-batch, seed corpus at e.g. `batch=-1`; each batch OVERWRITES
-    * its own partition so a retried micro-batch rewrites instead of
-    * double-appending. Scoring reads the UNION of partitions, so df/avgdl
-    * always reflect the whole ingested corpus — bit-identical to a
-    * from-scratch build over the same docs (spec-pinned). Compact with
-    * [[graft.io.Sinks.compactBatches]] (sort postings on `term` so
-    * row-group stats prune query scans). */
+    * The batch body reads neither artifact. Scoring reads the UNION of
+    * partitions, so df/avgdl always reflect the whole ingested corpus —
+    * bit-identical to a from-scratch build over the same docs
+    * (spec-pinned). */
   def bm25Ingest(
       docs: DataFrame, postingsDir: String, dlDir: String,
       textCol: String, idCol: String,
@@ -785,17 +653,13 @@ object StreamingOps {
   private[graft] def bm25IngestBatch(
       batch: DataFrame, batchId: Long, postingsDir: String, dlDir: String,
       textCol: String, idCol: String, compactEvery: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    // sort postings on term so row-group stats prune query-term scans
-    maybeCompactArtifact(spark, postingsDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("term"))
-    maybeCompactArtifact(spark, dlDir, batchId, compactEvery,
-      numFiles = 4, sortCols = Seq("doc_id"))
-    val b = batch.localCheckpoint()
-    graft.ops.RetrievalOps.bm25Postings(b, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$postingsDir/batch=$batchId")
-    graft.ops.RetrievalOps.docLengths(b, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$dlDir/batch=$batchId")
+    // postings fold sorted on term so row-group stats prune query-term scans
+    val post = BatchArtifact(postingsDir, Seq("term"))
+    val dl = BatchArtifact(dlDir, Seq("doc_id"))
+    BatchArtifact.step(batch, batchId, compactEvery, post, dl) { b =>
+      post.write(graft.ops.RetrievalOps.bm25Postings(b, textCol, idCol), batchId)
+      dl.write(graft.ops.RetrievalOps.docLengths(b, textCol, idCol), batchId)
+    }
   }
 
   /** Stream-stream INTERVAL join: pair each `right`-stream event with the

@@ -423,8 +423,9 @@ class PlanSpec extends AnyFunSuite {
   test("the four global windows run over post-aggregation bounded-domain relations") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, countDistinct, datediff, max, min, to_date}
-    // These four ops deliberately use an UNPARTITIONED window (the
-    // WindowExec warnings in the test log) — safe ONLY because each
+    // These four ops deliberately use an UNPARTITIONED window (GraftSession
+    // silences WindowExec's "No Partition Defined" warning, so this test,
+    // not the log, is the bound on them) — safe ONLY because each
     // window's input is a post-aggregation calendar/bucket relation whose
     // row count is bounded by the DOMAIN (days in span, <=64 log2
     // buckets), never the fact table. Pin both halves so a future edit

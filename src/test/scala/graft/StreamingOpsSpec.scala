@@ -210,15 +210,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     def parts(): Set[String] = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).toSet
     val before = keys()
-    StreamingOps.maybeCompactArtifact(spark, dir, batchId = 2L, every = 2,
-      numFiles = 2, sortCols = Seq("wk"))
+    val art = graft.io.BatchArtifact(dir, sortCols = Seq("wk"))
+    art.fold(spark, batchId = 2L, every = 2)
     assert(parts() == Set("batch=-4"), s"fold must retire the source partitions: ${parts()}")
     assert(keys() == before, "the fold only reorganizes rows")
     // crash mid-retire: an un-deleted source partition reappears next to
     // the committed epoch — the replay resumes the retire step
     Seq("a1").toDF("wk").write.parquet(s"$dir/batch=0")
-    StreamingOps.maybeCompactArtifact(spark, dir, batchId = 2L, every = 2,
-      numFiles = 2, sortCols = Seq("wk"))
+    art.fold(spark, batchId = 2L, every = 2)
     assert(parts() == Set("batch=-4") && keys() == before,
       "replay must finish retiring without re-folding")
     // crash mid-stage: a partial dot-dir is invisible to discovery and
@@ -226,8 +225,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     Seq("c1").toDF("wk").write.parquet(s"$dir/batch=3")
     val tmp = new java.io.File(s"$dir/.compact_tmp_4"); tmp.mkdirs()
     java.nio.file.Files.writeString(tmp.toPath.resolve("garbage"), "not parquet")
-    StreamingOps.maybeCompactArtifact(spark, dir, batchId = 4L, every = 2,
-      numFiles = 2, sortCols = Seq("wk"))
+    art.fold(spark, batchId = 4L, every = 2)
     assert(parts() == Set("batch=-6"), s"second epoch folds the first + batch 3: ${parts()}")
     assert(keys() == (before :+ "c1").sorted && !tmp.exists())
     // r13 (r12 ADVICE): a crash AFTER the rename-commit leaves the
@@ -236,8 +234,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // permanent invisible garbage
     val tmpAfterCommit = new java.io.File(s"$dir/.compact_tmp_4")
     tmpAfterCommit.mkdirs()
-    StreamingOps.maybeCompactArtifact(spark, dir, batchId = 4L, every = 2,
-      numFiles = 2, sortCols = Seq("wk"))
+    art.fold(spark, batchId = 4L, every = 2)
     assert(!tmpAfterCommit.exists(),
       "skip branch must clear the post-commit staging leftover")
     // r13 (r12 ADVICE): a partition dir whose name is not a batch id
@@ -246,8 +243,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // NumberFormatException
     val stray = new java.io.File(s"$dir/batch=__HIVE_DEFAULT_PARTITION__")
     stray.mkdirs()
-    StreamingOps.maybeCompactArtifact(spark, dir, batchId = 4L, every = 2,
-      numFiles = 2, sortCols = Seq("wk"))
+    art.fold(spark, batchId = 4L, every = 2)
     assert(stray.exists(), "unparseable partition names survive untouched")
     assert(parts() == Set("batch=-6", "batch=__HIVE_DEFAULT_PARTITION__"))
     assert(keys() == (before :+ "c1").sorted)
@@ -402,6 +398,38 @@ class StreamingOpsSpec extends AnyFunSuite {
     // REPLAY: the lists now contain batch=0 (vec 10); without the
     // exclusion the replayed report would include it
     assert(run() == first, "replayed batch must not match its own appended vectors")
+    // the epoch fold over the inner cid partitioning: batch 2 compacts
+    // {-1, 0, 1} into batch=-4 and must report what an uncompacted twin
+    // reports, on the first attempt and on its replay
+    val twin = java.nio.file.Files.createTempDirectory("graft_ivftwin").toString
+    cents.write.parquet(s"$twin/centroids")
+    graft.ops.SimilarityOps.ivfAssignments(corpus, "vec_id", "embedding", cents)
+      .write.partitionBy("cid").parquet(s"$twin/lists/batch=-1")
+    def ingest(d: String, id: Long, row: (Long, Seq[Float]), every: Int): Seq[(Long, Long, Long)] =
+      StreamingOps.ivfIngestBatch(Seq(row).toDF("vec_id", "embedding"), id,
+        s"$d/centroids", s"$d/lists", "vec_id", "embedding", k = 5, nprobe = 2,
+        compactEvery = every)
+        .select("query_id", "neighbor_id", "rk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    ingest(twin, 0L, (10L, Seq(0.95f, 0.05f, 0f, 0f)), every = 0)
+    val b1 = (11L, Seq(0.1f, 0.9f, 0f, 0f))
+    val b2 = (12L, Seq(0.5f, 0.5f, 0f, 0f))
+    ingest(dir, 1L, b1, every = 2)
+    ingest(twin, 1L, b1, every = 0)
+    val compacted = ingest(dir, 2L, b2, every = 2)
+    val plain = ingest(twin, 2L, b2, every = 0)
+    def names(p: String): Set[String] =
+      new java.io.File(p).listFiles().map(_.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    assert(names(s"$dir/lists") == Set("batch=-4", "batch=2"),
+      s"the fold must retire every folded partition: ${names(s"$dir/lists")}")
+    val cids = names(s"$dir/lists/batch=-4")
+    assert(cids.nonEmpty && cids.forall(_.startsWith("cid=")),
+      s"the epoch must keep the cid partitioning: $cids")
+    assert(plain.map(_._2).toSet == Set(0L, 1L, 2L, 10L, 11L), s"twin report: $plain")
+    assert(compacted == plain, s"the fold changed the match report: $compacted vs $plain")
+    assert(ingest(dir, 2L, b2, every = 2) == plain,
+      "a compacting batch's replay must report what the uncompacted twin reports")
   }
 
   test("keyword pipeline runs unchanged on a stream (windowed counts)") {
