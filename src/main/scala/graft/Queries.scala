@@ -317,7 +317,7 @@ object Queries {
           .orderBy("bucket", "bin")
       },
       Some(graft.sql.SampleSql.packingProfile("documents", "doc_id",
-        tokenExpr = "len(list_filter(string_split_regex(trim(text), ' +'), x -> x <> ''))",
+        tokenExpr = s"len(${graft.sql.toks})",
         budget = 256L, nBuckets = 8))),
 
     ("q59_contamination",
@@ -825,7 +825,7 @@ GROUP BY segment ORDER BY segment""")),
           .orderBy("cum_tokens", "doc_id")
       },
       Some(graft.sql.SampleSql.budgetSample("documents", "doc_id",
-        "len(list_filter(string_split_regex(trim(text), ' +'), x -> x <> ''))",
+        s"len(${graft.sql.toks})",
         budget = 6000L))),
 
     ("q65_pattern_scrub",

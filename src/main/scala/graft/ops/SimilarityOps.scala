@@ -36,66 +36,149 @@ object SimilarityOps {
     graft.functions.VectorMath.cosineSim(a, b)
 
   // ---------------------------------------------------------------------
-  // SHUFFLE-FREE ARGMAX / TOP-N ASSIGNMENT (r14, guide §2.4). The
-  // family's historical shape for "rank a bounded centroid relation per
-  // row" was crossJoin(broadcast(cents)) + Window(partitionBy id) +
-  // rk = 1 / rk <= n — correct, but the window costs one full
-  // Exchange(id) + Sort of the n×k SCORED relation per use (per Lloyd
-  // iteration, per encode pass, per probe ranking), and under AQE every
-  // such exchange is an extra query-stage job (JobProfile r14: q124 ran
-  // 29 jobs at sf0.1, sub-second scheduling floor dominating). The
-  // centroid relation is BOUNDED by contract everywhere this pattern
-  // appears (k, ksub, ~n/coarseMod — all broadcast-sized already), so
-  // the rank can instead be computed per row over ONE collected array
-  // of (cid, cv) structs: argmax/argmin via array_max/array_min, top-n
-  // via sort_array + slice. Struct comparison IS the engine's sort
-  // order field by field (NaN greatest, same double total order as
-  // orderBy), ties past the score break on the cid field exactly like
-  // the windows' (score, cid) orderBy, and cids are distinct so the cv
-  // payload field is never compared — results are BIT-IDENTICAL to the
-  // window form (the per-pair 6-dp cosine / L2 kernels are unchanged).
-  // Plan effect: assignment/encode/probe ranking becomes a map-only
-  // projection over the scan; the only shuffles left in training are
-  // the per-(cluster, dim) mean aggregates.
+  // THE RANKING KIT. Every ranking decision of the vector-search family
+  // goes through one function here: [[rankCells]] (rows against a
+  // bounded cell relation), [[topK]] (per-key top-k), [[pqCodes]] (PQ
+  // encode) and [[codebookStep]] (one PQ codebook Lloyd update).
+  //
+  // Cell ranking is shuffle-free (r14). The centroid relation is bounded
+  // by contract wherever a row ranks cells (k, ksub, ~n/coarseMod, all
+  // broadcast-sized), so each row ranks ONE collected array of (cid, cv)
+  // structs: argmax/argmin via array_max/array_min, top-n via sort_array
+  // + slice. Struct comparison IS the engine's sort order field by field
+  // (NaN greatest, the same double total order as orderBy): ties past
+  // the score break on the cid field exactly like a window's (score,
+  // cid) orderBy, and cids are distinct, so the cv payload is never
+  // compared. Results are bit-identical to the crossJoin + Window(id) +
+  // rk form this replaced, without its Exchange(id) + Sort of the n×k
+  // scored relation per use (per Lloyd iteration, per encode pass, per
+  // probe ranking); assignment, encode and probe ranking are map-only
+  // projections over the scan, and the only shuffles left in training
+  // are the per-(cluster, dim) mean aggregates.
   // ---------------------------------------------------------------------
 
-  /** The WHOLE bounded centroid relation (cid, cv) as ONE row holding an
-    * array of (cid, cv) structs — the broadcast side of the shuffle-free
-    * assignment. Collection order is irrelevant: every consumer ranks by
-    * (score, cid) and cids are distinct. */
-  private def centArray(cents: DataFrame): DataFrame =
-    cents.agg(collect_list(struct(col("cid"), col("cv"))).as("__cents"))
+  /** What [[rankCells]] adds to each row. Cells rank by (ccos desc, cid
+    * asc) over the struct (ccos = 6-dp cosine, ncid = −cid, cv): the max
+    * struct is the best cell (max ncid = min cid on ties), and
+    * sort_array(…, asc = false) is the full rank order. */
+  private sealed trait CellRank
+  /** The best cell's id. */
+  private case object BestCid extends CellRank
+  /** The best cell's struct; its cv rides along for residuals. */
+  private case object BestCell extends CellRank
+  /** One row per cell of the best `n`, best first. */
+  private final case class TopCells(n: Int) extends CellRank
+  /** Every cell's struct, best first. */
+  private case object AllCells extends CellRank
 
-  /** Scored struct array over a `__cents` array for one row's vector
-    * `v`: (ccos = 6-dp cosine, ncid = −cid, cv). array_max of this IS
-    * the window's (ccos desc, cid asc) rk=1 row (max ncid = min cid on
-    * ties); sort_array(…, asc = false) of it IS the window's full rank
-    * order. cv rides along for consumers that need the winner's
-    * centroid (residuals); comparison never reaches it. */
-  private def cosScored(v: Column, cents: Column): Column =
-    transform(cents, c => struct(
-      cosine(v, c.getField("cv")).as("ccos"),
+  /** Ranks each row's vector column `v` against the bounded (cid, cv)
+    * relation `cents`, broadcast as ONE row holding the (cid, cv) struct
+    * array (collection order is irrelevant: cids are distinct). Returns
+    * `keep` plus the `rank` column named `as`. `nonEmpty` drops every row
+    * when `cents` is empty, as the crossJoin + window form did; a
+    * consumer that already drops those rows (an explode of an empty
+    * slice, a size filter) passes false. */
+  private def rankCells(
+      rows: DataFrame, v: String, cents: DataFrame, keep: Seq[Column],
+      rank: CellRank, as: String, nonEmpty: Boolean = true): DataFrame = {
+    val cells = rows.crossJoin(broadcast(
+      cents.agg(collect_list(struct(col("cid"), col("cv"))).as("__cents"))))
+    val scored = transform(col("__cents"), c => struct(
+      cosine(col(v), c.getField("cv")).as("ccos"),
       (-c.getField("cid")).as("ncid"),
       c.getField("cv").as("cv")))
+    val ranked = rank match {
+      case BestCid => -array_max(scored).getField("ncid")
+      case BestCell => array_max(scored)
+      case TopCells(n) => explode(slice(sort_array(scored, asc = false), 1, n))
+      case AllCells => sort_array(scored, asc = false)
+    }
+    (if (nonEmpty) cells.filter(size(col("__cents")) > 0) else cells)
+      .select(keep :+ ranked.as(as): _*)
+  }
 
-  /** Winning cell id of [[cosScored]]'s argmax. */
-  private def bestCid(v: Column, cents: Column): Column =
-    -array_max(cosScored(v, cents)).getField("ncid")
+  /** Per-`key` top-k: `rk` (long) numbers each key's rows by `order`,
+    * and rows past rank k drop. */
+  private def topK(df: DataFrame, key: String, k: Int, order: Column*): DataFrame =
+    df.withColumn("rk",
+        row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)).cast("long"))
+      .filter(col("rk") <= k)
 
-  /** Per-subspace codebooks (sub, cid, cv) as ONE row per sub holding
-    * the sub's (cid, cv) struct array — the broadcast side of
-    * shuffle-free per-(id, sub) encoding (the equi-join key stays
-    * `sub`). */
-  private def codebookArray(cb: DataFrame): DataFrame =
-    cb.groupBy(col("sub")).agg(collect_list(struct(col("cid"), col("cv"))).as("__cbs"))
+  /** Exact-cosine top-k per query over candidate rows (query_id, qv,
+    * neighbor_id, nv): (query_id, neighbor_id, cos, rk), cos desc with
+    * neighbor_id tiebreak, ordered by (query_id, rk). */
+  private def cosTopK(cand: DataFrame, k: Int): DataFrame =
+    topK(cand.select(col("query_id"), col("neighbor_id"),
+        cosine(col("qv"), col("nv")).as("cos")),
+      "query_id", k, col("cos").desc, col("neighbor_id").asc)
+      .orderBy(col("query_id"), col("rk"))
 
-  /** Winning code of the (d = 6-dp L2², cid) argmin over a sub's
-    * codebook array — array_min of the scored structs IS the encode
-    * window's (d asc, cid asc) rk=1 row. */
-  private def l2BestCid(sv: Column, cbs: Column): Column =
-    array_min(transform(cbs, c => struct(
-      l2sq(sv, c.getField("cv")).as("d"),
-      c.getField("cid").as("cid")))).getField("cid")
+  /** ADC top-k per query over code rows joined to their LUT entries
+    * (query_id, id, d_e6): self-pairs drop, the m per-sub distances sum
+    * exactly to adist_e6, and (query_id, neighbor_id, adist_e6, rk) ranks
+    * adist asc with neighbor_id tiebreak, ordered by (query_id, rk). */
+  private def adcTopK(scored: DataFrame, k: Int): DataFrame =
+    topK(scored.filter(col("query_id") =!= col("id"))
+        .groupBy(col("query_id"), col("id").as("neighbor_id"))
+        .agg(sum(col("d_e6")).as("adist_e6")),
+      "query_id", k, col("adist_e6").asc, col("neighbor_id").asc)
+      .orderBy(col("query_id"), col("rk"))
+
+  /** PQ encode: each (sub, sv) row of `subs` takes the code of its sub's
+    * nearest `codebooks` (sub, cid, cv) centroid, as `as` next to `keep`.
+    * The broadcast side is one row per sub holding the sub's (cid, cv)
+    * struct array; the array_min of the (d = 6-dp L2², cid) structs IS
+    * the (d asc, cid asc) rk=1 row. */
+  private def pqCodes(
+      subs: DataFrame, codebooks: DataFrame, keep: Seq[Column], as: String): DataFrame =
+    subs.join(broadcast(codebooks.groupBy(col("sub"))
+        .agg(collect_list(struct(col("cid"), col("cv"))).as("__cbs"))), "sub")
+      .select(keep :+ array_min(transform(col("__cbs"), c => struct(
+        l2sq(col("sv"), c.getField("cv")).as("d"),
+        c.getField("cid").as("cid")))).getField("cid").as(as): _*)
+
+  /** One PQ codebook Lloyd update over subvectors `subs` (sub, sv) and
+    * codebooks `cb` (sub, cid, cv): encode, then each code's
+    * decimal-exact per-dimension mean rounded to 6 dp. Returns (sub, cid,
+    * n_vecs, cv); a code no subvector picked drops out. */
+  private def codebookStep(subs: DataFrame, cb: DataFrame): DataFrame =
+    pqCodes(subs, cb, Seq(col("sub"), col("sv")), "cid")
+      .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("dim0", "x")))
+      .groupBy(col("sub"), col("cid"), col("dim0"))
+      .agg(
+        round(sum(col("x").cast("decimal(18,9)")).cast("double")
+          / count(lit(1)), 6).as("mu"),
+        count(lit(1)).as("n"))
+      .groupBy("sub", "cid")
+      .agg(
+        array_sort(collect_list(struct(col("dim0"), col("mu")))).as("pairs"),
+        max(col("n")).as("n_vecs"))
+      .select(col("sub"), col("cid"), col("n_vecs"),
+        transform(col("pairs"), p => p.getField("mu")).as("cv"))
+
+  /** Both directed edges (vec_id, neighbor_id, cos) of each undirected
+    * (vec_a, vec_b, cos) pair: an array of structs over bound attributes,
+    * so the explode duplicates no kernel work beyond the projection. */
+  private def mirrorEdges(pairs: DataFrame): DataFrame = pairs
+    .select(explode(array(
+      struct(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"), col("cos")),
+      struct(col("vec_b").as("vec_id"), col("vec_a").as("neighbor_id"), col("cos"))))
+      .as("e"))
+    .select(col("e.vec_id").as("vec_id"), col("e.neighbor_id").as("neighbor_id"),
+      col("e.cos").as("cos"))
+
+  /** Every unordered pair within each `cell` group of 2..`maxCell`
+    * members (`id`, `v`), with its cosine: (vec_a, vec_b, cos). Vectors
+    * ride the cell shuffle as struct payloads (PairsExplode orders by the
+    * unique long first field), so nothing joins back to the corpus. */
+  private def cellPairCos(
+      rows: DataFrame, cell: String, id: Column, v: Column, maxCell: Int): DataFrame =
+    rows.groupBy(cell)
+      .agg(collect_list(struct(id, v)).as("ms"))
+      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxCell)
+      .select(graft.functions.Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
+      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
+        cosine(col("a.v"), col("b.v")).as("cos"))
 
   /** Deterministic random hyperplanes: component d of plane p is
     * md5-derived, uniform in [-1, 1). Generated driver-side once; the same
@@ -124,15 +207,9 @@ object SimilarityOps {
       queryMod: Int, k: Int): DataFrame = {
     val queries = emb.filter(col(idCol) % queryMod === 0)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cand = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.crossJoin(broadcast(queries))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+    cosTopK(emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
+      .crossJoin(broadcast(queries))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** DIMENSION-TRUNCATED top-k ANN (the Matryoshka / MRL production
@@ -167,15 +244,9 @@ object SimilarityOps {
       lshBucket(col(vecCol), planes).as("bucket"))
     val queries = bucketed.filter(col("id") % queryMod === 0)
       .select(col("id").as("query_id"), col("v").as("qv"), col("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    bucketed.select(col("id").as("neighbor_id"), col("v").as("nv"), col("bucket"))
+    cosTopK(bucketed.select(col("id").as("neighbor_id"), col("v").as("nv"), col("bucket"))
       .join(broadcast(queries), "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** Multi-probe variant of [[annLsh]]: each query also probes the
@@ -195,15 +266,9 @@ object SimilarityOps {
         col("bucket").bitwiseXOR(lit(1L << p)))): _*)).as("bucket_probe")
     val queries = bucketed.filter(col("id") % queryMod === 0)
       .select(col("id").as("query_id"), col("v").as("qv"), probes)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    bucketed.select(col("id").as("neighbor_id"), col("v").as("nv"), col("bucket"))
+    cosTopK(bucketed.select(col("id").as("neighbor_id"), col("v").as("nv"), col("bucket"))
       .join(broadcast(queries), col("bucket") === col("bucket_probe"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs, LSH-bucketed: vectors sharing
@@ -267,16 +332,7 @@ object SimilarityOps {
   def semanticDedup(
       emb: DataFrame, idCol: String, vecCol: String,
       centroidMod: Int, minCos: Double, maxCell: Int = 1000): DataFrame = {
-    val cents = emb.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    // shuffle-free argmax assignment (see [[cosScored]]): bit-identical
-    // to the crossJoin+window rk=1 form it replaces, minus the
-    // Exchange(id)+Sort of the n×k scored relation
-    val assigned = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .select(col("id"), bestCid(col("v"), col("__cents")).as("cid"))
-    val cand = assigned
+    val cand = ivfAssignments(emb, idCol, vecCol, ivfCentroids(emb, idCol, vecCol, centroidMod))
       .groupBy("cid")
       .agg(collect_list(col("id")).as("ids"))
       .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxCell)
@@ -289,9 +345,9 @@ object SimilarityOps {
       .select(col("vec_a"), col("vec_b"), cosine(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= minCos)
     val keepers = pairs.groupBy("vec_b").agg(min(col("vec_a")).as("kept_by"))
-    keepers
-      .join(pairs, keepers("vec_b") === pairs("vec_b") && col("kept_by") === col("vec_a"))
-      .select(keepers("vec_b").as("vec_id"), col("kept_by"), e6(col("cos")).as("cos_e6"))
+    keepers.as("k")
+      .join(pairs.as("p"), col("k.vec_b") === col("p.vec_b") && col("kept_by") === col("vec_a"))
+      .select(col("k.vec_b").as("vec_id"), col("kept_by"), e6(col("cos")).as("cos_e6"))
       .orderBy("vec_id")
   }
 
@@ -320,42 +376,14 @@ object SimilarityOps {
   def knnGraph(
       emb: DataFrame, idCol: String, vecCol: String,
       centroidMod: Int, kNbrs: Int, maxCell: Int = 1000): DataFrame = {
-    val cents = emb.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    // shuffle-free argmax assignment (see [[cosScored]]): bit-identical
-    // to the crossJoin+window rk=1 form it replaces, minus the
-    // Exchange(id)+Sort of the n×k scored relation
-    val assigned = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .select(col("id"), col("v"), bestCid(col("v"), col("__cents")).as("cid"))
-    // vectors ride the cell shuffle as struct members (PairsExplode orders
-    // by the unique long first field) — no second join against the corpus.
+    val assigned = ivfAssignments(emb, idCol, vecCol,
+      ivfCentroids(emb, idCol, vecCol, centroidMod))
     // (r14, measured and REJECTED: an explicit-count respread before the
     // pair generator — the q160 fix — made q83/q128/q69 ~20-30% SLOWER
     // at sf0.1: the explosion's cosine is one fused codegen kernel, ~0.2s
     // single-task here, cheaper than the extra exchange's stage cost.)
-    val pairCos = assigned
-      .groupBy("cid")
-      .agg(collect_list(struct(col("id"), col("v"))).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxCell)
-      .select(graft.functions.Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
-      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
-        cosine(col("a.v"), col("b.v")).as("cos"))
-    // mirror each undirected pair into both directed edges: an array of
-    // structs over BOUND attributes (cos is already a plain column here),
-    // so the explode duplicates no kernel work beyond the projection
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    pairCos
-      .select(explode(array(
-        struct(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"), col("cos")),
-        struct(col("vec_b").as("vec_id"), col("vec_a").as("neighbor_id"), col("cos"))))
-        .as("e"))
-      .select(col("e.vec_id").as("vec_id"), col("e.neighbor_id").as("neighbor_id"),
-        col("e.cos").as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= kNbrs)
+    val pairCos = cellPairCos(assigned, "cid", col("id"), col("v"), maxCell)
+    topK(mirrorEdges(pairCos), "vec_id", kNbrs, col("cos").desc, col("neighbor_id").asc)
       .select(col("vec_id"), col("rk"), col("neighbor_id"), col("cos"))
       .orderBy("vec_id", "rk")
   }
@@ -423,13 +451,6 @@ object SimilarityOps {
     val kv = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
     val base = knnGraph(emb, idCol, vecCol, centroidMod, kNbrs, maxCell)
       .select(col("vec_id"), col("neighbor_id"), col("cos"))
-    def mirror(pairs: DataFrame): DataFrame = pairs
-      .select(explode(array(
-        struct(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"), col("cos")),
-        struct(col("vec_b").as("vec_id"), col("vec_a").as("neighbor_id"), col("cos"))))
-        .as("e"))
-      .select(col("e.vec_id").as("vec_id"), col("e.neighbor_id").as("neighbor_id"),
-        col("e.cos").as("cos"))
     // every edge is mirrored, so "has an edge" == "appears as vec_id"
     val connected = base.select(col("vec_id").as("id")).distinct()
     val isolated = kv.join(connected, Seq("id"), "left_anti")
@@ -441,18 +462,11 @@ object SimilarityOps {
     val (seedSrc, nb) =
       if (crossBuckets > 0) (kv, crossBuckets) else
         (isolated.unionByName(anchors), seedBuckets)
-    val seedEdges = seedSrc
+    val seedEdges = cellPairCos(seedSrc
       .withColumn("sb", pmod(conv(substring(
         md5(concat(lit("knnseed:"), col("id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"), lit(nb.toLong)))
-      .groupBy("sb").agg(collect_list(struct(col("id"), col("v"))).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxCell)
-      .select(graft.functions.Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
-      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
-        cosine(col("a.v"), col("b.v")).as("cos"))
-    val graph0 = base.unionByName(mirror(seedEdges))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
+        .cast("long"), lit(nb.toLong))), "sb", col("id"), col("v"), maxCell)
+    val graph0 = base.unionByName(mirrorEdges(seedEdges))
     // NN-descent local join, once per round: undirected adjacency
     // (out + in), neighbor vectors riding the center shuffle as struct
     // payloads; per-round top-k trim bounds graph growth (and state)
@@ -465,20 +479,14 @@ object SimilarityOps {
       val und = graph.select(col("vec_id"), col("neighbor_id"))
         .union(graph.select(col("neighbor_id"), col("vec_id")))
         .distinct()
-      val candPairs = und
-        .join(kv.select(col("id").as("neighbor_id"), col("v").as("nv")), Seq("neighbor_id"))
-        .groupBy("vec_id")
-        .agg(collect_list(struct(col("neighbor_id").as("id"), col("nv").as("v"))).as("ms"))
-        .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxCell)
-        .select(graft.functions.Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
-        .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
-          cosine(col("a.v"), col("b.v")).as("cos"))
+      val candPairs = cellPairCos(
+          und.join(kv.select(col("id").as("neighbor_id"), col("v").as("nv")), Seq("neighbor_id")),
+          "vec_id", col("neighbor_id").as("id"), col("nv").as("v"), maxCell)
         // the same pair can share several centers — dedup before the merge
         .distinct()
-      ranked = graph.unionByName(mirror(candPairs))
-        .groupBy("vec_id", "neighbor_id").agg(max(col("cos")).as("cos"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= kNbrs)
+      ranked = topK(graph.unionByName(mirrorEdges(candPairs))
+          .groupBy("vec_id", "neighbor_id").agg(max(col("cos")).as("cos")),
+        "vec_id", kNbrs, col("cos").desc, col("neighbor_id").asc)
       graph = ranked.select(col("vec_id"), col("neighbor_id"), col("cos"))
       if (round < rounds - 1) graph = graph.localCheckpoint()
     }
@@ -498,26 +506,13 @@ object SimilarityOps {
   def annIvf(
       emb: DataFrame, idCol: String, vecCol: String,
       centroidMod: Int, queryMod: Int, k: Int): DataFrame = {
-    val cents = emb.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    // shuffle-free argmax assignment (see [[cosScored]]): bit-identical
-    // to the crossJoin+window rk=1 form it replaces, minus the
-    // Exchange(id)+Sort of the n×k scored relation
-    val assigned = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .select(col("id"), col("v"), bestCid(col("v"), col("__cents")).as("cid"))
+    val assigned = ivfAssignments(emb, idCol, vecCol,
+      ivfCentroids(emb, idCol, vecCol, centroidMod))
     val queries = assigned.filter(col("id") % queryMod === 0)
       .select(col("id").as("query_id"), col("v").as("qv"), col("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    assigned.select(col("id").as("neighbor_id"), col("v").as("nv"), col("cid"))
+    cosTopK(assigned.select(col("id").as("neighbor_id"), col("v").as("nv"), col("cid"))
       .join(broadcast(queries), "cid")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** The k-sized centroid relation of a PERSISTED IVF index
@@ -538,12 +533,8 @@ object SimilarityOps {
     * `cid` and probe scans prune to the probed lists. */
   def ivfAssignments(
       emb: DataFrame, idCol: String, vecCol: String, centroids: DataFrame): DataFrame =
-    // shuffle-free argmax assignment (see [[cosScored]]): bit-identical
-    // to the crossJoin+window rk=1 form it replaces
-    emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(centroids.select(col("cid"), col("cv")))))
-      .filter(size(col("__cents")) > 0)
-      .select(col("id"), col("v"), bestCid(col("v"), col("__cents")).as("cid"))
+    rankCells(emb.select(col(idCol).as("id"), col(vecCol).as("v")), "v",
+      centroids.select(col("cid"), col("cv")), Seq(col("id"), col("v")), BestCid, "cid")
 
   /** INGEST-time ANN from the PERSISTED index artifacts: each arriving
     * vector ranks the broadcast centroid relation, probes its `nprobe`
@@ -561,23 +552,12 @@ object SimilarityOps {
   def annIvfDelta(
       newVecs: DataFrame, corpusCentroids: DataFrame, corpusAssignments: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    // shuffle-free top-nprobe probe ranking (see [[cosScored]]): the
-    // descending sort_array + slice + explode IS the window's
-    // crk <= nprobe row set, minus the Exchange(qid)+Sort
-    val probes = newVecs.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(centArray(corpusCentroids.select(col("cid"), col("cv")))))
-      .select(col("qid").as("query_id"), col("qv"),
-        explode(slice(sort_array(cosScored(col("qv"), col("__cents")), asc = false),
-          1, nprobe)).as("__p"))
+    val probes = rankCells(newVecs.select(col(idCol).as("qid"), col(vecCol).as("qv")), "qv",
+        corpusCentroids.select(col("cid"), col("cv")), Seq(col("qid").as("query_id"), col("qv")),
+        TopCells(nprobe), "__p", nonEmpty = false)
       .select(col("query_id"), col("qv"), (-col("__p.ncid")).as("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    corpusAssignments.select(col("id").as("neighbor_id"), col("v").as("nv"), col("cid"))
-      .join(broadcast(probes), "cid")
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+    cosTopK(corpusAssignments.select(col("id").as("neighbor_id"), col("v").as("nv"), col("cid"))
+      .join(broadcast(probes), "cid"), k)
   }
 
   /** Multi-probe IVF: like [[annIvf]] but each query probes its `nprobe`
@@ -590,32 +570,19 @@ object SimilarityOps {
   def annIvfMultiProbe(
       emb: DataFrame, idCol: String, vecCol: String,
       centroidMod: Int, queryMod: Int, k: Int, nprobe: Int): DataFrame = {
-    val cents = emb.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    // shuffle-free rank (see [[cosScored]]): one descending-sorted scored
-    // array per row serves BOTH the crk=1 assignment (element 1) and the
-    // query side's crk <= nprobe probes (slice + explode) — bit-identical
-    // to the shared window it replaces, minus the Exchange(id)+Sort
-    val ranked = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .select(col("id"), col("v"),
-        sort_array(cosScored(col("v"), col("__cents")), asc = false).as("__sc"))
+    // one descending cell array per row serves BOTH the assignment
+    // (element 1) and the query side's nprobe probes (slice + explode)
+    val ranked = rankCells(emb.select(col(idCol).as("id"), col(vecCol).as("v")), "v",
+      ivfCentroids(emb, idCol, vecCol, centroidMod), Seq(col("id"), col("v")), AllCells, "__sc")
     val assigned = ranked
       .select(col("id"), col("v"), (-col("__sc")(0).getField("ncid")).as("cid"))
     val queries = ranked.filter(col("id") % queryMod === 0)
       .select(col("id").as("query_id"), col("v").as("qv"),
         explode(slice(col("__sc"), 1, nprobe)).as("__p"))
       .select(col("query_id"), col("qv"), (-col("__p.ncid")).as("cid"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    assigned.select(col("id").as("neighbor_id"), col("v").as("nv"), col("cid"))
+    cosTopK(assigned.select(col("id").as("neighbor_id"), col("v").as("nv"), col("cid"))
       .join(broadcast(queries), "cid")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** IVF centroid TRAINING: fixed-iteration Lloyd k-means expressed
@@ -624,8 +591,8 @@ object SimilarityOps {
     *
     * Each iteration is two distributed steps:
     *  1. assign — corpus × broadcast(centroids) cosine, per-vector argmax
-    *     (window rn=1; ties on the 6-dp score break by centroid id, so both
-    *     engines agree);
+    *     ([[rankCells]]; ties on the 6-dp score break by centroid id, so
+    *     both engines agree);
     *  2. update — per-(cluster, dim) decimal-exact mean via posexplode
     *     (exact under any partial-agg order), re-assembled in dim order,
     *     rounded to 6 dp (the engine-wide cross-engine score contract).
@@ -669,13 +636,7 @@ object SimilarityOps {
     * of [[kmeansCentroids]] and [[kmeansCentroidsConverged]], factored so
     * the two training modes cannot drift. */
   private def lloydStep(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    // shuffle-free argmax assignment (see [[cosScored]]): bit-identical
-    // to the crossJoin+window rk=1 form it replaced, and the iteration
-    // no longer shuffles the n×k scored relation — each Lloyd round's
-    // only exchange is the per-(cluster, dim) mean aggregate below
-    val assigned = vecs.crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .select(col("v"), bestCid(col("v"), col("__cents")).as("cid"))
+    val assigned = rankCells(vecs, "v", cents, Seq(col("v")), BestCid, "cid")
     val perDim = assigned
       .select(col("cid"), posexplode(col("v")).as(Seq("dim0", "x")))
       .groupBy(col("cid"), (col("dim0") + 1).as("dim"))
@@ -834,15 +795,10 @@ object SimilarityOps {
     require(k >= 2, s"separation needs >= 2 centroids: $k")
     val cents = kmeansCentroids(emb, idCol, vecCol, k, iters)
       .select(col("cid"), col("centroid").as("cv"))
-    // shuffle-free per-point rank (see [[cosScored]]): the descending
-    // sorted scored array replaces the per-id collect_list aggregate —
-    // same (cos desc, cid asc) winner/runner-up, same 6-dp margin,
-    // minus the Exchange(id) the aggregate needed. (−ncid) recovers cid;
-    // margin = ccos₀ − ccos₁ ≡ the old nc₁ − nc₀.
-    emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .select(col("id"),
-        sort_array(cosScored(col("v"), col("__cents")), asc = false).as("a"))
+    // winner and runner-up are the first two ranked cells: (−ncid)
+    // recovers cid, margin = ccos₀ − ccos₁
+    rankCells(emb.select(col(idCol).as("id"), col(vecCol).as("v")), "v", cents,
+        Seq(col("id")), AllCells, "a", nonEmpty = false)
       .filter(size(col("a")) >= 2)
       .select((-col("a")(0).getField("ncid")).as("cid"),
         round(col("a")(0).getField("ccos") - col("a")(1).getField("ccos"), 6)
@@ -879,13 +835,8 @@ object SimilarityOps {
     val cents = kmeansCentroids(emb, vecIdCol, vecCol, k, iters)
       .select(col("cid"), col("centroid").as("cv"))
       .localCheckpoint()
-    // shuffle-free argmax assignment (see [[cosScored]]): bit-identical
-    // to the crossJoin+window rk=1 form it replaces
-    val assigned = emb
-      .select(col(vecIdCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .select(col("id"), bestCid(col("v"), col("__cents")).as("cid"))
+    val assigned = rankCells(emb.select(col(vecIdCol).as("id"), col(vecCol).as("v")), "v",
+      cents, Seq(col("id")), BestCid, "cid")
     val tf = assigned
       .join(docs.filter(col(textCol).isNotNull)
         .select(col(docIdCol).as("id"), col(textCol).as("__txt")), "id")
@@ -895,14 +846,11 @@ object SimilarityOps {
       .localCheckpoint()
     val cf = tf.groupBy("term").agg(count(lit(1)).as("df_cells"))
     val n = tf.select(countDistinct(col("cid")).as("n_cells"))
-    val w = Window.partitionBy(col("cid"))
-      .orderBy(col("score").desc, col("term").asc)
-    tf.join(cf, "term")
-      .crossJoin(broadcast(n))
-      .select(col("cid"), col("term"), col("tf"), col("df_cells"),
-        round((col("tf") * col("n_cells")).cast("double") / col("df_cells"), 6).as("score"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topN)
+    topK(tf.join(cf, "term")
+        .crossJoin(broadcast(n))
+        .select(col("cid"), col("term"), col("tf"), col("df_cells"),
+          round((col("tf") * col("n_cells")).cast("double") / col("df_cells"), 6).as("score")),
+      "cid", topN, col("score").desc, col("term").asc)
       .select(col("cid"), col("rk"), col("term"), col("tf"), col("df_cells"), col("score"))
       .orderBy("cid", "rk")
   }
@@ -948,27 +896,7 @@ object SimilarityOps {
       .select(col("sub"), col("id").as("cid"), col("sv").as("cv"))
     var out: DataFrame = null
     for (_ <- 0 until iters) {
-      // shuffle-free argmin assignment (see [[l2BestCid]]): bit-identical
-      // to the join+window rk=1 form it replaced, and the iteration no
-      // longer shuffles the (n·m)×ksub scored relation — each round's
-      // only exchange is the per-(sub, cid, dim) mean aggregate below
-      val assigned = subs.join(broadcast(codebookArray(cents)), "sub")
-        .select(col("sub"), col("sv"),
-          l2BestCid(col("sv"), col("__cbs")).as("cid"))
-      val perDim = assigned
-        .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("dim0", "x")))
-        .groupBy(col("sub"), col("cid"), col("dim0"))
-        .agg(
-          round(sum(col("x").cast("decimal(18,9)")).cast("double")
-            / count(lit(1)), 6).as("mu"),
-          count(lit(1)).as("n"))
-      out = perDim
-        .groupBy("sub", "cid")
-        .agg(
-          array_sort(collect_list(struct(col("dim0"), col("mu")))).as("pairs"),
-          max(col("n")).as("n_vecs"))
-        .select(col("sub"), col("cid"), col("n_vecs"),
-          transform(col("pairs"), p => p.getField("mu")).as("cv"))
+      out = codebookStep(subs, cents)
       cents = out.select(col("sub"), col("cid"), col("cv"))
     }
     out.orderBy("sub", "cid")
@@ -981,13 +909,8 @@ object SimilarityOps {
   def pqEncode(
       emb: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, dim: Int, m: Int): DataFrame = {
-    val subs = pqSubvectors(emb, idCol, vecCol, m, dim / m)
-    // shuffle-free argmin encode (see [[l2BestCid]]): bit-identical to
-    // the join+window rk=1 form it replaces — encoding is map-only
-    subs.join(broadcast(codebookArray(
-        codebooks.select(col("sub"), col("cid"), col("cv")))), "sub")
-      .select(col("id"), col("sub"),
-        l2BestCid(col("sv"), col("__cbs")).as("code"))
+    pqCodes(pqSubvectors(emb, idCol, vecCol, m, dim / m), codebooks,
+      Seq(col("id"), col("sub")), "code")
   }
 
   /** PQ top-k ANN by asymmetric distance (ADC): the approximate distance
@@ -1024,16 +947,8 @@ object SimilarityOps {
       .join(broadcast(codebooks.select(col("sub"), col("cid"), col("cv"))), "sub")
       .select(col("id").as("query_id"), col("sub"), col("cid"),
         e6(l2sq(col("sv"), col("cv"))).as("d_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist_e6").asc, col("neighbor_id").asc)
-    codes.join(broadcast(lut),
-        codes("sub") === lut("sub") && codes("code") === lut("cid"))
-      .filter(col("query_id") =!= col("id"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(sum(col("d_e6")).as("adist_e6"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+    adcTopK(codes.join(broadcast(lut),
+      codes("sub") === lut("sub") && codes("code") === lut("cid")), k)
   }
 
   /** IVF-PQ top-k ANN (Jégou et al., TPAMI 2011 §IV — "IVFADC"): the
@@ -1178,7 +1093,9 @@ object SimilarityOps {
     // n²/coarseMod assignment join) — at scale pass TRAINED fixed-k
     // centroids to [[ivfPqIndexWith]] instead ([[ivfPqKmeansAnn]] wires
     // [[kmeansCentroids]] in; its broadcast is O(k·dim) regardless of
-    // corpus size)
+    // corpus size). The centroid select is [[ivfCentroids]]' with the
+    // cast folded in: a cast selected over ivfCentroids would plan above
+    // the embeddings' round-robin exchange, its rename below it
     ivfPqIndexWith(emb, idCol, vecCol,
       emb.filter(col(idCol) % coarseMod === 0)
         .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv")),
@@ -1209,32 +1126,12 @@ object SimilarityOps {
       .select(col(idCol).as("id"))
     var cb = subs.join(broadcast(seedIds), "id")
       .select(col("sub"), col("id").as("cid"), col("sv").as("cv"))
-    for (_ <- 0 until iters) {
-      // shuffle-free argmin assignment (see [[l2BestCid]]): bit-identical
-      // to the join+window rk=1 form it replaced — each training round's
-      // only exchange is the per-(sub, cid, dim) mean aggregate below
-      val assignedCb = subs.join(broadcast(codebookArray(cb)), "sub")
-        .select(col("sub"), col("sv"),
-          l2BestCid(col("sv"), col("__cbs")).as("cid"))
-      val perDim = assignedCb
-        .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("dim0", "x")))
-        .groupBy(col("sub"), col("cid"), col("dim0"))
-        .agg(round(sum(col("x").cast("decimal(18,9)")).cast("double")
-          / count(lit(1)), 6).as("mu"))
-      cb = perDim
-        .groupBy("sub", "cid")
-        .agg(array_sort(collect_list(struct(col("dim0"), col("mu")))).as("pairs"))
-        .select(col("sub"), col("cid"),
-          transform(col("pairs"), p => p.getField("mu")).as("cv"))
-    }
+    for (_ <- 0 until iters)
+      cb = codebookStep(subs, cb).select(col("sub"), col("cid"), col("cv"))
     // materialize the trained codebooks once: encode + every probed-cell
     // LUT read them, and the training DAG must not re-run per consumer
     val codebooks = cb.localCheckpoint()
-    // shuffle-free argmin encode (see [[l2BestCid]]): map-only
-    val codes = subs.join(broadcast(codebookArray(codebooks)), "sub")
-      .select(col("id"), col("ccell"), col("sub"),
-        l2BestCid(col("sv"), col("__cbs")).as("code"))
-    (cents, codebooks, codes)
+    (cents, codebooks, pqCodes(subs, codebooks, Seq(col("id"), col("ccell"), col("sub")), "code"))
   }
 
   /** (id, ccell, sub, sv): nearest-coarse-cell assignment + residual,
@@ -1243,14 +1140,8 @@ object SimilarityOps {
   private def ivfPqResidualSubs(
       emb: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, m: Int, subLen: Int): DataFrame =
-    // shuffle-free argmax assignment (see [[cosScored]]; the winner's cv
-    // rides the argmax struct for the residual) — bit-identical to the
-    // crossJoin+window rk=1 form it replaces, and the whole
-    // assign+residual+split pass is now map-only
-    emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .crossJoin(broadcast(centArray(cents)))
-      .filter(size(col("__cents")) > 0)
-      .withColumn("__best", array_max(cosScored(col("v"), col("__cents"))))
+    rankCells(emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")), "v",
+        cents, Seq(col("id"), col("v")), BestCell, "__best")
       .select(col("id"), (-col("__best.ncid")).as("ccell"),
         zip_with(col("v"), col("__best.cv"), (x, c) => x - c).as("rv"))
       .select(col("id"), col("ccell"),
@@ -1272,13 +1163,8 @@ object SimilarityOps {
       cents: DataFrame, codebooks: DataFrame, dim: Int, m: Int): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val subLen = dim / m
-    val subs = ivfPqResidualSubs(vecs, idCol, vecCol,
-      cents.select(col("cid"), col("cv")), m, subLen)
-    // shuffle-free argmin encode (see [[l2BestCid]]): map-only
-    subs.join(broadcast(codebookArray(
-        codebooks.select(col("sub"), col("cid"), col("cv")))), "sub")
-      .select(col("id"), col("ccell"), col("sub"),
-        l2BestCid(col("sv"), col("__cbs")).as("code"))
+    pqCodes(ivfPqResidualSubs(vecs, idCol, vecCol, cents.select(col("cid"), col("cv")), m, subLen),
+      codebooks, Seq(col("id"), col("ccell"), col("sub")), "code")
   }
 
   /** ADC search from the PERSISTED IVF-PQ artifacts — [[annIvfDelta]]'s
@@ -1295,16 +1181,9 @@ object SimilarityOps {
     require(nprobe >= 1 && k >= 1, s"bad nprobe=$nprobe/k=$k")
     val subLen = dim / m
     // queries: rank coarse cells, keep nprobe, residual PER PROBED CELL
-    // — shuffle-free top-nprobe (see [[cosScored]]; the probed cell's cv
-    // rides the sorted structs for the residual): the descending
-    // sort_array + slice + explode IS the window's crk <= nprobe row
-    // set, minus the Exchange(qid)+Sort
-    val lut = queries
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-      .crossJoin(broadcast(centArray(cents)))
-      .select(col("qid").as("query_id"), col("qv"),
-        explode(slice(sort_array(cosScored(col("qv"), col("__cents")), asc = false),
-          1, nprobe)).as("__p"))
+    // (the probed cell's cv rides its ranked struct)
+    val lut = rankCells(queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")), "qv",
+        cents, Seq(col("qid").as("query_id"), col("qv")), TopCells(nprobe), "__p", nonEmpty = false)
       .select(col("query_id"), (-col("__p.ncid")).as("ccell"),
         zip_with(col("qv"), col("__p.cv"), (x, c) => x - c).as("qrv"))
       .select(col("query_id"), col("ccell"),
@@ -1314,17 +1193,9 @@ object SimilarityOps {
       .join(broadcast(codebooks.select(col("sub"), col("cid"), col("cv"))), "sub")
       .select(col("query_id"), col("ccell"), col("sub"), col("cid"),
         e6(l2sq(col("qsv"), col("cv"))).as("d_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist_e6").asc, col("neighbor_id").asc)
-    codes.join(broadcast(lut),
-        codes("ccell") === lut("ccell") && codes("sub") === lut("sub") &&
-          codes("code") === lut("cid"))
-      .filter(col("query_id") =!= col("id"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(sum(col("d_e6")).as("adist_e6"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+    adcTopK(codes.join(broadcast(lut),
+      codes("ccell") === lut("ccell") && codes("sub") === lut("sub") &&
+        codes("code") === lut("cid")), k)
   }
 
   /** IVF-PQ with EXACT RE-RANKING (the FAISS `IndexIVFPQ + RefineFlat`
@@ -1392,18 +1263,12 @@ object SimilarityOps {
   private def exactRefine(
       shortlist: DataFrame, emb: DataFrame, idCol: String, vecCol: String,
       queryMod: Int, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    shortlist
+    cosTopK(shortlist
       .select(col("query_id"), col("neighbor_id"))
       .join(emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
         "neighbor_id")
       .join(broadcast(emb.filter(col(idCol) % queryMod === 0)
-        .select(col(idCol).as("query_id"), col(vecCol).as("qv"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("query_id"), col("rk"))
+        .select(col(idCol).as("query_id"), col(vecCol).as("qv"))), "query_id"), k)
   }
 
   /** Per-label centroid profile: vector count and decimal-exact means of
@@ -1617,16 +1482,6 @@ object SimilarityOps {
           when(s === 0.0, lit(0L)).otherwise(
             greatest(lit(-127L), least(lit(127L), floor(x * lit(127.0) / s))))).as("q"))
 
-  /** SCALAR-QUANTIZED top-k ANN: calibrate ([[sqScales]]) + encode
-    * ([[sqEncode]]) + search by exact integer dot product over the int8
-    * codes — the compressed-corpus retrieval path that needs NO codebook
-    * training (PQ's cheaper sibling; at 100 TB the corpus is stored as
-    * dim bytes per vector instead of 4·dim, and the scan kernel is
-    * integer multiply-add). The query side (`idCol % queryMod == 0`) is
-    * broadcast with its codes; the corpus streams once; the per-query
-    * top-k window ranks by the BIGINT dot (exact, aggregation-order
-    * immune — scores cannot differ by a ulp between engines). Returns
-    * all-BIGINT (query_id, neighbor_id, dot_q, rk). */
   /** SQ8 RECONSTRUCTION-ERROR profile: per dimension, the exact
     * quantization error the [[sqEncode]] int8 codes carry —
     * `err_d = |x_d − code_d · s_d / 127|` at the 6-dp contract, reported
@@ -1663,6 +1518,16 @@ object SimilarityOps {
       .orderBy("dim")
   }
 
+  /** SCALAR-QUANTIZED top-k ANN: calibrate ([[sqScales]]) + encode
+    * ([[sqEncode]]) + search by exact integer dot product over the int8
+    * codes — the compressed-corpus retrieval path that needs NO codebook
+    * training (PQ's cheaper sibling; at 100 TB the corpus is stored as
+    * dim bytes per vector instead of 4·dim, and the scan kernel is
+    * integer multiply-add). The query side (`idCol % queryMod == 0`) is
+    * broadcast with its codes; the corpus streams once; the per-query
+    * top-k window ranks by the BIGINT dot (exact, aggregation-order
+    * immune — scores cannot differ by a ulp between engines). Returns
+    * all-BIGINT (query_id, neighbor_id, dot_q, rk). */
   def annScalarQuant(
       emb: DataFrame, idCol: String, vecCol: String,
       queryMod: Int, k: Int): DataFrame = {
@@ -1673,14 +1538,11 @@ object SimilarityOps {
       .select(col("id").as("query_id"), col("q").as("qq"))
     val dot = aggregate(
       zip_with(col("qq"), col("nq"), (a, b) => a * b), lit(0L), (acc, x) => acc + x)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot_q").desc, col("neighbor_id").asc)
-    codes.select(col("id").as("neighbor_id"), col("q").as("nq"))
-      .crossJoin(broadcast(queries))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot.as("dot_q"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topK(codes.select(col("id").as("neighbor_id"), col("q").as("nq"))
+        .crossJoin(broadcast(queries))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"), dot.as("dot_q")),
+      "query_id", k, col("dot_q").desc, col("neighbor_id").asc)
       .orderBy(col("query_id"), col("rk"))
   }
 

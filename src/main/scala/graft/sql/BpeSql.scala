@@ -7,8 +7,6 @@ package graft.sql
   * data-dependent per-round merge rewrite.) */
 object BpeSql {
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-
   /** Mirror of wordCounts → adjacentPairCounts → top `n`: per adjacent
     * character pair, the word-count-weighted occurrence total. */
   def topPairCounts(table: String, n: Int): String =

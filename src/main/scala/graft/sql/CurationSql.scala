@@ -8,8 +8,6 @@ package graft.sql
   * agreement of every stage. */
 object CurationSql {
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-
   def curationFunnel(
       table: String, stopwords: Seq[String],
       minTokens: Long, maxTokens: Long, minStops: Long,

@@ -12,10 +12,6 @@ object DedupSql {
   /** hash60: first 15 hex chars of md5 as a 60-bit BIGINT. */
   private def h(e: String): String = s"('0x' || substr(md5($e),1,15))::BIGINT"
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-  /** The catalog's whitespace-token SQL, shared with sibling mirrors. */
-  private[sql] def toksSql: String = toks
-
   private def shingleCte(
       w: Int, src: String = "toks", name: String = "sh", extra: String = ""): String = {
     val parts = (0 until w).map(o => s"tk[i+$o]").mkString(" || ' ' || ")

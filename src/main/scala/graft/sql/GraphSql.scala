@@ -92,7 +92,7 @@ SELECT node, label FROM l$rounds ORDER BY node""")
     * enumeration, closing-edge semi-join, corner redistribution. */
   def triangleCountsNearDup(table: String, w: Int, nBands: Int, r: Int,
       minJaccard: Double, limit: Int): String =
-    s"""WITH toks AS (SELECT doc_id AS id, ${DedupSql.toksSql} AS tk FROM $table WHERE text IS NOT NULL),
+    s"""WITH toks AS (SELECT doc_id AS id, $toks AS tk FROM $table WHERE text IS NOT NULL),
 ${DedupSql.minhashPairCtes("toks", w, nBands, r)},
 pr AS (SELECT doc_a, doc_b FROM v WHERE jaccard >= $minJaccard
   ORDER BY jaccard DESC, doc_a ASC, doc_b ASC LIMIT $limit),

@@ -6,8 +6,6 @@ package graft.sql
   * integer in both engines (float-sum-order immune). */
 object RetrievalSql {
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-
   /** Mirror of [[graft.ops.RetrievalOps.hybridSearch]]: document-derived
     * BM25 query terms (self excluded before ranking), brute-force cosine
     * semantic side, exact-integer RRF fusion over the full outer join of

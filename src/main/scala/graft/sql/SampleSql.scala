@@ -156,7 +156,7 @@ FROM k GROUP BY 1 ORDER BY 1"""
       .mkString(", ")
     s"""WITH w(g, w) AS (VALUES $wVals),
 a AS (SELECT $groupCol AS g,
-  SUM(len(list_filter(string_split_regex(trim(text), ' +'), x -> x <> ''))) AS avail
+  SUM(len($toks)) AS avail
   FROM $table WHERE text IS NOT NULL GROUP BY 1),
 p AS (SELECT w.g, w.w, COALESCE(a.avail, 0) AS avail,
   ($budgetTokens * w.w) // $wSum AS target
@@ -178,7 +178,7 @@ FROM p ORDER BY $groupCol"""
   def truncationWaste(
       table: String, groupCol: String, windows: Seq[Int]): String =
     s"""WITH t AS (SELECT $groupCol,
-    CAST(len(list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')) AS BIGINT) AS tok
+    CAST(len($toks) AS BIGINT) AS tok
   FROM $table WHERE text IS NOT NULL),
 e AS (SELECT $groupCol, tok, unnest([${windows.map(w => s"${w}::BIGINT").mkString(", ")}]) AS ctx_window FROM t),
 g AS (SELECT ctx_window, $groupCol, COUNT(*) AS n_docs, SUM(tok) AS n_tokens,

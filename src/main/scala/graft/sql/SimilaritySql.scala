@@ -316,13 +316,12 @@ FROM m GROUP BY cid ORDER BY cid"""
   def clusterTopics(
       embTable: String, docsTable: String,
       k: Int, iters: Int, dim: Int, topN: Int): String = {
-    val toks = "list_filter(string_split_regex(trim(d.text), ' +'), x -> x <> '')"
     kmeansCtePrefix(embTable, k, iters, dim) + s""",
 asg AS (SELECT id, cid FROM (
   SELECT e.id, c.cid,
     ROW_NUMBER() OVER (PARTITION BY e.id ORDER BY ${cosSql("e.v", "c.cv", dim)} DESC, c.cid ASC) AS rk
   FROM e, c$iters c) WHERE rk = 1),
-t AS (SELECT a.cid, unnest($toks) AS term
+t AS (SELECT a.cid, unnest(${toksOf("d.text")}) AS term
   FROM asg a JOIN $docsTable d ON d.doc_id = a.id WHERE d.text IS NOT NULL),
 tf AS (SELECT cid, term, COUNT(*) AS tf FROM t GROUP BY cid, term),
 cf AS (SELECT term, COUNT(*) AS df_cells FROM tf GROUP BY term),
@@ -665,7 +664,7 @@ FROM nv, tr, num, den"""
     val gram = (0 until w).map(o => s"tk[i+$o]").mkString(" || ' ' || ")
     s"""WITH samp AS (SELECT doc_id, text FROM $docsTable WHERE text IS NOT NULL
   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT $sampleN),
-t AS (SELECT doc_id AS id, ${DedupSql.toksSql} AS tk FROM samp),
+t AS (SELECT doc_id AS id, $toks AS tk FROM samp),
 sh AS (SELECT id, list_distinct(list_transform(range(1, len(tk) - ${w - 2}),
     i -> ('0x' || substr(md5($gram), 1, 7))::BIGINT)) AS hs
   FROM t WHERE len(tk) >= $w),

@@ -5,8 +5,6 @@ package graft.sql
   * reproducible cross-engine (see the op's scaladoc). */
 object SketchSql {
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-
   /** Mirror of [[graft.ops.SketchOps.cmsHeavyHitters]]: build the
     * depth × 16^hexChars sketch, probe it per distinct term, keep
     * est >= minEst. */

@@ -7,8 +7,6 @@ import graft.ops.TextAnalysisOps
   * the Spark plans use, so they cannot drift. */
 object TextAnalysisSql {
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-
   def langIdConfusion(table: String): String = {
     val profiles = TextAnalysisOps.langProfiles
       .map { case (lang, ms) => s"(${sq(lang)}, [${ms.map(sq).mkString(", ")}])" }

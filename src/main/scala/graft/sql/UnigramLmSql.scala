@@ -23,8 +23,6 @@ package graft.sql
   * round 2 went from >2 min to 70 ms). */
 object UnigramLmSql {
 
-  private val toks = DedupSql.toksSql
-
   /** cost(piece) = lnMicro(Σcnt) − lnMicro(cnt) over vocabulary CTE `v`
     * — the catalog's shared micro-ln convention. */
   private def costCte(v: String): String =

@@ -22,8 +22,6 @@ package graft.sql
   * subtree re-execution otherwise). */
 object WordPieceSql {
 
-  private val toks = "list_filter(string_split_regex(trim(text), ' +'), x -> x <> '')"
-
   /** The shared training unroll: word counts → `##` round-0
     * symbolization `s0` → per round r: `sc{r}` (symbol counts),
     * `p{r}` (pair counts), `b{r}` (the argmax merge), `rw{r}` (the

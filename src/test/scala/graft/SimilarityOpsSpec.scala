@@ -258,6 +258,34 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(again.toSeq == ann.toSeq, "memo hit diverged from the training call")
   }
 
+  test("pq: IVF-PQ over one all-zero coarse cell trains and encodes exactly like plain PQ") {
+    import spark.implicits._
+    // one zero centroid: every residual is the raw vector, and the lone
+    // cell wins every argmax (a one-element array_max, though the 0/0
+    // cosine is NaN) — so the residual trainer must reproduce
+    // pqTrainCodebooks + pqEncode row for row
+    def v(a: Float, b: Float) = Array(a, a, b, b)
+    val df = Seq(
+      (1L, v(1f, 8f)), (2L, v(1.1f, 8.1f)), (3L, v(5f, 2f)), (4L, v(5.1f, 2.1f)),
+      (5L, v(1.05f, 8.05f)), (6L, v(5.05f, 2.05f)))
+      .toDF("vec_id", "embedding")
+    val zero = Seq((0L, Array.fill(4)(0.0))).toDF("cid", "cv")
+    val (_, ivfBooks, ivfCodes) = SimilarityOps.ivfPqIndexWith(df, "vec_id", "embedding",
+      zero, dim = 4, m = 2, ksub = 2, iters = 2)
+    val books = SimilarityOps.pqTrainCodebooks(df, "vec_id", "embedding",
+      dim = 4, m = 2, ksub = 2, iters = 2)
+    def bookRows(d: org.apache.spark.sql.DataFrame) = d.select("sub", "cid", "cv").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))).sortBy(r => (r._1, r._2)).toSeq
+    def codeRows(d: org.apache.spark.sql.DataFrame) = d.select("id", "sub", "code").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    assert(bookRows(books).size == 4)
+    assert(bookRows(ivfBooks) == bookRows(books))
+    val plainCodes = codeRows(SimilarityOps.pqEncode(df, "vec_id", "embedding", books, 4, 2))
+    assert(plainCodes.size == 12)
+    assert(codeRows(ivfCodes) == plainCodes)
+    assert(ivfCodes.select("ccell").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
   test("ivf-pq: residual ADC ranks the true cluster first; refine equals brute force on the shortlist") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -401,12 +429,12 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(plan.contains("Broadcast"), "query set should be broadcast")
   }
 
-  test("semantic dedup drops later in-cell near-dups, attributed to the lowest-id keeper") {
+  /** centroidMod=3 -> centroids are ids 0 and 3: cell "x-axis" and cell
+    * "y-axis". 1 and 2 are near-dups of 0; 4 is a near-dup of 3; 5 sits in
+    * the x cell but below the threshold to everything earlier there. */
+  private def dedupFixture = {
     import spark.implicits._
-    // centroidMod=3 -> centroids are ids 0 and 3: cell "x-axis" and cell
-    // "y-axis". 1 and 2 are near-dups of 0; 4 is a near-dup of 3; 5 sits in
-    // the x cell but below the threshold to everything earlier there.
-    val df = Seq(
+    Seq(
       (0L, Array(1f, 0f)),
       (1L, Array(0.99f, 0.05f)),
       (2L, Array(0.98f, 0.08f)),
@@ -414,11 +442,32 @@ class SimilarityOpsSpec extends AnyFunSuite {
       (4L, Array(0.05f, 0.99f)),
       (5L, Array(0.75f, 0.66f)))
       .toDF("vec_id", "embedding")
-    val rows = SimilarityOps.semanticDedup(df, "vec_id", "embedding",
+  }
+
+  test("semantic dedup drops later in-cell near-dups, attributed to the lowest-id keeper") {
+    val rows = SimilarityOps.semanticDedup(dedupFixture, "vec_id", "embedding",
       centroidMod = 3, minCos = 0.99)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rows == Map(1L -> 0L, 2L -> 0L, 4L -> 3L),
       s"dropped->keeper attribution wrong: $rows")
+  }
+
+  test("semantic dedup rows do not depend on self-join ambiguity resolution") {
+    // the keeper join reads `pairs` twice; its result must not rest on the
+    // analyzer rewriting an ambiguous self-join condition
+    def run() = SimilarityOps.semanticDedup(dedupFixture, "vec_id", "embedding",
+      centroidMod = 3, minCos = 0.99)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val default = run()
+    val key = "spark.sql.selfJoinAutoResolveAmbiguity"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val unresolved =
+      try run()
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(default.map(_._1) == Seq(1L, 2L, 4L), s"default run wrong: $default")
+    assert(unresolved.length == default.length, s"row count differs: $unresolved")
+    assert(unresolved == default)
   }
 
   test("semantic dedup equals brute-force within-cell filtering and respects maxCell") {
