@@ -56,6 +56,10 @@ object GraftSession {
       })
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.ts may be INT64 TIMESTAMP(NANOS); read it as raw longs
+      // (graft.io.Tables.events converts them), set once per session
+      // rather than from inside a query
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import graft.io.Tables
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -18,7 +19,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * query-function call) from the **action** phase (the noop write), each
   * with its driver time outside jobs. `--plan` writes the warm-up build's
   * formatted explain, before it executes, to `<outDir>/<query>.txt`;
-  * `passes = 0` writes plans only. */
+  * `passes = 0` writes plans only. Each job table carries the pass's
+  * table-registry hits and misses; the run ends with the registry's
+  * session totals (a miss is one table resolution, i.e. one schema job). */
 object Probe {
 
   /** Tags each job with its phase; jobs Spark submits from its own threads
@@ -43,8 +46,11 @@ object Probe {
       (startMs until endMs).count(t => !jobs.exists(j => j.startMs <= t && t < j.endMs)) / 1e3
   }
 
-  /** One profiled pass; `jobs` is every job the listener saw during it. */
-  final case class Pass(build: Phase, action: Phase, jobs: Seq[Job]) {
+  /** One profiled pass; `jobs` is every job the listener saw during it,
+    * `tableHits`/`tableMisses` its table-registry lookups
+    * ([[Tables.registry]]). */
+  final case class Pass(build: Phase, action: Phase, jobs: Seq[Job],
+      tableHits: Long, tableMisses: Long) {
     def seconds: Double = (action.endMs - build.startMs) / 1e3
   }
 
@@ -85,6 +91,8 @@ object Probe {
     val sc = spark.sparkContext
     val listener = new JobListener
     sc.addSparkListener(listener)
+    val reg = Tables.registry
+    val (hits0, misses0) = (reg.hits, reg.misses)
     try {
       sc.setLocalProperty(PhaseKey, "build")
       val t0 = System.currentTimeMillis()
@@ -96,7 +104,8 @@ object Probe {
       GraftSqlBridge.drainListenerBus(sc)
       val jobs = listener.jobs
       Pass(Phase("build", t0, t1, jobs.filter(_.phase == "build")),
-        Phase("action", t1, t2, jobs.filter(_.phase == "action")), jobs)
+        Phase("action", t1, t2, jobs.filter(_.phase == "action")), jobs,
+        reg.hits - hits0, reg.misses - misses0)
     } finally {
       sc.setLocalProperty(PhaseKey, null)
       sc.removeSparkListener(listener)
@@ -142,7 +151,8 @@ object Probe {
         val (last, min) = (runs.last, runs.map(_.seconds).min)
         println(f"[probe] $name min: $min%.3f s")
         println(s"[probe] $name last pass: jobs=${last.jobs.size} (build ${last.build.jobs.size}, " +
-          s"action ${last.action.jobs.size}, untagged ${last.jobs.count(_.phase == null)})")
+          s"action ${last.action.jobs.size}, untagged ${last.jobs.count(_.phase == null)})  " +
+          s"table registry: hits=${last.tableHits} misses=${last.tableMisses}")
         Seq(last.build, last.action).foreach { ph =>
           println(f"[probe]   ${ph.name}%-6s ${ph.seconds}%7.3f s  jobs=${ph.jobs.size}%3d  " +
             f"jobSum=${ph.jobs.map(_.seconds).sum}%.3f s  driver outside jobs=${ph.driverSeconds}%.3f s")
@@ -155,6 +165,8 @@ object Probe {
       }
     }
     if (passes > 0) println(f"[probe] TOTAL ${minima.sum}%8.3f s over ${names.length} queries")
+    val reg = Tables.registry
+    println(s"[probe] table registry: entries=${reg.size} hits=${reg.hits} misses=${reg.misses}")
     spark.stop()
   }
 }

@@ -1,12 +1,28 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+
+import graft.ops.ArtifactCache
 
 /** Parquet table loader over a scale-factor directory
   * (`/root/testdata/sf{N}/<name>.parquet` — see /root/repo/TESTDATA.md).
   *
-  * Scale note: plain `spark.read.parquet` keeps Catalyst's column pruning and
-  * predicate pushdown intact — downstream `select`/`filter` reach the scan as
+  * Table registry: a session resolves each parquet table ONCE — the file
+  * listing and the schema-inference job of `spark.read.parquet` — and
+  * every later load hands out a fresh instance of that relation (new
+  * attribute ids, so self-joins resolve), which runs no job. An entry is
+  * keyed on the session, the table path, the session's explicitly set
+  * parquet and file-split confs (`spark.sql.legacy.parquet.nanosAsLong`
+  * among them), and the sorted listing of the table's data files (path,
+  * length, mtime; `_`/`.` names skipped, as Spark skips them). Any append,
+  * overwrite or compaction changes the listing, so the table re-resolves,
+  * and the path's entries under older listings are dropped. The registry
+  * holds plans and file indexes, never data blocks.
+  *
+  * Scale note: a fresh relation instance is the same plan node a plain
+  * `spark.read.parquet` yields, so Catalyst's column pruning and predicate
+  * pushdown stay intact — downstream `select`/`filter` reach the scan as
   * `ReadSchema`/`PushedFilters`. Never pre-`.cache()` here; callers decide
   * what is worth persisting.
   *
@@ -17,7 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * below the session's core count (the local single-file case). On a real
   * multi-file/multi-row-group dataset the condition is false and no shuffle
   * is added; filters and pruning push through the `Repartition` node either
-  * way.
+  * way. The split count is planned once per registry entry.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -41,13 +57,70 @@ object Tables {
     * outside tests. */
   private val testRepartitionKey = "graft.test.repartition"
 
+  /** One resolved parquet relation of the registry. */
+  private[graft] final class Registered(resolved: DataFrame) {
+    def rows: DataFrame = GraftSqlBridge.freshInstance(resolved)
+    /** The scan's split count, planned on first use (no job). */
+    lazy val splits: Int = rows.rdd.getNumPartitions
+  }
+
+  /** The session table registry; see the object doc. */
+  private[graft] val registry = new ArtifactCache[Registered]
+
+  /** Confs that change what resolving a relation yields: its inferred
+    * schema (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`) or its
+    * split count (`spark.sql.files.*`). */
+  private val relationConfPrefixes =
+    Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.files.")
+
+  /** The registry entry of the parquet table at `path` in `spark`,
+    * resolved on a miss. A path that cannot be listed (missing, a glob)
+    * is read plainly, so Spark reports it as it always has. */
+  private[graft] def resolve(
+      reg: ArtifactCache[Registered], spark: SparkSession, path: String): Registered = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val table = fs.makeQualified(root)
+    val listing =
+      try Some(dataFiles(fs, table))
+      catch { case _: java.io.FileNotFoundException => None }
+    listing.fold(new Registered(spark.read.parquet(path))) { files =>
+      val confs = spark.conf.getAll.toSeq
+        .filter { case (k, _) => relationConfPrefixes.exists(k.startsWith) }.sorted
+      val name = table.toString
+      reg.evict(spark) {
+        case (`name`, _, older) => older != files
+        case _ => false
+      }
+      reg.cached(spark, (name, confs, files))(new Registered(spark.read.parquet(path)))
+    }
+  }
+
+  /** Sorted (path, length, mtime) of the data files under `table`,
+    * skipping every `_`/`.` file or directory below it. Plain
+    * `FileStatus` listings, not `listFiles`: a `LocatedFileStatus` loads
+    * each local file's permissions, a shell call per file without the
+    * native Hadoop library. */
+  private def dataFiles(fs: FileSystem, table: Path): Seq[(String, Long, Long)] = {
+    def walk(f: FileStatus): Seq[(String, Long, Long)] =
+      if (f.isDirectory) fs.listStatus(f.getPath).toSeq
+        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+        .flatMap(walk)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    walk(fs.getFileStatus(table)).sorted
+  }
+
+  /** The parquet table at `path`, through the session table registry. */
+  def parquet(spark: SparkSession, path: String): DataFrame = resolve(registry, spark, path).rows
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val table = resolve(registry, spark, s"$sfDir/$name.parquet")
+    val df = table.rows
     val testParts = spark.conf.get(testRepartitionKey, "0").toInt
     if (testParts > 0)
       return df.repartition(testParts, df.columns.map(org.apache.spark.sql.functions.col): _*)
     val cores = spark.sparkContext.defaultParallelism
-    if (computeHeavy.contains(name) && df.rdd.getNumPartitions < cores)
+    if (computeHeavy.contains(name) && table.splits < cores)
       df.repartition(cores)
     else df
   }
@@ -74,15 +147,24 @@ object Tables {
     }
   }
 
+  /** Reads INT64 TIMESTAMP(NANOS) as raw longs. [[graft.GraftSession]]
+    * sets it; a session built elsewhere gets it on its first events read. */
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private def readNanosAsLong(spark: SparkSession): Unit =
+    if (!spark.conf.get(nanosAsLong, "false").equalsIgnoreCase("true"))
+      spark.conf.set(nanosAsLong, "true")
+
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(spark)
     adaptTs(load(spark, sfDir, "events"))
   }
   /** Streaming view of an events-shaped parquet DIRECTORY: same
     * timestamp-layout handling as [[events]], via `readStream` (new files
-    * appearing in the directory become new micro-batches). */
+    * appearing in the directory become new micro-batches). The directory
+    * changes every batch, so its schema is a plain read, not a registry
+    * entry. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(spark)
     val schema = spark.read.parquet(dir).schema
     adaptTs(spark.readStream.schema(schema).parquet(dir))
   }

@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `params` is a tuple of every build parameter (not a joined
   *     string — no delimiter collisions), so differing knobs never
   *     collide;
-  *   - `hits` counts lookups that found an entry.
+  *   - `hits` counts lookups that found an entry, `misses` those that
+  *     built one.
   *
   * Builds run OUTSIDE the map's bin lock, through a per-key lazy cell:
   * a build (seconds of Spark jobs) blocks only callers of its own key,
@@ -38,23 +39,39 @@ private[graft] class ArtifactCache[V] {
 
   private val cells = new ConcurrentHashMap[(SparkSession, Any), Cell]()
   private val hitCount = new AtomicLong(0)
+  private val missCount = new AtomicLong(0)
 
   /** Lookups that found an entry (built, or being built by another caller). */
   def hits: Long = hitCount.get()
 
+  /** Lookups that found no entry and built one (or failed to). */
+  def misses: Long = missCount.get()
+
+  /** Entries held, across all live sessions. */
+  def size: Int = cells.size
+
   protected def stopped(spark: SparkSession): Boolean = spark.sparkContext.isStopped
 
-  def apply(content: DataFrame, params: Any)(build: => V): V = {
-    cells.keySet.removeIf(key => stopped(key._1))
-    val key = (content.sparkSession, (ArtifactCache.fingerprint(content), params))
+  def apply(content: DataFrame, params: Any)(build: => V): V =
+    cached(content.sparkSession, (ArtifactCache.fingerprint(content), params))(build)
+
+  /** [[apply]] under a key the caller computed: `key` must carry every
+    * input the value depends on besides the session, content included. */
+  def cached(spark: SparkSession, key: Any)(build: => V): V = {
+    cells.keySet.removeIf(k => stopped(k._1))
+    val k = (spark, key)
     val fresh = new Cell(() => build)
-    val cell = cells.putIfAbsent(key, fresh) match {
-      case null => fresh
+    val cell = cells.putIfAbsent(k, fresh) match {
+      case null => missCount.incrementAndGet(); fresh
       case prev => hitCount.incrementAndGet(); prev
     }
     try cell.value
-    catch { case e: Throwable => cells.remove(key, cell); throw e }
+    catch { case e: Throwable => cells.remove(k, cell); throw e }
   }
+
+  /** Drops the entries of `spark` whose [[cached]] key is `stale`. */
+  def evict(spark: SparkSession)(stale: Any => Boolean): Unit =
+    cells.keySet.removeIf(k => (k._1 eq spark) && stale(k._2))
 }
 
 private[graft] object ArtifactCache {

@@ -92,9 +92,10 @@ object GraphOps {
       .sortWithinPartitions(col("src"), col("dst"))
       .write.mode("overwrite").parquet(path)
 
-  /** Load a persisted [[symmetricEdges]] artifact. */
+  /** Load a persisted [[symmetricEdges]] artifact, resolved once per
+    * session through the table registry ([[graft.io.Tables.parquet]]). */
   def readEdges(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("src"), col("dst"))
+    graft.io.Tables.parquet(spark, path).select(col("src"), col("dst"))
 
   /** PAGERANK over the undirected graph induced by a pair relation —
     * each input pair contributes both directed edges, so every node has

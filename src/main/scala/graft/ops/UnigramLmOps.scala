@@ -251,9 +251,10 @@ object UnigramLmOps {
     vocab.select(col("piece"), col("cnt"), col("cost_micro"))
       .coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Load a persisted vocabulary artifact. */
+  /** Load a persisted vocabulary artifact, resolved once per session
+    * through the table registry ([[graft.io.Tables.parquet]]). */
   def readVocab(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("piece"), col("cnt"), col("cost_micro"))
+    graft.io.Tables.parquet(spark, path).select(col("piece"), col("cnt"), col("cost_micro"))
 
   private val vocabMemo = new ArtifactCache[String]
 

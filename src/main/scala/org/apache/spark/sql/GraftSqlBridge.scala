@@ -23,6 +23,17 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(id, info, builder)
 
+  /** A fresh instance of `resolved`'s relation, as a DataFrame: the same
+    * schema and file index under new attribute ids, so two instances can
+    * be self-joined. Analyzing it lists and infers nothing, so it runs no
+    * job. `resolved` must be a relation read, e.g. `spark.read.parquet`. */
+  def freshInstance(resolved: DataFrame): DataFrame =
+    resolved.queryExecution.analyzed match {
+      case r: catalyst.analysis.MultiInstanceRelation =>
+        classic.Dataset.ofRows(resolved.sparkSession.asInstanceOf[classic.SparkSession], r.newInstance())
+      case p => throw new IllegalArgumentException(s"not a relation read: ${p.nodeName}")
+    }
+
   /** Waits until every posted listener event is delivered (the bus is `private[spark]`). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

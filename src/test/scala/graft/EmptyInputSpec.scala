@@ -18,9 +18,6 @@ class EmptyInputSpec extends AnyFunSuite {
 
   private lazy val emptyDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
-    // events needs its nanos conf before a raw read (set by Tables.events;
-    // set here too so table order cannot matter)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.io.Tables.names.foreach { n =>
       spark.read.parquet(s"$sf/$n.parquet").limit(0)
         .write.mode("overwrite").parquet(s"$dir/$n.parquet")

@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
-import graft.io.{CsvRepair, JdbcSource, Sinks}
+import java.nio.file.{Files, Path, Paths}
+import graft.io.{CsvRepair, JdbcSource, Sinks, Tables}
+import graft.ops.ArtifactCache
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -194,6 +197,86 @@ class IoSpec extends AnyFunSuite {
     val conf = graft.io.EnvConfig.load("/nonexistent/.env", env = Map("DB_USER" -> "u"))
     assert(conf == Map("DB_USER" -> "u"))
     assert(graft.io.EnvConfig.jdbcConfig(conf).isEmpty)
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** A copy of sf0.001's orders as a one-part table directory. */
+  private def ordersDir(): Path = {
+    val table = Files.createDirectories(
+      Files.createTempDirectory("graft_registry").resolve("orders.parquet"))
+    Files.copy(Paths.get(s"$sf/orders.parquet"), table.resolve("part-00000.parquet"))
+    table
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("table registry: a hit returns the same rows as a miss") {
+    val reg = new ArtifactCache[Tables.Registered]
+    val table = ordersDir().toString
+    val miss = Tables.resolve(reg, spark, table).rows
+    assert(reg.misses == 1 && reg.hits == 0)
+    val hit = Tables.resolve(reg, spark, table).rows
+    assert(reg.misses == 1 && reg.hits == 1)
+    assert(hit.schema == miss.schema)
+    assert(sortedRows(hit) == sortedRows(miss))
+    assert(sortedRows(hit) == sortedRows(spark.read.parquet(table)))
+  }
+
+  test("table registry: appending a part file re-resolves the table and shows the new rows") {
+    val reg = new ArtifactCache[Tables.Registered]
+    val table = ordersDir()
+    val before = Tables.resolve(reg, spark, table.toString).rows.count()
+    Files.copy(table.resolve("part-00000.parquet"), table.resolve("part-00001.parquet"))
+    assert(Tables.resolve(reg, spark, table.toString).rows.count() == 2 * before)
+    // the older listing's entry is dropped
+    assert(reg.misses == 2 && reg.size == 1)
+    // `_`/`.` files are not data: they leave the listing unchanged
+    Files.writeString(table.resolve("_SUCCESS"), "")
+    Files.writeString(table.resolve(".part-00001.parquet.crc"), "")
+    assert(Tables.resolve(reg, spark, table.toString).rows.count() == 2 * before)
+    assert(reg.misses == 2 && reg.hits == 1)
+  }
+
+  test("table registry: a self-join of two loads equals the join over two plain reads") {
+    def selfJoin(a: DataFrame, b: DataFrame): DataFrame =
+      a.join(b, a("o_custkey") === b("o_custkey") && a("o_orderkey") < b("o_orderkey"))
+        .select(a("o_orderkey"), b("o_orderkey"))
+    val hits = Tables.registry.hits
+    val loaded = selfJoin(Tables.orders(spark, sf), Tables.orders(spark, sf))
+    assert(Tables.registry.hits > hits)
+    val plain = selfJoin(
+      spark.read.parquet(s"$sf/orders.parquet"), spark.read.parquet(s"$sf/orders.parquet"))
+    val rows = sortedRows(plain)
+    assert(rows.nonEmpty)
+    assert(sortedRows(loaded) == rows)
+  }
+
+  test("table registry: graft.test.repartition still applies on a hit") {
+    val unhooked = Tables.orders(spark, sf)
+    val hits = Tables.registry.hits
+    spark.conf.set("graft.test.repartition", "3")
+    val hooked = try Tables.orders(spark, sf) finally spark.conf.unset("graft.test.repartition")
+    assert(Tables.registry.hits == hits + 1)
+    assert(hooked.queryExecution.logical.collectFirst {
+      case r: RepartitionByExpression => r.numPartitions
+    }.contains(3))
+    assert(sortedRows(hooked) == sortedRows(unhooked))
+  }
+
+  test("table registry: a stopped session's entries are swept") {
+    val other = spark.newSession()
+    var otherStopped = false
+    val reg = new ArtifactCache[Tables.Registered] {
+      override protected def stopped(s: SparkSession): Boolean = otherStopped && (s eq other)
+    }
+    val table = s"$sf/orders.parquet"
+    Tables.resolve(reg, other, table)
+    Tables.resolve(reg, spark, table)
+    assert(reg.size == 2 && reg.misses == 2) // one entry per session
+    otherStopped = true
+    Tables.resolve(reg, spark, table)
+    assert(reg.size == 1 && reg.hits == 1)
   }
 
   test("compactBatches: epoch rewrite keeps screen verdicts bit-identical and shrinks files") {

@@ -7,7 +7,8 @@ comparing, every run-dependent token is masked:
   - `plan_id=` counters,
   - RDD ids (`MapPartitionsRDD[25]` -> `MapPartitionsRDD[]`),
   - call-site line numbers (`SimilarityOps.scala:1019` -> `SimilarityOps.scala:N`),
-  - JVM identity hashes of inlined literals (`[[D@1f1b69bb` -> `[[D@`).
+  - JVM identity hashes of inlined literals (`[[D@1f1b69bb` -> `[[D@`),
+  - JVM lambda class names (`Ops$$$Lambda$7569/0x00007fcb...` -> `Ops$$$Lambda`).
 What is left is the plan's shape, operators, expressions and aliases,
 so two runs of the same code compare equal and a refactor that keeps
 every plan reports no difference.
@@ -29,6 +30,7 @@ MASKS = [
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
     (re.compile(r"(?<=[\w;\[])@[0-9a-f]+\b"), "@"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda"),
 ]
 
 
