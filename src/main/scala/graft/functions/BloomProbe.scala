@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.GraftSqlBridge.{StringInput, toColumn, toExpression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -27,14 +26,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * `BloomFilter.mightContainString` is defined as exactly that, so this
   * matches sketches built from the same string column by any path. */
 case class BloomProbe(child: Expression, filter: BloomFilter)
-    extends UnaryExpression {
+    extends UnaryExpression with StringInput {
 
   override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_probe needs a string column, got ${child.dataType}")
 
   protected override def nullSafeEval(s: Any): Any =
     filter.mightContainBinary(s.asInstanceOf[UTF8String].getBytes)

@@ -1,10 +1,11 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
+import org.apache.spark.sql.GraftSqlBridge.{StringInput, toColumn, toExpression}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,42 +23,23 @@ import org.apache.spark.unsafe.types.UTF8String
 object Generators {
 
   /** Distinct w-token shingles of a whitespace-tokenized text
-    * (tokenization contract of [[TextHash.tokens]]: trim, split on space
-    * runs, drop empties; docs with fewer than `w` tokens emit nothing). */
+    * ([[TextHash.words]], the JVM twin of [[TextHash.tokens]]; docs with
+    * fewer than `w` tokens emit nothing). */
   case class ShingleExplode(child: Expression, w: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     require(w >= 1, s"shingle width must be >= 1, got $w")
 
     override def elementSchema: StructType =
       StructType(StructField("shingle", StringType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_explode needs a string column, got ${child.dataType}")
-    }
-
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
       if (v == null) return Nil
-      // NO String.trim here: Java trim strips every char <= U+0020 (tabs,
-      // newlines) while the oracle's trim strips spaces only — split-on-
-      // spaces + drop-empties is exactly the TextHash.tokens contract.
-      val toks = v.asInstanceOf[UTF8String].toString.split(" +")
-        .filter(_.nonEmpty)
+      val toks = TextHash.words(v.asInstanceOf[UTF8String].toString)
       if (toks.length < w) return Nil
       val seen = new java.util.LinkedHashSet[String]
       var i = 0
-      while (i <= toks.length - w) {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var o = 1
-        while (o < w) { sb.append(' ').append(toks(i + o)); o += 1 }
-        seen.add(sb.toString)
-        i += 1
-      }
+      while (i <= toks.length - w) { seen.add(TextHash.join(toks, i, i + w)); i += 1 }
       val out = new Array[InternalRow](seen.size)
       val it = seen.iterator()
       var j = 0
@@ -77,7 +59,7 @@ object Generators {
     * Emits one row per SURVIVING token occurrence (multiset — word counts
     * need duplicates). */
   case class TokenExplode(child: Expression, minLen: Int, stopwords: Seq[String])
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
 
     @transient private lazy val stopSet: java.util.HashSet[String] = {
       val s = new java.util.HashSet[String](math.max(16, stopwords.size * 2))
@@ -89,15 +71,6 @@ object Generators {
 
     override def elementSchema: StructType =
       StructType(StructField("token", StringType, nullable = false) :: Nil)
-
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_explode needs a string column, got ${child.dataType}")
-    }
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
@@ -127,7 +100,7 @@ object Generators {
     * form ([[graft.text.UnicodeAnalyzer.tokens]]) — pinned by a property
     * test comparing the two on mixed Persian/ASCII corpora. */
   case class UnicodeTokenExplode(child: Expression, analyzer: graft.text.UnicodeAnalyzer)
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     import graft.text.{UnicodeAnalyzer => UA}
     import java.util.regex.Pattern
 
@@ -152,15 +125,6 @@ object Generators {
 
     override def elementSchema: StructType =
       StructType(StructField("token", StringType, nullable = false) :: Nil)
-
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"unicode_token_explode needs a string column, got ${child.dataType}")
-    }
 
     private def normalize(text: String): String = {
       var s = text
@@ -223,34 +187,21 @@ object Generators {
     * [[ShingleExplode]]'s distinct set). Same tokenization contract:
     * split on space runs, drop empties; under `w` tokens emits nothing. */
   case class NgramExplode(child: Expression, w: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     require(w >= 1, s"ngram width must be >= 1, got $w")
 
     override def elementSchema: StructType =
       StructType(StructField("ngram", StringType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_explode needs a string column, got ${child.dataType}")
-    }
-
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
       if (v == null) return Nil
-      val toks = v.asInstanceOf[UTF8String].toString.split(" +")
-        .filter(_.nonEmpty)
+      val toks = TextHash.words(v.asInstanceOf[UTF8String].toString)
       if (toks.length < w) return Nil
       val out = new Array[InternalRow](toks.length - w + 1)
       var i = 0
       while (i <= toks.length - w) {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var o = 1
-        while (o < w) { sb.append(' ').append(toks(i + o)); o += 1 }
-        out(i) = InternalRow(UTF8String.fromString(sb.toString))
+        out(i) = InternalRow(UTF8String.fromString(TextHash.join(toks, i, i + w)))
         i += 1
       }
       out
@@ -273,7 +224,7 @@ object Generators {
     * column; this emits all rungs off one token array and ships 16-byte
     * rows (no window strings cross the shuffle). */
   case class MultiNgramHashExplode(child: Expression, ladder: Seq[Int])
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     require(ladder.nonEmpty && ladder.forall(_ >= 1) && ladder == ladder.sorted,
       s"ladder must be ascending positive lengths: $ladder")
 
@@ -281,38 +232,18 @@ object Generators {
       StructField("span", org.apache.spark.sql.types.LongType, nullable = false) ::
         StructField("h", org.apache.spark.sql.types.LongType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"multi_ngram_hash_explode needs a string column, got ${child.dataType}")
-    }
-
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
       if (v == null) return Nil
-      val toks = v.asInstanceOf[UTF8String].toString.split(" +")
-        .filter(_.nonEmpty)
+      val toks = TextHash.words(v.asInstanceOf[UTF8String].toString)
       if (toks.isEmpty || ladder.head > toks.length) return Nil
-      val md = java.security.MessageDigest.getInstance("MD5")
       val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       ladder.iterator.takeWhile(_ <= toks.length).foreach { w =>
         val span = w.toLong
         var i = 0
         while (i <= toks.length - w) {
-          val sb = new java.lang.StringBuilder(toks(i))
-          var o = 1
-          while (o < w) { sb.append(' ').append(toks(i + o)); o += 1 }
-          val d = md.digest(sb.toString.getBytes("UTF-8"))
-          // first 15 md5 hex chars: bytes 0..6 + the high nibble of byte 7
-          val h = ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-            ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-            ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-            ((d(6) & 0xffL) << 4) | ((d(7) & 0xf0L) >> 4)
-          md.reset()
-          out += InternalRow(span, h)
+          val window = TextHash.join(toks, i, i + w).getBytes(UTF_8)
+          out += InternalRow(span, VectorMath.md5HexPrefix(window, 15))
           i += 1
         }
       }
@@ -340,7 +271,7 @@ object Generators {
     * every fresh plan recompiles). One tight eval per row removes the
     * codegen object entirely; q144 drops to sub-second. */
   case class WinnowExplode(child: Expression, k: Int, win: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     require(k >= 1, s"shingle width must be >= 1, got $k")
     require(win >= 1, s"window must be >= 1, got $win")
 
@@ -348,34 +279,16 @@ object Generators {
       StructField("n_fp", org.apache.spark.sql.types.LongType, nullable = false) ::
         StructField("fp", org.apache.spark.sql.types.LongType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_explode needs a string column, got ${child.dataType}")
-    }
-
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
       if (v == null) return Nil
-      val toks = v.asInstanceOf[UTF8String].toString.split(" +")
-        .filter(_.nonEmpty)
+      val toks = TextHash.words(v.asInstanceOf[UTF8String].toString)
       if (toks.length < k + win - 1) return Nil
-      val md = java.security.MessageDigest.getInstance("MD5")
       val nSh = toks.length - k + 1
       val hs = new Array[Long](nSh)
       var i = 0
       while (i < nSh) {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var o = 1
-        while (o < k) { sb.append(' ').append(toks(i + o)); o += 1 }
-        val d = md.digest(sb.toString.getBytes("UTF-8"))
-        // first 7 hex chars = bytes 0..2 and the high nibble of byte 3
-        hs(i) = ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) |
-          ((d(2) & 0xffL) << 4) | ((d(3) & 0xf0L) >> 4)
-        md.reset()
+        hs(i) = VectorMath.md5HexPrefix(TextHash.join(toks, i, i + k).getBytes(UTF_8), 7)
         i += 1
       }
       val set = new java.util.LinkedHashSet[java.lang.Long]()
@@ -406,7 +319,7 @@ object Generators {
     * form (posexplode over a transform/slice array) re-evaluates the
     * whole segmentation per emitted segment, O(len²/k) per doc. */
   case class SegmentExplode(child: Expression, k: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     require(k >= 1, s"segment width must be >= 1, got $k")
 
     override def elementSchema: StructType = StructType(
@@ -414,20 +327,10 @@ object Generators {
         StructField("seg", StringType, nullable = false) ::
         StructField("ntok", org.apache.spark.sql.types.IntegerType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"segment_explode needs a string column, got ${child.dataType}")
-    }
-
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
       if (v == null) return Nil
-      val toks = v.asInstanceOf[UTF8String].toString.split(" +")
-        .filter(_.nonEmpty)
+      val toks = TextHash.words(v.asInstanceOf[UTF8String].toString)
       if (toks.length == 0) return Nil
       val nSeg = (toks.length + k - 1) / k
       val out = new Array[InternalRow](nSeg)
@@ -435,10 +338,8 @@ object Generators {
       while (s < nSeg) {
         val from = s * k
         val until = math.min(from + k, toks.length)
-        val sb = new java.lang.StringBuilder(toks(from))
-        var i = from + 1
-        while (i < until) { sb.append(' ').append(toks(i)); i += 1 }
-        out(s) = InternalRow(s, UTF8String.fromString(sb.toString), until - from)
+        out(s) = InternalRow(s, UTF8String.fromString(TextHash.join(toks, from, until)),
+          until - from)
         s += 1
       }
       out
@@ -465,7 +366,7 @@ object Generators {
     * One JVM pass; the HOF form (posexplode over transform(range(...)))
     * re-evaluates the full chunking per emitted chunk. */
   case class ChunkExplode(child: Expression, chunk: Int, stride: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
+      extends UnaryExpression with Generator with CodegenFallback with StringInput {
     require(chunk >= 1, s"chunk width must be >= 1, got $chunk")
     require(stride >= 1, s"stride must be >= 1, got $stride")
 
@@ -474,20 +375,10 @@ object Generators {
         StructField("n_chunk_tokens", org.apache.spark.sql.types.LongType, nullable = false) ::
         StructField("chunk", StringType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"chunk_explode needs a string column, got ${child.dataType}")
-    }
-
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val v = child.eval(input)
       if (v == null) return Nil
-      val toks = v.asInstanceOf[UTF8String].toString.split(" +")
-        .filter(_.nonEmpty)
+      val toks = TextHash.words(v.asInstanceOf[UTF8String].toString)
       if (toks.length == 0) return Nil
       val n = toks.length
       // starts end when a window reaches the doc end (suffix-duplicate
@@ -501,11 +392,8 @@ object Generators {
       while (s < nChunks) {
         val from = s * stride
         val until = math.min(from + chunk, toks.length)
-        val sb = new java.lang.StringBuilder(toks(from))
-        var i = from + 1
-        while (i < until) { sb.append(' ').append(toks(i)); i += 1 }
         out(s) = InternalRow(s.toLong, (until - from).toLong,
-          UTF8String.fromString(sb.toString))
+          UTF8String.fromString(TextHash.join(toks, from, until)))
         s += 1
       }
       out

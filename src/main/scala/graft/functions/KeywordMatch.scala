@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
+import org.apache.spark.sql.GraftSqlBridge.{StringInput, toColumn, toExpression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -117,18 +117,10 @@ object KeywordMatch {
   /** `multi_keyword_tags(text)`: array of taxonomy labels with at least one
     * keyword contained in `text` (taxonomy order). Null text -> null. */
   case class MultiKeywordTags(child: Expression, taxonomy: Seq[(String, Seq[String])])
-      extends UnaryExpression {
+      extends UnaryExpression with StringInput {
 
     @transient private lazy val tagger = new Tagger(taxonomy)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"multi_keyword_tags needs a string column, got ${child.dataType}")
-    }
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def nullIntolerant: Boolean = true
 

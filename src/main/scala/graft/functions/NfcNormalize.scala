@@ -2,8 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.GraftSqlBridge.{StringInput, toColumn, toExpression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -26,14 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * overwhelming hot path for real corpora) and allocates only when
   * composition actually changes bytes.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with StringInput {
 
   override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize needs a string column, got ${child.dataType}")
 
   protected override def nullSafeEval(s: Any): Any =
     NfcNormalize.nfc(s.asInstanceOf[UTF8String])

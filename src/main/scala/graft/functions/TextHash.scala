@@ -43,6 +43,24 @@ object TextHash {
   def tokens(text: Column): Column =
     filter(split(trim(text), " +"), t => t =!= "")
 
+  private val spaceRuns = java.util.regex.Pattern.compile(" +")
+
+  /** JVM twin of [[tokens]] for UDFs and generators: split on runs of
+    * U+0020, drop empties. No Java `String.trim` (it strips every char
+    * <= U+0020, tabs and newlines too, where [[tokens]]' trim and the
+    * oracle's strip spaces only); one precompiled pattern, where
+    * `String.split(" +")` compiles it on every call. */
+  def words(s: String): Array[String] = spaceRuns.split(s).filter(_.nonEmpty)
+
+  /** `toks(from until until)` joined by single spaces — the shingle,
+    * n-gram and chunk text of [[words]]' output. */
+  def join(toks: Array[String], from: Int, until: Int): String = {
+    val sb = new java.lang.StringBuilder(toks(from))
+    var i = from + 1
+    while (i < until) { sb.append(' ').append(toks(i)); i += 1 }
+    sb.toString
+  }
+
   /** Distinct tokens — only for order-insensitive consumers (SimHash tally,
     * set sizes). */
   def tokenSet(text: Column): Column = array_distinct(tokens(text))

@@ -294,18 +294,23 @@ object VectorMath {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** hash60 of a token: first 15 hex chars of md5 as a 60-bit value — the
-    * first 8 digest bytes as an unsigned big-endian long, dropping the
-    * 16th nibble (identical to `conv(substring(md5(s),1,15),16,10)`). */
-  def hash60Of(token: org.apache.spark.unsafe.types.UTF8String): Long = {
+  /** The first `hexChars` (<= 15) hex digits of md5(bytes) as a
+    * non-negative long — `conv(substring(md5(s),1,hexChars),16,10)`:
+    * the leading digest bytes, big-endian, minus the trailing nibble
+    * when `hexChars` is odd. One digest per thread. */
+  def md5HexPrefix(bytes: Array[Byte], hexChars: Int): Long = {
     val md = md5Local.get()
     md.reset()
-    val d = md.digest(token.getBytes)
+    val d = md.digest(bytes)
     var v = 0L
     var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
+    while (i < (hexChars + 1) / 2) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    if (hexChars % 2 == 1) v >>> 4 else v
   }
+
+  /** hash60 of a token ([[TextHash.hash60]]): 15 md5 hex digits. */
+  def hash60Of(token: org.apache.spark.unsafe.types.UTF8String): Long =
+    md5HexPrefix(token.getBytes, 15)
 
   /** Shared kernel for interpreted eval and generated code. */
   def simhashOf(toks: ArrayData, nBits: Int): Long = {

@@ -41,14 +41,9 @@ object BpeOps {
   private def charSyms(word: Column): Column =
     transform(sequence(lit(1), length(word)), i => word.substr(i, lit(1)))
 
-  /** Adjacent-pair explode over a symbol array, empty for single-symbol
-    * words (sequence() would count DOWN on a negative span — guard it). */
-  private def pairsOf(syms: Column): Column =
-    when(size(syms) >= 2,
-      transform(sequence(lit(0), size(syms) - 2), i =>
-        struct(element_at(syms, i + 1).as("left_sym"),
-          element_at(syms, i + 2).as("right_sym"))))
-      .otherwise(array().cast("array<struct<left_sym:string,right_sym:string>>"))
+  /** [[charSyms]] on the JVM, for the inference kernel. */
+  private[graft] def round0(word: String): Array[String] =
+    Array.tabulate(word.length)(i => String.valueOf(word.charAt(i)))
 
   /** ADJACENT-PAIR COUNTS of the round-0 (character) symbolization —
     * BPE training round 1's candidate table, exposed separately because
@@ -57,127 +52,34 @@ object BpeOps {
     * occurrences, totally ordered (count desc, pair asc). */
   def adjacentPairCounts(words: DataFrame): DataFrame =
     words
-      .select(explode(pairsOf(charSyms(col("word")))).as("p"), col("wc"))
+      .select(explode(Subword.pairsOf(charSyms(col("word")))).as("p"), col("wc"))
       .groupBy(col("p.left_sym").as("left_sym"), col("p.right_sym").as("right_sym"))
       .agg(sum(col("wc")).as("pair_count"))
       .orderBy(col("pair_count").desc, col("left_sym").asc, col("right_sym").asc)
 
-  /** Greedy left-to-right, non-overlapping merge of one learned pair —
-    * the textbook BPE apply step, used per training round. */
-  private[graft] def applyMerge(syms: Seq[String], l: String, r: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
-        out += (l + r); i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.toSeq
-  }
-
-  /** Symbol count after applying the whole merge list to one word — the
-    * [[applyMerge]] fold with the intermediate sequences elided: symbols
-    * live in ONE reused array and each merge pass compacts it in place,
-    * left-to-right, non-overlapping (the identical greedy contract,
-    * property-pinned equal to the fold in `BpeOpsSpec`). The inference
-    * hot path calls this once per word occurrence; the fold allocated
-    * |merges|+1 sequences per word, which dominated q139's profile.
-    *
-    * (Training keeps [[applyMerge]]: it needs the merged ARRAY, and its
-    * per-round cost is vocabulary-sized, not corpus-sized.) */
-  private[graft] def mergedSymbolCount(
-      word: String, merges: IndexedSeq[(String, String)]): Int = {
-    var n = word.length
-    if (n <= 1 || merges.isEmpty) return n
-    val arr = new Array[String](n)
-    var i = 0
-    while (i < n) { arr(i) = String.valueOf(word.charAt(i)); i += 1 }
-    var m = 0
-    while (m < merges.length && n > 1) {
-      val l = merges(m)._1; val r = merges(m)._2
-      var w = 0; var j = 0
-      while (j < n) {
-        if (j < n - 1 && arr(j) == l && arr(j + 1) == r) {
-          arr(w) = l + r; j += 2
-        } else { arr(w) = arr(j); j += 1 }
-        w += 1
-      }
-      n = w; m += 1
-    }
-    n
-  }
-
-  /** PER-THREAD word→token-count memo for the inference kernels: word
-    * text is Zipf-distributed, so a bounded map catches the head and the
-    * long tail falls through to [[mergedSymbolCount]] — never wrong,
-    * only slower. Thread-local (not closure-captured) because Spark may
-    * share one deserialized UDF closure across executor threads on some
-    * plans (local relations); keyed by the merge table so two different
-    * tokenizers in one JVM never cross-read. 2^17 entries ≈ a few MB per
-    * thread at worst; the map survives across tasks on the same thread,
-    * which is exactly the reuse a long scan wants. */
-  private[graft] object MergeMemo {
-    private val MemoCap = 1 << 17
-    private val tl =
-      new ThreadLocal[(IndexedSeq[(String, String)], java.util.HashMap[String, Integer])]
-    def count(word: String, ms: IndexedSeq[(String, String)]): Int = {
-      var st = tl.get()
-      // reference check on the hot path: within a task the captured merge
-      // table is one instance. A new task's content-equal instance keeps
-      // the memo (re-keyed so the next call is back on the eq fast path);
-      // a genuinely different table resets it.
-      if (st == null || !(st._1 eq ms)) {
-        st =
-          if (st != null && st._1 == ms) (ms, st._2)
-          else (ms, new java.util.HashMap[String, Integer]())
-        tl.set(st)
-      }
-      val hit = st._2.get(word)
-      if (hit != null) hit.intValue()
-      else {
-        val v = mergedSymbolCount(word, ms)
-        if (st._2.size < MemoCap) st._2.put(word, v)
-        v
-      }
-    }
-  }
+  /** Per-thread word → BPE-token-count memo: the merge list applied to
+    * the word's characters by the in-place [[Subword.mergedCount]]
+    * kernel, keyed by the merge table. */
+  private[graft] val memo = new Subword.WordMemo[Subword.Merges](
+    (w, ms) => Subword.mergedCount(round0(w), ms, _ + _))
 
   /** BPE TRAIN: learn `rounds` merges from the corpus. Returns the merge
     * table (round, left_sym, right_sym, pair_count) in learned order —
     * the artifact a tokenizer ships. Stops early if no pair remains
     * (every word fully merged). */
   def bpeTrain(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"bad rounds: $rounds")
     val spark = docs.sparkSession
     import spark.implicits._
-
-    val mergeUdf = udf((syms: Seq[String], l: String, r: String) => applyMerge(syms, l, r))
-    var words = wordCounts(docs, textCol)
-      .select(charSyms(col("word")).as("syms"), col("wc"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-
-    var round = 1
-    var done = false
-    while (round <= rounds && !done) {
-      val top = words
-        .select(explode(pairsOf(col("syms"))).as("p"), col("wc"))
+    val picked = Subword.mergeTrain(docs, textCol, rounds, charSyms, _ + _) { words =>
+      words
+        .select(explode(Subword.pairsOf(col("syms"))).as("p"), col("wc"))
         .groupBy(col("p.left_sym").as("l"), col("p.right_sym").as("r"))
         .agg(sum(col("wc")).as("c"))
         .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1)
-        .collect()
-      if (top.isEmpty) done = true
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((round, l, r, c))
-        words = words
-          .select(mergeUdf(col("syms"), lit(l), lit(r)).as("syms"), col("wc"))
-          .localCheckpoint()
-        round += 1
-      }
     }
-    merges.toSeq.toDF("round", "left_sym", "right_sym", "pair_count")
+    picked.zipWithIndex
+      .map { case (t, i) => (i + 1, t.getString(0), t.getString(1), t.getLong(2)) }
+      .toDF("round", "left_sym", "right_sym", "pair_count")
   }
 
   /** BPE ENCODE: apply a learned merge table to the corpus and report
@@ -188,9 +90,8 @@ object BpeOps {
       merges: Seq[(String, String)]): DataFrame = {
     val ms = merges.toIndexedSeq
     val enc = udf((text: String) => {
-      val words = text.trim.split(" +").filter(_.nonEmpty)
       var total = 0L
-      words.foreach { w => total += MergeMemo.count(w, ms) }
+      graft.functions.TextHash.words(text).foreach { w => total += memo.count(w, ms) }
       total
     })
     docs
@@ -199,50 +100,23 @@ object BpeOps {
       .orderBy("doc_id")
   }
 
-  /** TOKENIZER FERTILITY profile: apply a fixed learned merge table
-    * ([[applyMerge]] per word, in merge-list order — the same inference
-    * step as [[bpeEncode]]) and report per-group corpus sizing stats —
-    * `tokens_per_word_ppm` (fertility: how many BPE tokens a whitespace
-    * word costs — THE cross-language tokenizer-equity metric) and
-    * `chars_per_token_ppm` (compression). A language whose fertility
-    * runs high pays more context window per sentence; curation pipelines
-    * track this per shard before fixing a token budget.
+  /** TOKENIZER FERTILITY profile ([[Subword.fertility]]): apply a fixed
+    * learned merge table (in merge-list order — the same inference step
+    * as [[bpeEncode]]) and report per-group `tokens_per_word_ppm`
+    * (fertility: how many BPE tokens a whitespace word costs — THE
+    * cross-language tokenizer-equity metric) and `chars_per_token_ppm`
+    * (compression). A language whose fertility runs high pays more
+    * context window per sentence; curation pipelines track this per
+    * shard before fixing a token budget.
     *
     * Determinism: pure integer counts; per-word merging depends only on
     * the word and the merge list. Symbols are UTF-16 code units on the
     * JVM and characters in DuckDB — identical on the BMP text this
     * corpus carries (documented boundary: astral-plane text would need a
-    * codepoint iterator here and nothing else changed).
-    *
-    * 100 TB shape: map-only over the corpus (the merge table rides the
-    * closure, vocabulary-sized) into a group-keyed partial-aggregated
-    * sum — one scan, one metadata-sized shuffle. Empty-worded docs count
-    * toward `n_docs` with zero words; a group with zero words reports
-    * null ratios (CASE-guarded identically in the mirror). */
+    * codepoint iterator here and nothing else changed). */
   def bpeFertility(docs: DataFrame, textCol: String, groupCol: String,
       merges: Seq[(String, String)]): DataFrame = {
     val ms = merges.toIndexedSeq
-    val stats = udf((text: String) => {
-      val words = text.trim.split(" +").filter(_.nonEmpty)
-      var nw = 0L; var nc = 0L; var nt = 0L
-      words.foreach { w =>
-        nw += 1; nc += w.length
-        nt += MergeMemo.count(w, ms)
-      }
-      (nw, nc, nt)
-    })
-    docs
-      .filter(col(textCol).isNotNull)
-      .select(col(groupCol), stats(col(textCol)).as("s"))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"), sum(col("s._1")).as("n_words"),
-        sum(col("s._2")).as("n_chars"), sum(col("s._3")).as("n_bpe_tokens"))
-      .select(col(groupCol), col("n_docs"), col("n_words"), col("n_chars"),
-        col("n_bpe_tokens"),
-        when(col("n_words") > 0,
-          expr("n_bpe_tokens * 1000000 div n_words")).as("tokens_per_word_ppm"),
-        when(col("n_bpe_tokens") > 0,
-          expr("n_chars * 1000000 div n_bpe_tokens")).as("chars_per_token_ppm"))
-      .orderBy(col(groupCol))
+    Subword.fertility(docs, textCol, groupCol, "n_bpe_tokens")(w => memo.count(w, ms))
   }
 }

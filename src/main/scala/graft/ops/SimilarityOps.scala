@@ -184,15 +184,10 @@ object SimilarityOps {
     * md5-derived, uniform in [-1, 1). Generated driver-side once; the same
     * literals are inlined into the oracle SQL so both engines use
     * byte-identical planes. */
-  def hyperplanes(nPlanes: Int, dim: Int): Seq[Seq[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h60(s: String): Long = {
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 15), 16)
-    }
+  def hyperplanes(nPlanes: Int, dim: Int): Seq[Seq[Double]] =
     (0 until nPlanes).map(p => (0 until dim).map(d =>
-      h60(s"$p:$d").toDouble / (1L << 59).toDouble - 1.0))
-  }
+      graft.functions.VectorMath.md5HexPrefix(s"$p:$d".getBytes("UTF-8"), 15).toDouble /
+        (1L << 59).toDouble - 1.0))
 
   /** LSH bucket id: bit p set iff dot(vec, plane_p) > 0. Codegen'd kernel
     * ([[graft.functions.VectorMath.HyperplaneBucket]]) — same sequential

@@ -129,9 +129,7 @@ object UnigramLmOps {
       // empty corpus -> empty vocab -> nothing to segment; stay empty
       if (total == 0L) return vocab.select(col("piece"), col("cnt"),
         lit(null).cast("long").as("cost_micro")).filter(lit(false))
-      val cm: Map[String, Long] = withCosts(vocab, total)
-        .select("piece", "cost_micro").collect()
-        .map(row => row.getString(0) -> row.getLong(1)).toMap
+      val cm = costMap(withCosts(vocab, total))
       val mx = maxLen
       val segUdf = udf((w: String) => viterbiPieces(w, cm, mx))
       val usage = words
@@ -163,29 +161,16 @@ object UnigramLmOps {
         col("cnt"), col("cost_micro"))
       .orderBy(col("cnt").desc, col("piece").asc)
 
-  /** Per-thread word→token-count memo for the inference kernel — the
-    * [[BpeOps.MergeMemo]] contract (Zipf head cached, tail recomputed;
-    * thread-local; re-keyed on a different cost map). */
-  private object SegMemo {
-    private val MemoCap = 1 << 17
-    private val tl =
-      new ThreadLocal[(Map[String, Long], java.util.HashMap[String, Integer])]
-    def count(word: String, cm: Map[String, Long], maxLen: Int): Int = {
-      var st = tl.get()
-      if (st == null || !(st._1 eq cm)) {
-        st = if (st != null && st._1 == cm) (cm, st._2)
-          else (cm, new java.util.HashMap[String, Integer]())
-        tl.set(st)
-      }
-      val hit = st._2.get(word)
-      if (hit != null) hit.intValue()
-      else {
-        val v = viterbiPieces(word, cm, maxLen).length
-        if (st._2.size < MemoCap) st._2.put(word, v)
-        v
-      }
-    }
-  }
+  /** The (piece → cost_micro) map of a costed vocabulary — bounded
+    * (`keepPieces` + alphabet), collected to ride the Viterbi closures. */
+  private def costMap(vocab: DataFrame): Map[String, Long] =
+    vocab.select("piece", "cost_micro").collect()
+      .map(row => row.getString(0) -> row.getLong(1)).toMap
+
+  /** Per-thread word → Viterbi-token-count memo, keyed by the whole
+    * model: the cost map AND the piece-length bound. */
+  private[graft] val memo = new Subword.WordMemo[(Map[String, Long], Int)](
+    (w, m) => viterbiPieces(w, m._1, m._2).length)
 
   /** UNIGRAM-TOKENIZER FERTILITY profile — [[BpeOps.bpeFertility]]'s
     * sibling over the TRAINED unigram vocabulary (train-then-measure in
@@ -195,45 +180,20 @@ object UnigramLmOps {
     * word-table passes finish; the frozen cost map rides the closure. */
   def unigramFertility(
       docs: DataFrame, textCol: String, groupCol: String,
-      rounds: Int, maxLen: Int, seedPieces: Int, keepPieces: Int): DataFrame = {
-    val cm: Map[String, Long] =
-      trainedVocab(docs, textCol, rounds, maxLen, seedPieces, keepPieces)
-        .select("piece", "cost_micro").collect()
-        .map(row => row.getString(0) -> row.getLong(1)).toMap
-    fertilityUnder(cm, docs, textCol, groupCol, maxLen)
-  }
+      rounds: Int, maxLen: Int, seedPieces: Int, keepPieces: Int): DataFrame =
+    fertilityUnder(costMap(trainedVocab(docs, textCol, rounds, maxLen, seedPieces, keepPieces)),
+      docs, textCol, groupCol, maxLen)
 
-  /** The shared fertility aggregate under a FROZEN cost map — the
-    * map-only inference pass both the train-inline path
+  /** The fertility aggregate ([[Subword.fertility]]) under a FROZEN cost
+    * map — the map-only inference pass both the train-inline path
     * ([[unigramFertility]]) and the persisted-artifact path
     * ([[unigramFertilityFromVocab]]) run, so the two are bit-equal by
     * construction (spec-pinned). */
   private def fertilityUnder(
       cm: Map[String, Long], docs: DataFrame, textCol: String,
       groupCol: String, maxLen: Int): DataFrame = {
-    val mx = maxLen
-    val stats = udf((text: String) => {
-      val words = text.trim.split(" +").filter(_.nonEmpty)
-      var nw = 0L; var nc = 0L; var nt = 0L
-      words.foreach { w =>
-        nw += 1; nc += w.length
-        nt += SegMemo.count(w, cm, mx)
-      }
-      (nw, nc, nt)
-    })
-    docs
-      .filter(col(textCol).isNotNull)
-      .select(col(groupCol), stats(col(textCol)).as("s"))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"), sum(col("s._1")).as("n_words"),
-        sum(col("s._2")).as("n_chars"), sum(col("s._3")).as("n_unigram_tokens"))
-      .select(col(groupCol), col("n_docs"), col("n_words"), col("n_chars"),
-        col("n_unigram_tokens"),
-        when(col("n_words") > 0,
-          expr("n_unigram_tokens * 1000000 div n_words")).as("tokens_per_word_ppm"),
-        when(col("n_unigram_tokens") > 0,
-          expr("n_chars * 1000000 div n_unigram_tokens")).as("chars_per_token_ppm"))
-      .orderBy(col(groupCol))
+    val model = (cm, maxLen)
+    Subword.fertility(docs, textCol, groupCol, "n_unigram_tokens")(w => memo.count(w, model))
   }
 
   // ---- The PERSISTED vocabulary artifact (the r12 verdict's ask) --------
@@ -293,10 +253,6 @@ object UnigramLmOps {
     * the write→read round trip). */
   def unigramFertilityFromVocab(
       docs: DataFrame, textCol: String, groupCol: String,
-      vocab: DataFrame, maxLen: Int): DataFrame = {
-    val cm: Map[String, Long] = vocab
-      .select("piece", "cost_micro").collect()
-      .map(row => row.getString(0) -> row.getLong(1)).toMap
-    fertilityUnder(cm, docs, textCol, groupCol, maxLen)
-  }
+      vocab: DataFrame, maxLen: Int): DataFrame =
+    fertilityUnder(costMap(vocab), docs, textCol, groupCol, maxLen)
 }

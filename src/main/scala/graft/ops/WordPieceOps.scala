@@ -50,14 +50,10 @@ object WordPieceOps {
       when(i === 1, word.substr(i, lit(1)))
         .otherwise(concat(lit("##"), word.substr(i, lit(1)))))
 
-  /** Adjacent-pair explode over a symbol array (empty for single-symbol
-    * words — sequence() would count DOWN on a negative span). */
-  private def pairsOf(syms: Column): Column =
-    when(size(syms) >= 2,
-      transform(sequence(lit(0), size(syms) - 2), i =>
-        struct(element_at(syms, i + 1).as("left_sym"),
-          element_at(syms, i + 2).as("right_sym"))))
-      .otherwise(array().cast("array<struct<left_sym:string,right_sym:string>>"))
+  /** [[charSymsWp]] on the JVM, for the inference kernel. */
+  private[graft] def round0(word: String): Array[String] =
+    Array.tabulate(word.length)(i =>
+      if (i == 0) String.valueOf(word.charAt(0)) else "##" + word.charAt(i))
 
   private[graft] def stripCont(s: String): String =
     if (s.startsWith("##")) s.substring(2) else s
@@ -65,21 +61,6 @@ object WordPieceOps {
   /** The merged symbol: left text + right's unprefixed text (keeps the
     * left's initial/continuation status — the `##` bookkeeping rule). */
   private[graft] def mergedSym(l: String, r: String): String = l + stripCont(r)
-
-  /** Greedy left-to-right non-overlapping application of ONE merge —
-    * [[BpeOps.applyMerge]] with the WordPiece merged-symbol rule. */
-  private[graft] def applyMergeWp(
-      syms: Seq[String], l: String, r: String): Seq[String] = {
-    val m = mergedSym(l, r)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
-        out += m; i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.toSeq
-  }
 
   /** Scored adjacent-pair candidates of one symbolized (syms, wc) word
     * table: pair count, both symbols' occurrence counts, and the
@@ -92,7 +73,7 @@ object WordPieceOps {
       .groupBy(col("sym"))
       .agg(sum(col("wc")).as("c"))
     words
-      .select(explode(pairsOf(col("syms"))).as("p"), col("wc"))
+      .select(explode(Subword.pairsOf(col("syms"))).as("p"), col("wc"))
       .groupBy(col("p.left_sym").as("left_sym"), col("p.right_sym").as("right_sym"))
       .agg(sum(col("wc")).as("pair_count"))
       .join(sc.select(col("sym").as("left_sym"), col("c").as("left_count")), "left_sym")
@@ -119,124 +100,41 @@ object WordPieceOps {
     * in learned order — the artifact a WordPiece tokenizer ships. Stops
     * early if no pair remains. */
   def wordpieceTrain(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"bad rounds: $rounds")
     val spark = docs.sparkSession
     import spark.implicits._
-    val mergeUdf = udf((syms: Seq[String], l: String, r: String) =>
-      applyMergeWp(syms, l, r))
-    var words = BpeOps.wordCounts(docs, textCol)
-      .select(charSymsWp(col("word")).as("syms"), col("wc"))
-      .localCheckpoint()
-    val merges =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long, Long)]
-    var round = 1
-    var done = false
-    while (round <= rounds && !done) {
-      val top = scoredPairs(words)
+    val picked = Subword.mergeTrain(docs, textCol, rounds, charSymsWp, mergedSym) { words =>
+      scoredPairs(words)
         .orderBy(col("score_micro").desc, col("left_sym").asc, col("right_sym").asc)
-        .limit(1)
-        .collect()
-      if (top.isEmpty) done = true
-      else {
-        val (l, r) = (top(0).getString(0), top(0).getString(1))
-        merges += ((round, l, r, mergedSym(l, r), top(0).getLong(2), top(0).getLong(5)))
-        words = words
-          .select(mergeUdf(col("syms"), lit(l), lit(r)).as("syms"), col("wc"))
-          .localCheckpoint()
-        round += 1
-      }
     }
-    merges.toSeq
+    picked.zipWithIndex
+      .map { case (t, i) =>
+        val (l, r) = (t.getString(0), t.getString(1))
+        (i + 1, l, r, mergedSym(l, r), t.getLong(2), t.getLong(5))
+      }
       .toDF("round", "left_sym", "right_sym", "merged_sym", "pair_count", "score_micro")
   }
 
-  /** Symbol count of one word under the whole learned merge list — the
-    * inference kernel ([[BpeOps.mergedSymbolCount]] with the WordPiece
-    * round-0 symbolization and merged-symbol rule): symbols live in one
-    * reused array, each merge compacts it in place. */
-  private[graft] def wpSymbolCount(
-      word: String, merges: IndexedSeq[(String, String)]): Int = {
-    var n = word.length
-    if (n == 0) return 0
-    val arr = new Array[String](n)
-    arr(0) = String.valueOf(word.charAt(0))
-    var i = 1
-    while (i < n) { arr(i) = "##" + word.charAt(i); i += 1 }
-    if (n <= 1 || merges.isEmpty) return n
-    var m = 0
-    while (m < merges.length && n > 1) {
-      val l = merges(m)._1; val r = merges(m)._2
-      val fused = mergedSym(l, r)
-      var w = 0; var j = 0
-      while (j < n) {
-        if (j < n - 1 && arr(j) == l && arr(j + 1) == r) {
-          arr(w) = fused; j += 2
-        } else { arr(w) = arr(j); j += 1 }
-        w += 1
-      }
-      n = w; m += 1
-    }
-    n
-  }
-
-  /** Per-thread word→token-count memo — the [[BpeOps.MergeMemo]]
-    * contract (Zipf head cached, tail recomputed; keyed by merge-table
-    * instance, re-keyed on content match, reset on a different table). */
-  private object WpMemo {
-    private val MemoCap = 1 << 17
-    private val tl =
-      new ThreadLocal[(IndexedSeq[(String, String)], java.util.HashMap[String, Integer])]
-    def count(word: String, ms: IndexedSeq[(String, String)]): Int = {
-      var st = tl.get()
-      if (st == null || !(st._1 eq ms)) {
-        st = if (st != null && st._1 == ms) (ms, st._2)
-          else (ms, new java.util.HashMap[String, Integer]())
-        tl.set(st)
-      }
-      val hit = st._2.get(word)
-      if (hit != null) hit.intValue()
-      else {
-        val v = wpSymbolCount(word, ms)
-        if (st._2.size < MemoCap) st._2.put(word, v)
-        v
-      }
-    }
-  }
+  /** Per-thread word → WordPiece-token-count memo: the merge list applied
+    * to the word's round-0 symbols by the in-place
+    * [[Subword.mergedCount]] kernel under the `##` fuse rule, keyed by
+    * the merge table. */
+  private[graft] val memo = new Subword.WordMemo[Subword.Merges](
+    (w, ms) => Subword.mergedCount(round0(w), ms, mergedSym))
 
   /** WORDPIECE FERTILITY per group under the TRAINED merge table —
     * train-then-measure in one query (the q188 shape): tokens per
     * whitespace word and chars per token in integer ppm, the
-    * cross-language tokenizer-equity metric. Training's bounded
-    * word-table passes run first; the corpus encode is then ONE map-only
-    * scan with the frozen merge list in the closure. */
+    * cross-language tokenizer-equity metric ([[Subword.fertility]]).
+    * Training's bounded word-table passes run first; the corpus encode
+    * is then ONE map-only scan with the frozen merge list in the
+    * closure. */
   def wordpieceFertility(
       docs: DataFrame, textCol: String, groupCol: String, rounds: Int): DataFrame = {
-    val ms: IndexedSeq[(String, String)] =
+    val ms: Subword.Merges =
       wordpieceTrain(docs, textCol, rounds)
         .orderBy(col("round"))
         .select("left_sym", "right_sym").collect()
         .map(r => (r.getString(0), r.getString(1))).toIndexedSeq
-    val stats = udf((text: String) => {
-      val words = text.trim.split(" +").filter(_.nonEmpty)
-      var nw = 0L; var nc = 0L; var nt = 0L
-      words.foreach { w =>
-        nw += 1; nc += w.length
-        nt += WpMemo.count(w, ms)
-      }
-      (nw, nc, nt)
-    })
-    docs
-      .filter(col(textCol).isNotNull)
-      .select(col(groupCol), stats(col(textCol)).as("s"))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"), sum(col("s._1")).as("n_words"),
-        sum(col("s._2")).as("n_chars"), sum(col("s._3")).as("n_wp_tokens"))
-      .select(col(groupCol), col("n_docs"), col("n_words"), col("n_chars"),
-        col("n_wp_tokens"),
-        when(col("n_words") > 0,
-          expr("n_wp_tokens * 1000000 div n_words")).as("tokens_per_word_ppm"),
-        when(col("n_wp_tokens") > 0,
-          expr("n_chars * 1000000 div n_wp_tokens")).as("chars_per_token_ppm"))
-      .orderBy(col(groupCol))
+    Subword.fertility(docs, textCol, groupCol, "n_wp_tokens")(w => memo.count(w, ms))
   }
 }

@@ -20,7 +20,7 @@ SELECT left_sym, right_sym, pair_count FROM g
 ORDER BY pair_count DESC, left_sym ASC, right_sym ASC LIMIT $n"""
 
   /** Mirror of [[graft.ops.BpeOps.bpeFertility]]: the greedy
-    * left-to-right non-overlapping `applyMerge` pass is expressed as a
+    * left-to-right non-overlapping `Subword.applyMerge` pass is expressed as a
     * `list_reduce` fold over a '|'-wrapped symbol string — the
     * accumulator ends with `|l|` exactly when the previous UNMERGED
     * symbol is `l` (a just-merged symbol is `l||r ≠ l` since `r` is

@@ -9,14 +9,15 @@ package graft.sql
   * score, exact tie order), and the greedy left-to-right non-overlapping
   * rewrite expressed as a RECURSIVE position-walk CTE — one row per
   * (word, position) step, emitting the merged symbol and skipping two
-  * positions on a match, exactly [[graft.ops.WordPieceOps.applyMergeWp]].
+  * positions on a match, exactly [[graft.ops.Subword.applyMerge]] under
+  * [[graft.ops.WordPieceOps.mergedSym]].
   * The rewrite is deliberately LAMBDA-FREE (no list_reduce): DuckDB
   * 1.0's vectorized lambda execution mis-binds rows under composition
   * (the measured unigram-LM finding), and the recursive walk sidesteps
   * the hazard while staying a faithful mirror. Out-of-range list
   * indexing (`sy[i+1]` at the last position) yields NULL, whose
   * comparison is NULL, which the CASE treats as no-match — the same
-  * boundary applyMergeWp's explicit length check encodes.
+  * boundary applyMerge's explicit length check encodes.
   *
   * Non-recursive CTEs are MATERIALIZED (the unigram finding: geometric
   * subtree re-execution otherwise). */

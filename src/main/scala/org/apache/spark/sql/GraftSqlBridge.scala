@@ -34,6 +34,14 @@ object GraftSqlBridge {
       case p => throw new IllegalArgumentException(s"not a relation read: ${p.nodeName}")
     }
 
+  /** The input contract of a one-string-argument expression: the
+    * analyzer rejects any other argument type and adds no implicit cast,
+    * so the plan is the one the caller wrote. (`AbstractDataType` is
+    * `private[sql]`.) */
+  trait StringInput extends catalyst.expressions.ExpectsInputTypes {
+    override def inputTypes: Seq[types.AbstractDataType] = Seq(types.StringType)
+  }
+
   /** Waits until every posted listener event is delivered (the bus is `private[spark]`). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

@@ -1,16 +1,16 @@
 package graft
 
-import graft.ops.BpeOps
+import graft.ops.{BpeOps, Subword}
 import org.scalatest.funsuite.AnyFunSuite
 
 class BpeOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("applyMerge merges greedily left-to-right without overlap") {
-    assert(BpeOps.applyMerge(Seq("a", "a", "a"), "a", "a") == Seq("aa", "a"))
-    assert(BpeOps.applyMerge(Seq("l", "o", "w"), "l", "o") == Seq("lo", "w"))
-    assert(BpeOps.applyMerge(Seq("x"), "a", "b") == Seq("x"))
-    assert(BpeOps.applyMerge(Seq.empty, "a", "b") == Seq.empty)
+    assert(Subword.applyMerge(Seq("a", "a", "a"), "a", "a", "aa") == Seq("aa", "a"))
+    assert(Subword.applyMerge(Seq("l", "o", "w"), "l", "o", "lo") == Seq("lo", "w"))
+    assert(Subword.applyMerge(Seq("x"), "a", "b", "ab") == Seq("x"))
+    assert(Subword.applyMerge(Seq.empty, "a", "b", "ab") == Seq.empty)
   }
 
   test("mergedSymbolCount equals the applyMerge fold (and the memo) on random words") {
@@ -20,15 +20,15 @@ class BpeOpsSpec extends AnyFunSuite {
     (1 to 2000).foreach { _ =>
       val w = (0 until rnd.nextInt(12)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
       var syms: Seq[String] = w.map(_.toString)
-      merges.foreach { case (l, r) => syms = BpeOps.applyMerge(syms, l, r) }
-      assert(BpeOps.mergedSymbolCount(w, merges) == syms.length, s"word '$w'")
-      assert(BpeOps.MergeMemo.count(w, merges) == syms.length, s"memo word '$w'")
+      merges.foreach { case (l, r) => syms = Subword.applyMerge(syms, l, r, l + r) }
+      assert(Subword.mergedCount(BpeOps.round0(w), merges, _ + _) == syms.length, s"word '$w'")
+      assert(BpeOps.memo.count(w, merges) == syms.length, s"memo word '$w'")
     }
     // a second merge table on the same thread must not cross-read the memo
     val other = IndexedSeq(("s", "t"))
-    assert(BpeOps.MergeMemo.count("st", other) == 1)
-    assert(BpeOps.MergeMemo.count("st", merges) == 1) // st is also a merge there
-    assert(BpeOps.MergeMemo.count("at", IndexedSeq.empty[(String, String)]) == 2)
+    assert(BpeOps.memo.count("st", other) == 1)
+    assert(BpeOps.memo.count("st", merges) == 1) // st is also a merge there
+    assert(BpeOps.memo.count("at", IndexedSeq.empty[(String, String)]) == 2)
   }
 
   test("bpeTrain learns the textbook merge sequence on the classic fixture") {

@@ -68,6 +68,16 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(chunks == List((0L, 3L, "t0 t1 t2"), (1L, 3L, "t2 t3 t4")))
   }
 
+  test("a non-string argument to a text generator fails analysis") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    Seq((1L, "alpha beta")).toDF("id", "text").createOrReplaceTempView("sql_surface_typed")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT shingle_explode(id, 2) AS s FROM sql_surface_typed").collect()
+    }
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+  }
+
   test("literal-alternation rlike rewrites to one Aho-Corasick pass") {
     GraftFunctions.register(spark)
     import spark.implicits._

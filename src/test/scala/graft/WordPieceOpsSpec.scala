@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.WordPieceOps
+import graft.ops.{Subword, WordPieceOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 class WordPieceOpsSpec extends AnyFunSuite {
@@ -16,15 +16,19 @@ class WordPieceOpsSpec extends AnyFunSuite {
   }
 
   test("applyMergeWp is greedy left-to-right, non-overlapping, WordPiece-fused") {
-    assert(WordPieceOps.applyMergeWp(Seq("q", "##u", "##i"), "q", "##u") ==
+    assert(Subword.applyMerge(Seq("q", "##u", "##i"), "q", "##u",
+      WordPieceOps.mergedSym("q", "##u")) ==
       Seq("qu", "##i"))
     // overlap: the first match consumes both symbols, the trailing copy stays
-    assert(WordPieceOps.applyMergeWp(Seq("a", "##a", "##a"), "a", "##a") ==
+    assert(Subword.applyMerge(Seq("a", "##a", "##a"), "a", "##a",
+      WordPieceOps.mergedSym("a", "##a")) ==
       Seq("aa", "##a"))
-    assert(WordPieceOps.applyMergeWp(Seq("##a", "##a", "##a", "##a"), "##a", "##a") ==
+    assert(Subword.applyMerge(Seq("##a", "##a", "##a", "##a"), "##a", "##a",
+      WordPieceOps.mergedSym("##a", "##a")) ==
       Seq("##aa", "##aa"))
     // no match leaves the word untouched
-    assert(WordPieceOps.applyMergeWp(Seq("x", "##y"), "a", "##b") == Seq("x", "##y"))
+    assert(Subword.applyMerge(Seq("x", "##y"), "a", "##b",
+      WordPieceOps.mergedSym("a", "##b")) == Seq("x", "##y"))
   }
 
   test("wpSymbolCount equals the applyMergeWp fold on randomized words and merge lists") {
@@ -43,13 +47,17 @@ class WordPieceOpsSpec extends AnyFunSuite {
           val i = rnd.nextInt(syms.length - 1)
           merges += ((syms(i), syms(i + 1)))
         } else merges += (("zz", "##zz"))
-        syms = WordPieceOps.applyMergeWp(syms, merges.last._1, merges.last._2)
+        val (l, r) = merges.last
+        syms = Subword.applyMerge(syms, l, r, WordPieceOps.mergedSym(l, r))
       }
-      assert(WordPieceOps.wpSymbolCount(word, merges.toIndexedSeq) == syms.length,
+      assert(Subword.mergedCount(WordPieceOps.round0(word), merges.toIndexedSeq,
+        WordPieceOps.mergedSym) == syms.length,
         s"word $word merges $merges")
     }
-    assert(WordPieceOps.wpSymbolCount("", IndexedSeq.empty) == 0)
-    assert(WordPieceOps.wpSymbolCount("a", IndexedSeq.empty) == 1)
+    assert(Subword.mergedCount(WordPieceOps.round0(""), IndexedSeq.empty,
+      WordPieceOps.mergedSym) == 0)
+    assert(Subword.mergedCount(WordPieceOps.round0("a"), IndexedSeq.empty,
+      WordPieceOps.mergedSym) == 1)
   }
 
   /** The signature WordPiece-vs-BPE corpus: 'th' is 4x more frequent
