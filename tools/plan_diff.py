@@ -23,8 +23,8 @@ One difference is run-dependent and not a plan change: Spark's
 distinct-aggregate rewrite (`Expand` + `gid`) groups the distinct
 columns in a hash map keyed on expression sets, so which gid each
 column gets, and the order of the group keys, follow expression-id
-hashes and can change from one session to the next (q20, q87 and q182
-show it). Two masked plans with the same lines except that some lines
+hashes and can change from one session to the next (q20, q87, q170,
+q181 and q182 show it). Two masked plans with the same lines except that some lines
 hold the same tokens in another order are reported `ORDER <query>` and
 not counted as a difference.
 
