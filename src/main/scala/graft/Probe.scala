@@ -8,6 +8,7 @@ import graft.io.Tables
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev profiling harness: `runMain graft.Probe <sfDir> <passes> <q1,q2,...>
   * [--plan <outDir>]` — runs the named catalog queries in ONE session
@@ -18,7 +19,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * before its final plan exists: the table splits the **build** phase (the
   * query-function call) from the **action** phase (the noop write), each
   * with its driver time outside jobs. `--plan` writes the warm-up build's
-  * formatted explain, before it executes, to `<outDir>/<query>.txt`;
+  * formatted explain, before it executes, to `<outDir>/<query>.txt`, and
+  * the initial physical plan of every SQL execution that build runs (its
+  * eager `localCheckpoint`/`collect`s) to `<outDir>/<query>.build.txt`;
   * `passes = 0` writes plans only. Each job table carries the pass's
   * table-registry hits and misses; the run ends with the registry's
   * session totals (a miss is one table resolution, i.e. one schema job). */
@@ -82,6 +85,43 @@ object Probe {
     }
   }
 
+  /** Collects the SQL executions started while it is attached. */
+  private final class SqlListener extends SparkListener {
+    private val started = mutable.ArrayBuffer.empty[SparkListenerSQLExecutionStart]
+
+    def executions: Seq[SparkListenerSQLExecutionStart] = synchronized(started.toSeq)
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized(started += s)
+      case _ =>
+    }
+  }
+
+  /** Builds catalog query `name` and writes its plans to `dir`: the final
+    * formatted explain to `<name>.txt`, and the initial physical plan of
+    * each SQL execution the build runs, in start order, to
+    * `<name>.build.txt` (empty for a build that runs none). Returns the
+    * built DataFrame. */
+  def writePlans(spark: SparkSession, name: String, sfDir: String, dir: String): DataFrame = {
+    val sc = spark.sparkContext
+    val listener = new SqlListener
+    GraftSqlBridge.drainListenerBus(sc) // no earlier event reaches the listener
+    sc.addSparkListener(listener)
+    val df =
+      try {
+        val built = SparkEntry.queries(name)(spark, sfDir)
+        GraftSqlBridge.drainListenerBus(sc)
+        built
+      } finally sc.removeSparkListener(listener)
+    val execs = listener.executions
+    Files.writeString(Paths.get(dir, s"$name.txt"), df.queryExecution.explainString(FormattedMode))
+    Files.writeString(Paths.get(dir, s"$name.build.txt"), execs.zipWithIndex.map { case (e, i) =>
+      s"== build execution ${i + 1} of ${execs.size}: ${e.description} ==\n${e.physicalPlanDescription}\n"
+    }.mkString("\n"))
+    println(s"[probe] wrote $dir/$name.txt and $dir/$name.build.txt (${execs.size} build executions)")
+    df
+  }
+
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -134,11 +174,7 @@ object Probe {
     val spark = GraftSession.local(appName = "graft-probe")
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
     val minima = names.map { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      planDir.foreach { d =>
-        Files.writeString(Paths.get(d, s"$name.txt"), df.queryExecution.explainString(FormattedMode))
-        println(s"[probe] wrote $d/$name.txt")
-      }
+      val df = planDir.fold(SparkEntry.queries(name)(spark, sfDir))(writePlans(spark, name, sfDir, _))
       if (passes == 0) 0.0
       else {
         noop(df) // warm-up

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Probe.profile]]'s build/action split on real catalog queries. */
@@ -31,6 +33,18 @@ class ProbeSpec extends AnyFunSuite {
     assert(p.tableMisses == 0 && p.tableHits > 0)
     assert(p.action.jobs.nonEmpty)
     assert(p.build.jobs.size + p.action.jobs.size == p.jobs.size)
+  }
+
+  test("q21_minhash_pairs --plan: the build file holds the checkpointed signature aggregate") {
+    val dir = Files.createTempDirectory("probe-plans")
+    Probe.writePlans(spark, "q21_minhash_pairs", sf, dir.toString)
+    assert(Files.exists(dir.resolve("q21_minhash_pairs.txt")))
+    val build = Files.readString(dir.resolve("q21_minhash_pairs.build.txt"))
+    // the one-scan MinHash signature: k family minima and the distinct
+    // shingle-hash set in one aggregate, run by the build's checkpoint
+    assert(build.contains("localCheckpoint at"), build)
+    assert(build.linesIterator.exists(l => l.startsWith("Functions") &&
+      l.contains("min(") && l.contains("collect_set(")), build)
   }
 
   test("driver time outside jobs: overlapping jobs count once, clipped to the phase") {
