@@ -48,7 +48,6 @@ object Queries {
   private val unicodeAnalyzer = UnicodeAnalyzer(
     stopwords = cfg.stopwords ++ Seq("هستند"), lemmas = unicodeLemmas)
 
-  /** name -> (spark impl, Some(oracle sql)). */
   /** q139's fixed merge table: a deliberately CASCADING list (later
     * merges consume earlier merged symbols — at, ch → atch) so the
     * oracle's fold chain is exercised beyond single-char pairs. */
@@ -79,6 +78,7 @@ object Queries {
   val mixPlanWeights: Seq[(String, Long)] = Seq(
     ("src0", 40L), ("src1", 25L), ("src2", 20L), ("src3", 10L), ("src_news", 5L))
 
+  /** name -> (spark impl, Some(oracle sql)). */
   val catalog: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     ("q01_industry_counts",

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *  - exact dedup = one hash-shuffle on the key (window rn=1, deterministic
   *    keeper), never `dropDuplicates` (whose survivor is partition-order
   *    dependent);
-  *  - MinHash-LSH is the 100 TB path: candidate generation is a self-join on
-  *    (band, bandHash) bucket keys — cost scales with bucket collisions, not
-  *    n² pairs; signatures/shingles are per-row codegen'd expressions;
+  *  - MinHash-LSH is the 100 TB path: candidate generation groups on
+  *    (band, bh) bucket keys and expands each capped bucket locally
+  *    ([[NearDup]]) — cost scales with bucket collisions, not n² pairs;
   *  - brute-force Jaccard is the verification baseline, only ever run on an
   *    explicit sample (the all-pairs cross join is intentionally gated on a
   *    sampling predicate);
@@ -174,13 +174,11 @@ object DedupOps {
       nBuckets: Int = 10): DataFrame = {
     require(nBands >= 1 && r >= 1, s"bad band shape: $nBands x $r")
     require(nBuckets >= 1, s"bad nBuckets: $nBuckets")
-    val sampled = md5TopNSample(docs, textCol, idCol, sampleN)
     // sample-bounded (sampleN rows of signature + hash set), feeds BOTH
-    // cross-join sides — materialize once instead of re-scanning the
+    // cross-join sides — materialized once instead of re-scanning the
     // corpus and re-minhashing per side (r9: q160 5.3 s → ~3 s at sf0.1)
-    val side = minhashSignatures(sampled, textCol, idCol, w, nBands * r)
-      .join(shingleHashSets(sampled, textCol, idCol, w), "id")
-      .localCheckpoint()
+    val side = signatures(md5TopNSample(docs, textCol, idCol, sampleN),
+      textCol, idCol, w, nBands * r)
     // re-spread the STREAMED side (the [[jaccardBruteForce]] trick, r13;
     // EXPLICIT count r14): the top-N checkpoint lands in one partition,
     // so without this the whole n²/2 S-curve kernel (array_intersect +
@@ -427,50 +425,21 @@ object DedupOps {
       .select(col("id"), shingles(col("toks"), w).as("sh"))
   }
 
-  /** MinHash-LSH near-duplicate pairs.
-    *
-    * shingle(w) → minhash signature (k) → band keys (nBands × r, k = nBands*r)
-    * → self-join on (band, bandHash) for candidates → exact Jaccard verify
-    * → top-`limit` pairs by similarity (total order).
-    *
-    * The self-join shuffles only (id, band, bandHash) triples; shingle sets
-    * are re-joined just for the surviving candidate pairs. */
   /** (id, band, bh) LSH bucket keys for every doc — the shared front half
-    * of the MinHash family. Signature as an AGGREGATION over generator
-    * output: ShingleExplode emits each doc's distinct shingles in one JVM
-    * pass (no intermediate array column — see graft.functions.Generators
-    * for why that matters), each shingle is md5'd ONCE (codegen'd), and
-    * the k-member family minima are plain min() aggregates. Partial
-    * aggregation collapses a doc's shingles map-side (they are born in one
-    * partition), so the shuffle carries one k-wide row per doc. */
+    * of the MinHash family, off the one-scan [[NearDup.minhashSignatures]]
+    * (its unread hash set is pruned from the plan). */
   private[graft] def bandKeys(
       docs: DataFrame, textCol: String, idCol: String,
-      w: Int, nBands: Int, r: Int): DataFrame = {
-    val sig = minhashSignatures(docs, textCol, idCol, w, nBands * r)
-    sig.select(
-      col("id"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band"), bandHash(col("m"), b, r).as("bh"))): _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
+      w: Int, nBands: Int, r: Int): DataFrame =
+    NearDup.bandRows(NearDup.minhashSignatures(docs, textCol, idCol, w, nBands * r),
+      Seq("id"), col("m"), nBands, r)
 
-  /** The (id, k-member signature array) relation [[bandKeys]] derives its
-    * band keys from — one k-wide row per doc off a single shingle scan
-    * (partial aggregation collapses a doc's shingles map-side). Shared by
-    * [[minhashCalibration]], which compares component agreement against
-    * the exact verify. */
-  private[graft] def minhashSignatures(
-      docs: DataFrame, textCol: String, idCol: String,
-      w: Int, k: Int): DataFrame = {
-    val aggCols = (0 until k).map(j => min(minhashMember(j, col("h"))).as(s"m$j"))
-    docs
-      .filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), Generators.shingleExplode(col(textCol), w).as("s"))
-      .select(col("id"), hash28(col("s")).as("h"))
-      .groupBy("id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(col("id"), array((0 until k).map(j => col(s"m$j")): _*).as("m"))
-  }
+  /** [[NearDup.minhashSignatures]] (id, m, hs), materialized: every caller
+    * reads it from two or three branches (the band pipeline and both
+    * verify sides), which would otherwise each re-scan the corpus. */
+  private def signatures(
+      docs: DataFrame, textCol: String, idCol: String, w: Int, k: Int): DataFrame =
+    NearDup.minhashSignatures(docs, textCol, idCol, w, k).localCheckpoint()
 
   /** The persisted corpus band-key INDEX of the incremental near-dup
     * design ([[minhashDedupDelta]]'s production half): (id, band, bh),
@@ -483,6 +452,12 @@ object DedupOps {
       w: Int = 3, nBands: Int = 8, r: Int = 2): DataFrame =
     bandKeys(docs, textCol, idCol, w, nBands, r)
 
+  /** MinHash-LSH near-duplicate pairs: shingle(w) → one-scan signature
+    * (k = nBands·r minima + the distinct shingle-hash set) → (band, bh)
+    * bucket keys → capped bucket pairs → exact hash-set Jaccard verify →
+    * top-`limit` pairs by similarity (total order). The bucket shuffle
+    * carries only (id, band, bh); the verify joins attach the carried
+    * hash sets to the surviving candidates. */
   def minhashPairs(
       docs: DataFrame, textCol: String, idCol: String,
       w: Int = 3, nBands: Int = 8, r: Int = 2,
@@ -501,13 +476,15 @@ object DedupOps {
       docs: DataFrame, textCol: String, idCol: String,
       w: Int, nBands: Int, r: Int,
       minJaccard: Double, maxBucket: Int = 1000): DataFrame =
-    candidateHashPairs(docs, textCol, idCol, w, nBands, r, maxBucket)
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("__ha"), col("__hb"))).as("__ni"),
-        (size(col("__ha")) + size(col("__hb"))).as("__ns"))
-      .select(col("doc_a"), col("doc_b"),
-        jaccardFromNi(col("__ni"), col("__ns")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    verifiedPairs(signatures(docs, textCol, idCol, w, nBands * r),
+      nBands, r, minJaccard, maxBucket)
+
+  /** (doc_a, doc_b, jaccard) of the candidate pairs of signatures `sig`
+    * at or above `minJaccard`. */
+  private def verifiedPairs(
+      sig: DataFrame, nBands: Int, r: Int, minJaccard: Double, maxBucket: Int): DataFrame =
+    NearDup.hashSetJaccard(candidateHashPairs(sig, nBands, r, maxBucket),
+      Seq(col("doc_a"), col("doc_b")), col("__ha"), col("__hb"), minJaccard)
 
   /** MINHASH ESTIMATOR CALIBRATION: for every verified LSH pair, the
     * signature-agreement ESTIMATE of Jaccard (matching components / k —
@@ -522,8 +499,8 @@ object DedupOps {
     * buckets) — re-tune bands before trusting recall.
     *
     * 100 TB shape: pairs come from the capped LSH pipeline (never n²);
-    * signatures are one k-wide row per doc off the same one-scan
-    * aggregate the band keys use; the component comparison is a
+    * the signatures are the materialized relation the pairs came from,
+    * read back by id; the component comparison is a
     * zip_with/aggregate HOF inside codegen. Integer ppm everywhere; the
     * exact side enters as its 6-dp contract rounded to ppm. */
   def minhashCalibration(
@@ -532,9 +509,8 @@ object DedupOps {
       minJaccard: Double = 0.0, limit: Int = 50,
       maxBucket: Int = 1000): DataFrame = {
     val k = nBands * r
-    val pairs = minhashVerifiedPairs(docs, textCol, idCol, w, nBands, r,
-      minJaccard, maxBucket)
-    val sig = minhashSignatures(docs, textCol, idCol, w, k)
+    val sig = signatures(docs, textCol, idCol, w, k)
+    val pairs = verifiedPairs(sig, nBands, r, minJaccard, maxBucket)
     val matches = aggregate(
       zip_with(col("ma"), col("mb"), (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), (acc, x) => acc + x)
@@ -551,96 +527,23 @@ object DedupOps {
       .limit(limit)
   }
 
-  /** The shared LSH candidate pipeline behind [[minhashVerifiedPairs]]
-    * and [[containmentPairs]]: one-scan signature + carried hash sets,
-    * (band, bh) bucket collect with the `maxBucket` degenerate cap, lazy
-    * pair expansion, both sides' distinct shingle-hash sets attached.
-    * Returns (doc_a, doc_b, __ha, __hb). */
+  /** The shared LSH candidate pipeline behind [[minhashVerifiedPairs]],
+    * [[minhashCalibration]] and [[containmentPairs]] over materialized
+    * one-scan signatures `sig` (id, m, hs): (band, bh) bucket pairs under
+    * the `maxBucket` cap, a pair colliding in several bands once, both
+    * sides' carried hash sets attached. (Carrying the sets measured 2.7 s
+    * → 1.5 s at sf0.1 on [[minhashDedupDelta]] against a verify that
+    * re-joined raw text and re-shingled both sides.) Returns (doc_a,
+    * doc_b, __ha, __hb). */
   private def candidateHashPairs(
-      docs: DataFrame, textCol: String, idCol: String,
-      w: Int, nBands: Int, r: Int, maxBucket: Int): DataFrame = {
-    val k = nBands * r
-    // Signature + verify set in ONE corpus scan: the aggregate takes the
-    // k family minima AND collect_sets the distinct 28-bit shingle hashes
-    // (the same carried-hash design as [[minhashDedupDelta]], where it
-    // measured 2.7 s → 1.5 s at sf0.1 against a verify stage that
-    // re-joined raw text and re-shingled both candidate sides).
-    // localCheckpoint: the frame feeds the band pipeline and both verify
-    // joins — three consumers of one scan.
-    val aggCols = (0 until k).map(j =>
-      min(minhashMember(j, col("h"))).as(s"m$j")) :+
-      collect_set(col("h")).as("hs")
-    val sig = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        Generators.shingleExplode(col(textCol), w).as("s"))
-      .select(col("id"), hash28(col("s")).as("h"))
-      .groupBy("id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(col("id"),
-        array((0 until k).map(j => col(s"m$j")): _*).as("m"), col("hs"))
-      .localCheckpoint()
-    val bands = sig.select(
-      col("id"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band"), bandHash(col("m"), b, r).as("bh"))): _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    // Pairs via groupBy-collect instead of a bucket self-join: the single
-    // shuffle key is (band, bh). Per-bucket pair expansion is local and
-    // capped at `maxBucket` members: a bucket of n near-identical docs
-    // yields n(n-1)/2 candidate pairs, so one degenerate bucket (mass
-    // duplication) can dominate the whole job — run exactDedup FIRST on
-    // dup-heavy corpora, and let the cap bound the worst case (dropped
-    // buckets are all-duplicates clusters that exact dedup handles more
-    // cheaply anyway).
-    val cand = bands
-      .groupBy("band", "bh")
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
-      // generator, not explode(orderedPairs(...)): the inferred-filter
-      // inlining rebuilds the O(n²) pair array per emitted pair
-      .select(Generators.pairsExplode(col("ids")).as(Seq("doc_a", "doc_b")))
+      sig: DataFrame, nBands: Int, r: Int, maxBucket: Int): DataFrame =
+    NearDup.bucketPairs(NearDup.bandRows(sig, Seq("id"), col("m"), nBands, r),
+        Seq("band", "bh"), col("id"), maxBucket, Seq("doc_a", "doc_b"))
       .distinct()
-    cand
       .join(sig.select(col("id").as("doc_a"), col("hs").as("__ha")), "doc_a")
       .join(sig.select(col("id").as("doc_b"), col("hs").as("__hb")), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("__ha"), col("__hb"))
-  }
 
-  /** EXACT-COMPLETE Jaccard self-join by PREFIX FILTERING (the AllPairs /
-    * PPJoin candidate principle — Bayardo et al. WWW 2007; the
-    * distributed formulation is Vernica et al. SIGMOD 2010): every pair
-    * of docs whose distinct w-shingle-hash sets have Jaccard ≥ tNum/tDen,
-    * with NO probabilistic recall loss — the guarantee the whole MinHash
-    * family trades away for speed. The filter: order the universe by
-    * ascending frequency (rarest first, ties by hash), give each doc a
-    * PREFIX of its first |x| − ⌈t·|x|⌉ + 1 ordered elements, and only
-    * pairs sharing a prefix element can reach Jaccard t — if x and y
-    * shared no prefix element, their intersection would fit inside the
-    * suffixes, |x∩y| ≤ ⌈t·|x|⌉ − 1 < t·|x| ≤ t·|x∪y|. Every surviving
-    * candidate is verified EXACTLY, and the threshold test is the integer
-    * cross-multiplication tDen·|∩| ≥ tNum·|∪| — the threshold is a
-    * RATIONAL, so no double sits near the keep boundary.
-    *
-    * Rarest-first ordering is what makes the filter bite: a stop-shingle
-    * in every doc lands at the END of every ordered set and almost never
-    * inside a prefix, so candidate buckets form around RARE shingles.
-    * The `maxBucket` cap bounds the degenerate corpus (mass-duplicated
-    * docs bucket together on their rare shingles) exactly like the LSH
-    * paths — completeness is modulo the cap, and dropped buckets are
-    * all-duplicate clusters that [[exactDedup]] should have removed
-    * first.
-    *
-    * 100 TB shape: one corpus scan to distinct (doc, hash) occurrences;
-    * the frequency relation is universe-sized and joins on the hash key
-    * (never broadcast, never collected); per-doc ordering is a local
-    * `sort_array` inside the doc-key aggregate, NOT a global window; the
-    * prefix explode shuffles ≈ (1−t)·Σ|x| rows (each carrying one
-    * BIGINT suffix-median probe for the PPJoin+ suffix filter — the
-    * arrays themselves never ride the shuffle); per-bucket pair
-    * expansion is the lazy capped [[graft.functions.Generators.PairsExplode]];
-    * verify joins attach the two ordered key arrays by doc key. Output:
-    * (doc_a, doc_b, n_common, n_union, jaccard_ppm) — exact integers,
-    * jaccard in ppm, total-ordered. */
   /** SQL text of the depth-1 PPJoin+ suffix-filter hamming lower bound
     * for ONE probe direction: probe value `v` (the other suffix's exact
     * median) lands in this suffix (own median `m`, strict-left size
@@ -705,6 +608,41 @@ object DedupOps {
     (1 + (la + lb - math.max(h1, h2)) / 2) * (tNum + tDen) >= tNum * (na + nb)
   }
 
+  /** EXACT-COMPLETE Jaccard self-join by PREFIX FILTERING (the AllPairs /
+    * PPJoin candidate principle — Bayardo et al. WWW 2007; the
+    * distributed formulation is Vernica et al. SIGMOD 2010): every pair
+    * of docs whose distinct w-shingle-hash sets have Jaccard ≥ tNum/tDen,
+    * with NO probabilistic recall loss — the guarantee the whole MinHash
+    * family trades away for speed. The filter: order the universe by
+    * ascending frequency (rarest first, ties by hash), give each doc a
+    * PREFIX of its first |x| − ⌈t·|x|⌉ + 1 ordered elements, and only
+    * pairs sharing a prefix element can reach Jaccard t — if x and y
+    * shared no prefix element, their intersection would fit inside the
+    * suffixes, |x∩y| ≤ ⌈t·|x|⌉ − 1 < t·|x| ≤ t·|x∪y|. Every surviving
+    * candidate is verified EXACTLY, and the threshold test is the integer
+    * cross-multiplication tDen·|∩| ≥ tNum·|∪| — the threshold is a
+    * RATIONAL, so no double sits near the keep boundary.
+    *
+    * Rarest-first ordering is what makes the filter bite: a stop-shingle
+    * in every doc lands at the END of every ordered set and almost never
+    * inside a prefix, so candidate buckets form around RARE shingles.
+    * The `maxBucket` cap bounds the degenerate corpus (mass-duplicated
+    * docs bucket together on their rare shingles) exactly like the LSH
+    * paths — completeness is modulo the cap, and dropped buckets are
+    * all-duplicate clusters that [[exactDedup]] should have removed
+    * first.
+    *
+    * 100 TB shape: one corpus scan to distinct (doc, hash) occurrences;
+    * the frequency relation is universe-sized and joins on the hash key
+    * (never broadcast, never collected); per-doc ordering is a local
+    * `sort_array` inside the doc-key aggregate, NOT a global window; the
+    * prefix explode shuffles ≈ (1−t)·Σ|x| rows (each carrying one
+    * BIGINT suffix-median probe for the PPJoin+ suffix filter — the
+    * arrays themselves never ride the shuffle); per-bucket pair
+    * expansion is the lazy capped [[graft.functions.Generators.PairsExplode]];
+    * verify joins attach the two ordered key arrays by doc key. Output:
+    * (doc_a, doc_b, n_common, n_union, jaccard_ppm) — exact integers,
+    * jaccard in ppm, total-ordered. */
   def jaccardJoinExact(
       docs: DataFrame, textCol: String, idCol: String,
       w: Int = 3, tNum: Long = 1L, tDen: Long = 2L,
@@ -812,12 +750,9 @@ object DedupOps {
           "CAST(pos + 2 + (n - 2 - pos) div 2 AS INT)) END AS m",
         "col AS h")
     val mpos = meet.select(col("id"), col("i"), col("m"))
-    val cand = meet
-      .select(struct(col("id"), col("n"), col("i")).as("ms0"), col("h"))
-      .groupBy("h")
-      .agg(collect_list(col("ms0")).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-      .select(Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
+    val cand = NearDup.bucketPairs(
+        meet.select(struct(col("id"), col("n"), col("i")).as("ms0"), col("h")),
+        Seq("h"), col("ms0"), maxBucket, Seq("a", "b"))
       .filter(least(col("a.n"), col("b.n")) * tDen >=
         greatest(col("a.n"), col("b.n")) * tNum)
       .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
@@ -877,7 +812,7 @@ object DedupOps {
       w: Int = 3, nBands: Int = 8, r: Int = 2,
       minContainment: Double = 0.8, limit: Int = 50,
       maxBucket: Int = 1000): DataFrame =
-    candidateHashPairs(docs, textCol, idCol, w, nBands, r, maxBucket)
+    candidateHashPairs(signatures(docs, textCol, idCol, w, nBands * r), nBands, r, maxBucket)
       // intersect size bound ONCE — it feeds the containment AND the
       // jaccard; set sizes are cheap but bound too for the min/union math
       .select(col("doc_a"), col("doc_b"),
@@ -886,7 +821,7 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"),
         round(col("__ni").cast("double") /
           least(col("__na"), col("__nb")).cast("double"), 6).as("containment"),
-        jaccardFromNi(col("__ni"), col("__na") + col("__nb")).as("jaccard"))
+        NearDup.jaccardFromNi(col("__ni"), col("__na") + col("__nb")).as("jaccard"))
       .filter(col("containment") >= minContainment)
       .orderBy(col("containment").desc, col("doc_a").asc, col("doc_b").asc)
       .limit(limit)
@@ -976,29 +911,10 @@ object DedupOps {
       textCol: String, idCol: String,
       w: Int = 3, nBands: Int = 8, r: Int = 2,
       minJaccard: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    val k = nBands * r
-    def sigs(docs: DataFrame): DataFrame = {
-      val aggCols = (0 until k).map(j =>
-        min(minhashMember(j, col("h"))).as(s"m$j")) :+
-        collect_set(col("h")).as("hs")
-      docs.filter(col(textCol).isNotNull)
-        .select(col(idCol).as("id"),
-          Generators.shingleExplode(col(textCol), w).as("s"))
-        .select(col("id"), hash28(col("s")).as("h"))
-        .groupBy("id")
-        .agg(aggCols.head, aggCols.tail: _*)
-        .select(col("id"),
-          array((0 until k).map(j => col(s"m$j")): _*).as("m"), col("hs"))
-        .localCheckpoint()
-    }
-    def bands(sig: DataFrame, isNew: Boolean): DataFrame = sig.select(
-      col("id"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band"), bandHash(col("m"), b, r).as("bh"))): _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .withColumn("__new", lit(isNew))
-    val sigNew = sigs(newDocs)
-    val sigOld = sigs(existing)
+    def bands(sig: DataFrame, isNew: Boolean): DataFrame =
+      NearDup.bandRows(sig, Seq("id"), col("m"), nBands, r).withColumn("__new", lit(isNew))
+    val sigNew = signatures(newDocs, textCol, idCol, w, nBands * r)
+    val sigOld = signatures(existing, textCol, idCol, w, nBands * r)
     val cand = bands(sigNew, isNew = true)
       .unionByName(bands(sigOld, isNew = false))
       .groupBy("band", "bh")
@@ -1014,29 +930,15 @@ object DedupOps {
       .distinct()
     val best = Window.partitionBy(col("doc_id"))
       .orderBy(col("jaccard").desc, col("near_dup_of").asc)
-    cand
+    val withSets = cand
       .join(sigNew.select(col("id").as("sid"), col("hs").as("__hss")), "sid")
       .join(sigOld.select(col("id").as("cid"), col("hs").as("__hsc")), "cid")
-      .select(col("sid").as("doc_id"), col("cid").as("near_dup_of"),
-        size(array_intersect(col("__hss"), col("__hsc"))).as("__ni"),
-        (size(col("__hss")) + size(col("__hsc"))).as("__ns"))
-      .select(col("doc_id"), col("near_dup_of"),
-        jaccardFromNi(col("__ni"), col("__ns")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    NearDup.hashSetJaccard(withSets, Seq(col("sid").as("doc_id"), col("cid").as("near_dup_of")),
+        col("__hss"), col("__hsc"), minJaccard)
       .withColumn("__rk", row_number().over(best))
       .filter(col("__rk") === 1).drop("__rk")
       .orderBy("doc_id")
   }
-
-  /** Exact Jaccard from a BOUND intersection size `ni` and the summed
-    * set sizes `ns` (|A∪B| = |A|+|B|−|A∩B| for distinct sets), 6 dp —
-    * the hash-set verify arithmetic of the MinHash families. Callers
-    * bind `size(array_intersect(…))` ONCE as a named column in the
-    * projection before this one (the lshBandSCurve convention), so each
-    * pair pays exactly one array pass structurally — not via codegen
-    * subexpression elimination, and with no array_union second pass. */
-  private[graft] def jaccardFromNi(ni: Column, ns: Column): Column =
-    round(ni.cast("double") / (ns - ni).cast("double"), 6)
 
   /** Per-doc DISTINCT 28-bit shingle-hash sets, map-only (no shuffle):
     * the verify-side companion of [[bandKeyIndex]] — persisted next to
@@ -1075,7 +977,7 @@ object DedupOps {
     val sigExpr = array((0 until k).map(j =>
       array_min(transform(col("__hs"), h => minhashMember(j, h)))): _*)
     val carryCols = carry.map(col)
-    val banded = docs
+    val signed = docs
       .filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id") +: carryCols :+ toksC.as("__toks"): _*)
       // same gate as the batch signature pipeline: docs under w tokens
@@ -1083,23 +985,13 @@ object DedupOps {
       .filter(size(col("__toks")) >= w)
       .withColumn("__hs", array_distinct(hsExpr))
       .withColumn("__sig", sigExpr)
-      .select(col("doc_id") +: carryCols ++: Seq(col("__hs"),
-        explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("band"), bandHash(col("__sig"), b, r).as("bh"))): _*))
-          .as("bb")): _*)
-      .select(col("doc_id") +: carryCols ++: Seq(col("__hs"),
-        col("bb.band").as("band"), col("bb.bh").as("bh")): _*)
-    banded
+    val cand = NearDup.bandRows(signed, ("doc_id" +: carry) :+ "__hs", col("__sig"), nBands, r)
       .join(corpusIndex.select(col("id").as("__cid"), col("band"), col("bh")),
         Seq("band", "bh"))
       .join(corpusHashSets.select(col("id").as("__cid"), col("hs").as("__chs")),
         Seq("__cid"))
-      .select(col("doc_id") +: carryCols ++: Seq(col("__cid"),
-        size(array_intersect(col("__hs"), col("__chs"))).as("__ni"),
-        (size(col("__hs")) + size(col("__chs"))).as("__ns")): _*)
-      .select(col("doc_id") +: carryCols ++: Seq(col("__cid"),
-        jaccardFromNi(col("__ni"), col("__ns")).as("jaccard")): _*)
-      .filter(col("jaccard") >= minJaccard)
+    NearDup.hashSetJaccard(cand, col("doc_id") +: carryCols :+ col("__cid"),
+      col("__hs"), col("__chs"), minJaccard)
   }
 
   /** INDEXED incremental near-dup screen: [[minhashDedupDelta]]'s verdicts
@@ -1259,13 +1151,8 @@ object DedupOps {
           shiftright(col("fp"), c * chunkBits)
             .bitwiseAND(lit((1L << chunkBits) - 1)).as("v"))): _*)).as("ch"))
       .select(col("id"), col("fp"), col("ch.c").as("c"), col("ch.v").as("v"))
-    chunks
-      .groupBy("c", "v")
-      .agg(collect_list(struct(col("id"), col("fp"))).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-      // generator (struct form, ordered by the unique id first field) —
-      // not explode(orderedPairs(...)); see minhashPairs
-      .select(Generators.pairsExplode(col("ms")).as(Seq("pa", "pb")))
+    NearDup.bucketPairs(chunks, Seq("c", "v"), struct(col("id"), col("fp")), maxBucket,
+        Seq("pa", "pb"))
       .select(col("pa.id").as("doc_a"), col("pb.id").as("doc_b"),
         bit_count(col("pa.fp").bitwiseXOR(col("pb.fp"))).cast("long").as("hamming"))
       // the same pair can collide in several chunks — dedup before filter

@@ -252,14 +252,6 @@ object RelationalOps {
       .agg(count(lit(1)).as("n"))
       .orderBy("event_type", "bin_lo")
 
-  /** EXACT percentile profile per group: linear-interpolated quantiles via
-    * Spark's exact `percentile` aggregate (NOT `percentile_approx` — the
-    * approximate sketch is engine-specific and not oracle-matchable; the
-    * exact form is deterministic and agrees with `quantile_cont`
-    * cross-engine at 6 dp). Exact percentiles buffer each group's values —
-    * the documented trade: use this on bounded-cardinality metric columns,
-    * reach for `percentile_approx` when a sketch is acceptable and groups
-    * are unbounded. */
   /** Column label for percentile `p` ∈ [0,1]: `p25`, `p99`, `p99_5` (the
     * full decimal survives — `p0.995` and `p1.0` must not collide, and
     * fractional percents must not silently round). Single source of truth
@@ -271,6 +263,14 @@ object RelationalOps {
     "p" + pct.toPlainString.replace(".", "_")
   }
 
+  /** EXACT percentile profile per group: linear-interpolated quantiles via
+    * Spark's exact `percentile` aggregate (NOT `percentile_approx` — the
+    * approximate sketch is engine-specific and not oracle-matchable; the
+    * exact form is deterministic and agrees with `quantile_cont`
+    * cross-engine at 6 dp). Exact percentiles buffer each group's values —
+    * the documented trade: use this on bounded-cardinality metric columns,
+    * reach for `percentile_approx` when a sketch is acceptable and groups
+    * are unbounded. */
   def valuePercentiles(events: DataFrame, typeCol: String, valueCol: String,
       ps: Seq[Double]): DataFrame = {
     val labels = ps.map(percentileLabel)

@@ -169,14 +169,11 @@ object SimilarityOps {
 
   /** Every unordered pair within each `cell` group of 2..`maxCell`
     * members (`id`, `v`), with its cosine: (vec_a, vec_b, cos). Vectors
-    * ride the cell shuffle as struct payloads (PairsExplode orders by the
-    * unique long first field), so nothing joins back to the corpus. */
+    * ride the cell shuffle as struct payloads ([[NearDup.bucketPairs]]),
+    * so nothing joins back to the corpus. */
   private def cellPairCos(
       rows: DataFrame, cell: String, id: Column, v: Column, maxCell: Int): DataFrame =
-    rows.groupBy(cell)
-      .agg(collect_list(struct(id, v)).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxCell)
-      .select(graft.functions.Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
+    NearDup.bucketPairs(rows, Seq(cell), struct(id, v), maxCell, Seq("a", "b"))
       .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"),
         cosine(col("a.v"), col("b.v")).as("cos"))
 
@@ -271,7 +268,11 @@ object SimilarityOps {
     * exactly ONE bucket, so no cross-band dedup is needed); exact cosine
     * verifies. Candidate generation is a groupBy-collect on the bucket id —
     * one shuffle, pipeline evaluated once — the same shape as MinHash-LSH
-    * in [[graft.ops.DedupOps.minhashPairs]].
+    * in [[graft.ops.DedupOps.minhashPairs]]. Vectors ride the bucket
+    * shuffle ([[cellPairCos]], [[knnGraph]]'s form), so nothing joins
+    * back to the corpus: at sf0.1 this ran q32 in 0.30–0.39 s against
+    * 0.39–0.47 s for the two-join form (min of 5 passes, 3 alternating
+    * rounds in one checkout, control q83 unchanged).
     *
     * `maxBucket` bounds the per-bucket pair expansion (n(n-1)/2) exactly as
     * in minhashPairs: with only 2^nPlanes buckets, ONE dense bucket — e.g. a
@@ -284,20 +285,9 @@ object SimilarityOps {
       nPlanes: Int, dim: Int, minCos: Double, limit: Int,
       maxBucket: Int = 1000): DataFrame = {
     val planes = hyperplanes(nPlanes, dim)
-    val bucketed = emb.select(
-      col(idCol).as("id"), lshBucket(col(vecCol), planes).as("bucket"))
-    val cand = bucketed
-      .groupBy("bucket")
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
-      // generator, not explode(orderedPairs(...)): the inferred-filter
-      // inlining would rebuild the O(n²) pair array per emitted pair
-      .select(graft.functions.Generators.pairsExplode(col("ids"))
-        .as(Seq("vec_a", "vec_b")))
-    cand
-      .join(emb.select(col(idCol).as("vec_a"), col(vecCol).as("va")), "vec_a")
-      .join(emb.select(col(idCol).as("vec_b"), col(vecCol).as("vb")), "vec_b")
-      .select(col("vec_a"), col("vec_b"), cosine(col("va"), col("vb")).as("cos"))
+    val bucketed = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
+      lshBucket(col(vecCol), planes).as("bucket"))
+    cellPairCos(bucketed, "bucket", col("id"), col("v"), maxBucket)
       .filter(col("cos") >= minCos)
       .orderBy(col("cos").desc, col("vec_a").asc, col("vec_b").asc)
       .limit(limit)
@@ -323,18 +313,18 @@ object SimilarityOps {
     * pairs per cell, capped at `maxCell` — same guardrail as
     * [[embeddingNearDupPairs]]); the keeper argmin is one
     * map-side-combinable groupBy over surviving pairs. Nothing is
-    * corpus-quadratic. */
+    * corpus-quadratic. The pairs fetch their vectors by two corpus joins:
+    * carrying them through the cell shuffle ([[cellPairCos]]) measured
+    * no faster here (sf0.1 q69 median 0.80–0.89 s carried vs 0.81–0.82 s
+    * joined, and slower than joined against control q83 in 6 of 8
+    * paired runs) — q69 is sensitive to its pair-stage layout, as the r14
+    * respread note in [[knnGraph]] found too. */
   def semanticDedup(
       emb: DataFrame, idCol: String, vecCol: String,
       centroidMod: Int, minCos: Double, maxCell: Int = 1000): DataFrame = {
-    val cand = ivfAssignments(emb, idCol, vecCol, ivfCentroids(emb, idCol, vecCol, centroidMod))
-      .groupBy("cid")
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxCell)
-      // generator, not explode(orderedPairs(...)) — see embeddingNearDupPairs
-      .select(graft.functions.Generators.pairsExplode(col("ids"))
-        .as(Seq("vec_a", "vec_b")))
-    val pairs = cand
+    val pairs = NearDup.bucketPairs(
+        ivfAssignments(emb, idCol, vecCol, ivfCentroids(emb, idCol, vecCol, centroidMod)),
+        Seq("cid"), col("id"), maxCell, Seq("vec_a", "vec_b"))
       .join(emb.select(col(idCol).as("vec_a"), col(vecCol).as("va")), "vec_a")
       .join(emb.select(col(idCol).as("vec_b"), col(vecCol).as("vb")), "vec_b")
       .select(col("vec_a"), col("vec_b"), cosine(col("va"), col("vb")).as("cos"))
@@ -856,15 +846,30 @@ object SimilarityOps {
   private def e6(d: Column): Column =
     (d.cast("decimal(18,6)") * 1000000).cast("long")
 
+  /** The PQ subvector length `dim / m`; `dim` must split evenly into `m`
+    * subspaces. */
+  private def subLenOf(dim: Int, m: Int): Int = {
+    require(m >= 1 && dim % m == 0, s"dim $dim must split evenly into $m subspaces")
+    dim / m
+  }
+
+  /** The `keep` columns next to one (sub, sv) row per PQ subspace of `v`
+    * (`m` subspaces): sv is the contiguous `subLen`-long slice of `v`
+    * that starts at component sub·subLen. */
+  private def subvectors(
+      df: DataFrame, keep: Seq[Column], v: Column, m: Int, subLen: Int): DataFrame = {
+    val split = df.select(keep ++ Seq(explode(sequence(lit(0), lit(m - 1))).as("sub"),
+      v.as("__v")): _*)
+    split.select(split.columns.dropRight(2).map(col) ++ Seq(col("sub"),
+      slice(col("__v"), col("sub") * subLen + lit(1), lit(subLen)).as("sv")): _*)
+  }
+
   /** Sub-vector rows for product quantization: one row per (vector,
     * subspace) with the contiguous L-dim slice as double. */
   private def pqSubvectors(emb: DataFrame, idCol: String, vecCol: String,
       m: Int, subLen: Int): DataFrame =
-    emb.select(col(idCol).as("id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col(vecCol).as("v"))
-      .select(col("id"), col("sub"),
-        transform(slice(col("v"), col("sub") * subLen + lit(1), lit(subLen)),
-          x => x.cast("double")).as("sv"))
+    subvectors(emb, Seq(col(idCol).as("id")), col(vecCol), m, subLen)
+      .select(col("id"), col("sub"), asDouble(col("sv")).as("sv"))
 
   /** PRODUCT QUANTIZATION codebook training (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): split each
@@ -883,9 +888,8 @@ object SimilarityOps {
   def pqTrainCodebooks(
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, ksub: Int, iters: Int): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must split evenly into $m subspaces")
+    val subLen = subLenOf(dim, m)
     require(ksub >= 1 && iters >= 1, "pq needs >=1 centroid and >=1 iteration")
-    val subLen = dim / m
     val subs = pqSubvectors(emb, idCol, vecCol, m, subLen)
     var cents = pqSubvectors(emb.orderBy(col(idCol).asc).limit(ksub), idCol, vecCol, m, subLen)
       .select(col("sub"), col("id").as("cid"), col("sv").as("cv"))
@@ -1107,9 +1111,8 @@ object SimilarityOps {
       emb: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
       dim: Int, m: Int, ksub: Int, iters: Int):
       (DataFrame, DataFrame, DataFrame) = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must split evenly into $m subspaces")
+    val subLen = subLenOf(dim, m)
     require(ksub >= 1 && iters >= 1, "pq needs >=1 centroid and >=1 iteration")
-    val subLen = dim / m
     // coarse assignment + residual, one corpus pass; checkpointed because
     // every Lloyd iteration, the encode branch, and nothing else should
     // re-run the corpus × centroid ranking
@@ -1139,10 +1142,7 @@ object SimilarityOps {
         cents, Seq(col("id"), col("v")), BestCell, "__best")
       .select(col("id"), (-col("__best.ncid")).as("ccell"),
         zip_with(col("v"), col("__best.cv"), (x, c) => x - c).as("rv"))
-      .select(col("id"), col("ccell"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("rv"))
-      .select(col("id"), col("ccell"), col("sub"),
-        slice(col("rv"), col("sub") * subLen + lit(1), lit(subLen)).as("sv"))
+      .transform(subvectors(_, Seq(col("id"), col("ccell")), col("rv"), m, subLen))
 
   /** Encode ARRIVING vectors against a FROZEN IVF-PQ index (the
     * centroids + codebooks of [[ivfPqIndex]], typically reloaded from
@@ -1156,8 +1156,7 @@ object SimilarityOps {
   def ivfPqCodesFor(
       vecs: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, codebooks: DataFrame, dim: Int, m: Int): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val subLen = dim / m
+    val subLen = subLenOf(dim, m)
     pqCodes(ivfPqResidualSubs(vecs, idCol, vecCol, cents.select(col("cid"), col("cv")), m, subLen),
       codebooks, Seq(col("id"), col("ccell"), col("sub")), "code")
   }
@@ -1172,22 +1171,18 @@ object SimilarityOps {
   def ivfPqFromIndex(
       queries: DataFrame, cents: DataFrame, codebooks: DataFrame, codes: DataFrame,
       idCol: String, vecCol: String, dim: Int, m: Int, k: Int, nprobe: Int): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must split evenly into $m subspaces")
+    val subLen = subLenOf(dim, m)
     require(nprobe >= 1 && k >= 1, s"bad nprobe=$nprobe/k=$k")
-    val subLen = dim / m
     // queries: rank coarse cells, keep nprobe, residual PER PROBED CELL
     // (the probed cell's cv rides its ranked struct)
     val lut = rankCells(queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv")), "qv",
         cents, Seq(col("qid").as("query_id"), col("qv")), TopCells(nprobe), "__p", nonEmpty = false)
       .select(col("query_id"), (-col("__p.ncid")).as("ccell"),
         zip_with(col("qv"), col("__p.cv"), (x, c) => x - c).as("qrv"))
-      .select(col("query_id"), col("ccell"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("qrv"))
-      .select(col("query_id"), col("ccell"), col("sub"),
-        slice(col("qrv"), col("sub") * subLen + lit(1), lit(subLen)).as("qsv"))
+      .transform(subvectors(_, Seq(col("query_id"), col("ccell")), col("qrv"), m, subLen))
       .join(broadcast(codebooks.select(col("sub"), col("cid"), col("cv"))), "sub")
       .select(col("query_id"), col("ccell"), col("sub"), col("cid"),
-        e6(l2sq(col("qsv"), col("cv"))).as("d_e6"))
+        e6(l2sq(col("sv"), col("cv"))).as("d_e6"))
     adcTopK(codes.join(broadcast(lut),
       codes("ccell") === lut("ccell") && codes("sub") === lut("sub") &&
         codes("code") === lut("cid")), k)

@@ -738,6 +738,29 @@ object TextAnalysisOps {
       .orderBy("doc_id")
   }
 
+  /** (doc_id, __hs, __fp) — positional shingle-hash sequence and the
+    * DISTINCT winnowing fingerprint set per doc, the shared map-only
+    * front half of [[winnowingFingerprints]] and [[winnowingPairs]]. */
+  private def winnowingSets(
+      docs: DataFrame, textCol: String, idCol: String,
+      k: Int, win: Int): DataFrame = {
+    require(k >= 1, s"shingle width must be >= 1: $k")
+    require(win >= 1, s"window must be >= 1: $win")
+    val toks = graft.functions.TextHash.tokens(col(textCol))
+    val hs = transform(
+      graft.functions.TextHash.orderedShingles(col("__toks"), k),
+      s => graft.functions.TextHash.hash28(s))
+    docs
+      .filter(col(textCol).isNotNull)
+      .select(col(idCol).as("doc_id"), toks.as("__toks"))
+      .filter(size(col("__toks")) >= k + win - 1)
+      .select(col("doc_id"), hs.as("__hs"))
+      .select(col("doc_id"), col("__hs"),
+        array_distinct(transform(
+          sequence(lit(1), size(col("__hs")) - (win - 1)),
+          j => array_min(slice(col("__hs"), j, lit(win))))).as("__fp"))
+  }
+
   /** WINNOWING document fingerprints (Schleimer, Wilkerson & Aiken,
     * SIGMOD 2003 — the MOSS algorithm): slide a `win`-wide window over
     * the document's POSITIONAL `k`-gram shingle-hash sequence and keep
@@ -766,29 +789,6 @@ object TextAnalysisOps {
     * fingerprint and are absent, the [[DedupOps.shingleHashSets]] gate
     * convention. Output: (doc_id, n_shingles, n_windows, n_fp, fp_md5)
     * with the checksum over the sorted fingerprint set. */
-  /** (doc_id, __hs, __fp) — positional shingle-hash sequence and the
-    * DISTINCT winnowing fingerprint set per doc, the shared map-only
-    * front half of [[winnowingFingerprints]] and [[winnowingPairs]]. */
-  private def winnowingSets(
-      docs: DataFrame, textCol: String, idCol: String,
-      k: Int, win: Int): DataFrame = {
-    require(k >= 1, s"shingle width must be >= 1: $k")
-    require(win >= 1, s"window must be >= 1: $win")
-    val toks = graft.functions.TextHash.tokens(col(textCol))
-    val hs = transform(
-      graft.functions.TextHash.orderedShingles(col("__toks"), k),
-      s => graft.functions.TextHash.hash28(s))
-    docs
-      .filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"), toks.as("__toks"))
-      .filter(size(col("__toks")) >= k + win - 1)
-      .select(col("doc_id"), hs.as("__hs"))
-      .select(col("doc_id"), col("__hs"),
-        array_distinct(transform(
-          sequence(lit(1), size(col("__hs")) - (win - 1)),
-          j => array_min(slice(col("__hs"), j, lit(win))))).as("__fp"))
-  }
-
   def winnowingFingerprints(
       docs: DataFrame, textCol: String, idCol: String,
       k: Int, win: Int): DataFrame = {
@@ -834,15 +834,13 @@ object TextAnalysisOps {
     // spent ~60 s compiling the fused stage per fresh plan (see
     // functions.Generators.WinnowExplode); arithmetic is identical and
     // spec-pinned equal to winnowingSets' __fp
-    docs
+    val fps = docs
       .filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
         graft.functions.Generators.winnowExplode(col(textCol), k, win)
           .as(Seq("n_fp", "fp")))
-      .groupBy("fp")
-      .agg(collect_list(struct(col("doc_id").as("id"), col("n_fp"))).as("ms"))
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
-      .select(graft.functions.Generators.pairsExplode(col("ms")).as(Seq("a", "b")))
+    NearDup.bucketPairs(fps, Seq("fp"), struct(col("doc_id").as("id"), col("n_fp")), maxBucket,
+        Seq("a", "b"))
       .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
         col("a.n_fp").as("na"), col("b.n_fp").as("nb"))
       .agg(count(lit(1)).as("n_shared"))

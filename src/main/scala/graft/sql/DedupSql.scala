@@ -90,10 +90,6 @@ FROM v WHERE n_common * $tDen >= (nsum - n_common) * $tNum
 ORDER BY jaccard_ppm DESC, doc_a ASC, doc_b ASC"""
   }
 
-  /** MinHash family (mirrors TextHash.minhashFromHashes): base hash = first
-    * 7 md5 hex chars (28-bit), family member j = (a_j·h + b_j) mod 2^31-1
-    * with closed-form a_j, b_j. All intermediates < 2^60: no BIGINT
-    * overflow in DuckDB (which errors rather than wraps). */
   /** The minhash pair CTE chain over a caller-provided toks CTE `(id, tk)`
     * named `src`, ending in CTE `v(doc_a, doc_b, jaccard)` — already
     * verified against the distinct-hash sets but NOT yet

@@ -94,13 +94,6 @@ FROM bits a JOIN bits b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= $maxDist
 ORDER BY hamming ASC, doc_a ASC, doc_b ASC LIMIT $limit"""
 
-  /** Mirror of [[graft.ops.MultimodalOps.audioDecodeStats]] over
-    * [[graft.ops.MultimodalOps.audioCorpus]]: the engine round-trips a
-    * REAL WAV (AudioSystem encode → AudioSystem decode) and reads sample
-    * count, rate, channels and amplitude aggregates off the decoded PCM
-    * stream; PCM is lossless, so those must equal this closed-form
-    * recomputation of the generator formula. A decoder that mangled the
-    * RIFF header, endianness, or any sample value hash-diverges. */
   /** Mirror of [[graft.ops.MultimodalOps.compressedAudioHeaderStats]]
     * over [[graft.ops.MultimodalOps.compressedAudioCorpus]]: the engine
     * walks REAL MPEG-1 Layer III / ADTS frame headers bit by bit
@@ -170,6 +163,13 @@ SELECT format, CAST(COUNT(*) AS BIGINT) AS n_clips,
   CAST(SUM(CASE WHEN has_xing THEN 1 ELSE 0 END) AS BIGINT) AS n_xing
 FROM h GROUP BY format ORDER BY format"""
 
+  /** Mirror of [[graft.ops.MultimodalOps.audioDecodeStats]] over
+    * [[graft.ops.MultimodalOps.audioCorpus]]: the engine round-trips a
+    * REAL WAV (AudioSystem encode → AudioSystem decode) and reads sample
+    * count, rate, channels and amplitude aggregates off the decoded PCM
+    * stream; PCM is lossless, so those must equal this closed-form
+    * recomputation of the generator formula. A decoder that mangled the
+    * RIFF header, endianness, or any sample value hash-diverges. */
   def audioDecodeStats(table: String): String =
     s"""WITH d AS (SELECT doc_id, 64 + doc_id % 129 AS n FROM $table),
 idx AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM d),

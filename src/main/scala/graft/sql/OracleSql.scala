@@ -238,10 +238,6 @@ u AS (SELECT user_id, $flags FROM w${stages.size - 1} GROUP BY user_id)""")
     sb.toString
   }
 
-  /** Cohort-retention oracle — mirrors
-    * [[graft.ops.SessionOps.cohortRetention]]: Monday-based
-    * date_trunc('week') on both engines, exact day-difference // 7
-    * offsets, distinct (cohort, offset, user) before the count. */
   /** Mirror of [[graft.ops.SessionOps.funnelDwell]]: the first fromStage
     * row by (t, id), qualifying toStage rows strictly after it in that
     * order, µs-truncated dwell seconds, and the engine-wide ⌈p·n/100⌉
@@ -284,6 +280,10 @@ SELECT c.from_type, c.to_type, CAST(c.n AS BIGINT) AS n_transitions,
 FROM c JOIN tot t ON c.from_type = t.from_type
 ORDER BY n_transitions DESC, c.from_type ASC, c.to_type ASC LIMIT $k"""
 
+  /** Cohort-retention oracle — mirrors
+    * [[graft.ops.SessionOps.cohortRetention]]: Monday-based
+    * date_trunc('week') on both engines, exact day-difference // 7
+    * offsets, distinct (cohort, offset, user) before the count. */
   def cohortRetention: String =
     s"""WITH w AS (SELECT user_id, CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS wk
   FROM events WHERE ts IS NOT NULL),

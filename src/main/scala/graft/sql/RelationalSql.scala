@@ -162,12 +162,6 @@ FROM m ORDER BY event_type"""
 COUNT(*) AS n FROM events WHERE value IS NOT NULL
 GROUP BY event_type, bin_lo ORDER BY event_type, bin_lo"""
 
-  /** Batch sessionization oracle. `floor(epoch(ts))` mirrors Spark's
-    * truncating `unix_timestamp`; session bounds are epoch-MICROSECOND
-    * BIGINTs on both sides — min/max commute with the µs truncation, and a
-    * raw int64 has one representation in every engine (Spark's parquet
-    * writer emits INT96/ns-flavored timestamps, DuckDB µs — emitting the
-    * number instead of the timestamp sidesteps the unit entirely). */
   /** Mirror of [[graft.ops.RelationalOps.percentileClip]] aggregated per
     * group: same distinct-value cumulative histogram, same integer
     * ceiling-division ranks (`//`), nearest-rank bounds — no interpolated
@@ -187,6 +181,12 @@ SELECT d.$groupCol AS $groupCol, CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM $table d, b WHERE d.$metricCol BETWEEN b.lo AND b.hi
 GROUP BY 1 ORDER BY 1"""
 
+  /** Batch sessionization oracle. `floor(epoch(ts))` mirrors Spark's
+    * truncating `unix_timestamp`; session bounds are epoch-MICROSECOND
+    * BIGINTs on both sides — min/max commute with the µs truncation, and a
+    * raw int64 has one representation in every engine (Spark's parquet
+    * writer emits INT96/ns-flavored timestamps, DuckDB µs — emitting the
+    * number instead of the timestamp sidesteps the unit entirely). */
   def sessionizeBatch(gapSeconds: Long): String =
     s"""WITH e AS (SELECT user_id, ts, event_id, value,
   CASE WHEN lag(floor(epoch(ts))) OVER w IS NULL
@@ -316,10 +316,6 @@ SELECT col_name,
 FROM e ORDER BY col_name"""
   }
 
-  /** Mirror of [[graft.ops.ProfileOps.tableProfile]]: one SELECT per
-    * column UNION ALL'd — same null count, exact distinct, and value/
-    * length min-max metric (`isString` columns profile `length(col)`,
-    * matching the Spark side's type dispatch). */
   /** Mirror of [[graft.ops.ProfileOps.joinIntegrity]]: distinct keys per
     * side, inner key match, integer orphan ppm. */
   def joinIntegrity(
@@ -339,6 +335,10 @@ SELECT CAST(n_left AS BIGINT) AS n_left, CAST(n_right AS BIGINT) AS n_right,
   CAST(((n_right_keys - n_matched_keys) * 1000000) // n_right_keys AS BIGINT) AS right_orphan_ppm
 FROM c"""
 
+  /** Mirror of [[graft.ops.ProfileOps.tableProfile]]: one SELECT per
+    * column UNION ALL'd — same null count, exact distinct, and value/
+    * length min-max metric (`isString` columns profile `length(col)`,
+    * matching the Spark side's type dispatch). */
   def tableProfile(table: String, cols: Seq[(String, Boolean)]): String =
     cols.map { case (c, isString) =>
       val m = if (isString) s"length($c)" else c

@@ -89,10 +89,6 @@ CAST(SUM(bpe) AS BIGINT) AS total_bpe_tokens,
 CAST(MAX(ws) AS BIGINT) AS max_ws_tokens,
 round(SUM(ws)::DOUBLE / COUNT(*), 6) AS avg_ws_tokens FROM t"""
 
-  /** Bigram-repetition mirror of
-    * [[graft.ops.TextAnalysisOps.repetitionProfile]]: every bigram
-    * OCCURRENCE (multiset, unlike the dedup shingle CTEs' list_distinct);
-    * integer counts, ratios rounded to 6 dp. */
   /** Mirror of [[graft.ops.TextAnalysisOps.termDrift]]: same one-pass
     * term × slice counts, slice totals summed off the term aggregate,
     * same pinned-order chi² double expression (multiplies before the one
@@ -154,6 +150,10 @@ SELECT doc_id, n_distinct, n_repeated,
 FROM a ORDER BY doc_id"""
   }
 
+  /** Bigram-repetition mirror of
+    * [[graft.ops.TextAnalysisOps.repetitionProfile]]: every bigram
+    * OCCURRENCE (multiset, unlike the dedup shingle CTEs' list_distinct);
+    * integer counts, ratios rounded to 6 dp. */
   def repetitionProfile(table: String): String =
     s"""WITH t AS (SELECT doc_id, $toks AS tk FROM $table WHERE text IS NOT NULL),
 b AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
@@ -199,9 +199,6 @@ SELECT CAST(rule_mask AS BIGINT) AS rule_mask, CAST(COUNT(*) AS BIGINT) AS n_doc
 FROM m GROUP BY rule_mask ORDER BY rule_mask"""
   }
 
-  /** Mirror of [[graft.ops.TextAnalysisOps.patternScrub]]: same regexes
-    * (RE2/Java common subset), same replacement order, global 'g' flag to
-    * match Spark's replace-all semantics. */
   /** Mirror of [[graft.ops.TextAnalysisOps.hashedLinearScore]]: same md5
     * feature hashing, same integer weight derivation — the score is an
     * exact BIGINT on both engines. */
@@ -312,6 +309,9 @@ w${t + 1} AS (SELECT w$t.f, w$t.w + COALESCE(u$t.d, 0) AS w
     sb.toString
   }
 
+  /** Mirror of [[graft.ops.TextAnalysisOps.patternScrub]]: same regexes
+    * (RE2/Java common subset), same replacement order, global 'g' flag to
+    * match Spark's replace-all semantics. */
   def patternScrub(
       table: String, sampleMod: Int,
       patterns: Seq[(String, String, String)]): String = {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.io.Tables
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, NearDup}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,6 +165,50 @@ class DedupOpsSpec extends AnyFunSuite {
     // small similar pair survives
     assert(capped.contains((100L, 101L)))
     assert(!capped.exists { case (a, b) => a < 100 && b < 100 })
+  }
+
+  test("bucket pairs: exactly cap members emit every pair once; cap + 1 and 1 member emit none") {
+    import spark.implicits._
+    val cap = 5
+    // bucket 1 holds exactly cap members, listed in descending id order;
+    // bucket 2 holds cap + 1; bucket 3 holds one
+    val rows = ((1L to cap.toLong).reverse.map(id => (1, id)) ++
+      (11L to 11L + cap).map(id => (2, id)) :+ ((3, 99L))).toDF("k", "id")
+    val expected = (for (a <- 1L to cap; b <- a + 1 to cap) yield (a, b)).toSet
+    val pairs = NearDup.bucketPairs(rows, Seq("k"), col("id"), cap, Seq("a", "b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.length == cap * (cap - 1) / 2)
+    assert(pairs.toSet == expected)
+    // a struct member pairs by its first (id) field and carries the rest
+    val carried = NearDup.bucketPairs(rows, Seq("k"), struct(col("id"), (-col("id")).as("p")),
+        cap, Seq("a", "b"))
+      .select(col("a.id"), col("b.id"), col("a.p"), col("b.p"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(carried.length == pairs.length)
+    assert(carried.forall { case (a, b, pa, pb) => pa == -a && pb == -b })
+    assert(carried.map(t => (t._1, t._2)).toSet == expected)
+  }
+
+  test("one-scan signature: hs is each doc's shingleHashSets set; short docs are in neither") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, "a b c d e f"),
+      (2L, "x y x y x y x y"), // repeated shingles: only "x y x" and "y x y"
+      (3L, "too short"),       // under w = 3 tokens
+      (4L, null: String),
+      (5L, "p q r p q r s")).toDF("doc_id", "text")
+    val sig = NearDup.minhashSignatures(df, "text", "doc_id", 3, 16).collect()
+      .map(r => r.getLong(0) -> ((r.getSeq[Long](1), r.getSeq[Long](2)))).toMap
+    val sets = DedupOps.shingleHashSets(df, "text", "doc_id", 3).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sig.keySet == Set(1L, 2L, 5L))
+    assert(sets.keySet == sig.keySet)
+    sig.foreach { case (id, (m, hs)) =>
+      assert(m.size == 16)
+      assert(hs.size == hs.toSet.size, s"doc $id: hs is a set")
+      assert(hs.toSet == sets(id).toSet, s"doc $id")
+    }
+    assert(sig(2L)._2.size == 2)
   }
 
   test("simhash hamming-LSH finds near-identical docs, excludes distant ones") {

@@ -38,8 +38,11 @@ class ProbeSpec extends AnyFunSuite {
   test("q21_minhash_pairs --plan: the build file holds the checkpointed signature aggregate") {
     val dir = Files.createTempDirectory("probe-plans")
     Probe.writePlans(spark, "q21_minhash_pairs", sf, dir.toString)
-    assert(Files.exists(dir.resolve("q21_minhash_pairs.txt")))
-    val build = Files.readString(dir.resolve("q21_minhash_pairs.build.txt"))
+    val plan = dir.resolve("q21_minhash_pairs.txt")
+    val buildFile = dir.resolve("q21_minhash_pairs.build.txt")
+    assert(Files.exists(plan))
+    val build = Files.readString(buildFile)
+    Seq(plan, buildFile, dir).foreach(Files.delete)
     // the one-scan MinHash signature: k family minima and the distinct
     // shingle-hash set in one aggregate, run by the build's checkpoint
     assert(build.contains("localCheckpoint at"), build)

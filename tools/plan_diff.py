@@ -9,6 +9,9 @@ comparing, every run-dependent token is masked:
   - call-site line numbers (`SimilarityOps.scala:1019` -> `SimilarityOps.scala:N`),
   - JVM identity hashes of inlined literals (`[[D@1f1b69bb` -> `[[D@`),
   - JVM lambda class names (`Ops$$$Lambda$7569/0x00007fcb...` -> `Ops$$$Lambda`),
+  - higher-order-function lambda variable counters (`lambda x_137#` ->
+    `lambda x_#`): Spark numbers them from one JVM-wide counter, so they
+    shift with every lambda an earlier query in the session created,
   - the counters of an executed adaptive plan, which a cached relation
     carries into later queries' plans: whole-stage codegen ids
     (`[codegen id : 13]`) and query-stage ids (`Arguments: 17` under a
@@ -47,6 +50,7 @@ MASKS = [
     (re.compile(r"\.scala:\d+"), ".scala:N"),
     (re.compile(r"(?<=[\w;\[])@[0-9a-f]+\b"), "@"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda"),
+    (re.compile(r"(?<=lambda )(\w+?)_\d+\b"), r"\1_"),
     (re.compile(r"codegen id : \d+"), "codegen id : N"),
     (re.compile(r"(QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: )\d+"), r"\1N"),
 ]
