@@ -321,9 +321,11 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val canaryPre = Seq(canaryOnce(), canaryOnce())
-    // Untimed warmup pass: JIT + codegen + parquet footer caches. The timed
-    // passes below measure steady-state query throughput, which is what a
-    // long-running engine delivers.
+    // Untimed warmup pass: JIT, parquet footer caches and the codegen cache
+    // (GraftSession sizes it to hold the catalog's generated classes; a few
+    // queries still recompile some on a later pass). The timed passes below
+    // measure steady-state query throughput, which is what a long-running
+    // engine delivers.
     SparkEntry.queries.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }

@@ -13,19 +13,28 @@ import org.apache.spark.sql.SparkSession
   *     broadcast-join demotion/promotion) is the main lever at 100 TB.
   */
 object GraftSession {
-  def local(
-      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      appName: String = "graft",
-      extraConfigs: Map[String, String] = Map.empty): SparkSession = {
-    val base = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-    val spark = extraConfigs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+  /** Generated classes Spark's codegen cache keeps. The default, 100, is
+    * far below the engine's working set, so every pass recompiled what the
+    * pass before had compiled: distinct generated sources measured 74 for
+    * one posts pipeline pass (about 100 compiles per pass at the default,
+    * 0 from the second pass on at this size), 208 for three catalog
+    * queries, ~3,100 for the full catalog at sf0.01. Holding them costs
+    * metaspace: after two full-catalog passes a session measured 194 MB
+    * at the default and 215 MB at this size (sf0.01, 4 cores).
+    * `spark.sql.codegen.cache.maxEntries` is a static
+    * conf, and the cache is one per JVM: the session that first generates
+    * code fixes its size, and later sessions cannot change it. */
+  val CodegenCacheEntries = 4096
+
+  /** The settings [[local]] applies, in order: the engine's, then the
+    * caller's `extraConfigs`, so a caller's value for a key the engine also
+    * sets takes effect. */
+  def settings(cores: Int, extraConfigs: Map[String, String]): Seq[(String, String)] =
+    Seq(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       // ADVISORY POST-SHUFFLE PARTITION SIZE (r13, measured): with
       // parallelism-first off (deliberate: r13 measured `true` fanning
       // sub-MB stages into extra tasks whose scheduling overhead cost the
@@ -47,20 +56,33 @@ object GraftSession {
       // natural-but-wrong "64m" fails with a clear message at session
       // build instead of Spark's opaque "64mm" config parse error
       // (r13 ADVICE).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> {
         val v = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "2").trim
         require(v.nonEmpty && v.forall(_.isDigit),
           s"SPARK_GRAFT_ADVISORY_MB must be a plain integer MB count " +
             s"(e.g. 2, not 2m): got '$v'")
         v + "m"
-      })
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+      },
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
       // events.ts may be INT64 TIMESTAMP(NANOS); read it as raw longs
       // (graft.io.Tables.events converts them), set once per session
       // rather than from inside a query
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+      "spark.ui.enabled" -> "false"
+    ) ++ extraConfigs
+
+  def local(
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      appName: String = "graft",
+      extraConfigs: Map[String, String] = Map.empty): SparkSession = {
+    val base = SparkSession
+      .builder()
+      .master(s"local[$cores]")
+      .appName(appName)
+    val spark = settings(cores, extraConfigs)
+      .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec warns "No Partition Defined" on every global window; the

@@ -3,10 +3,13 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import graft.io.Tables
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -23,8 +26,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * the initial physical plan of every SQL execution that build runs (its
   * eager `localCheckpoint`/`collect`s) to `<outDir>/<query>.build.txt`;
   * `passes = 0` writes plans only. Each job table carries the pass's
-  * table-registry hits and misses; the run ends with the registry's
-  * session totals (a miss is one table resolution, i.e. one schema job). */
+  * table-registry hits and misses and its codegen compiles and compile
+  * seconds; the run ends with the registry's session totals (a miss is one
+  * table resolution, i.e. one schema job), the session's codegen totals and
+  * the JVM's metaspace in use. */
 object Probe {
 
   /** Tags each job with its phase; jobs Spark submits from its own threads
@@ -51,9 +56,12 @@ object Probe {
 
   /** One profiled pass; `jobs` is every job the listener saw during it,
     * `tableHits`/`tableMisses` its table-registry lookups
-    * ([[Tables.registry]]). */
+    * ([[Tables.registry]]), `compiles`/`compileSeconds` the classes Spark's
+    * code generator compiled and the time it spent compiling them. The
+    * codegen counters are JVM-wide, so the deltas are this pass's only
+    * while nothing else runs queries. */
   final case class Pass(build: Phase, action: Phase, jobs: Seq[Job],
-      tableHits: Long, tableMisses: Long) {
+      tableHits: Long, tableMisses: Long, compiles: Long, compileSeconds: Double) {
     def seconds: Double = (action.endMs - build.startMs) / 1e3
   }
 
@@ -125,6 +133,10 @@ object Probe {
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Classes the JVM's code generator has compiled, and seconds spent. */
+  private def codegen: (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e9)
+
   /** One pass of catalog query `name` (build, then the noop write) with a
     * job listener attached, split into its two phases. */
   def profile(spark: SparkSession, name: String, sfDir: String): Pass = {
@@ -133,6 +145,7 @@ object Probe {
     sc.addSparkListener(listener)
     val reg = Tables.registry
     val (hits0, misses0) = (reg.hits, reg.misses)
+    val (compiles0, compileSeconds0) = codegen
     try {
       sc.setLocalProperty(PhaseKey, "build")
       val t0 = System.currentTimeMillis()
@@ -143,9 +156,11 @@ object Probe {
       val t2 = System.currentTimeMillis()
       GraftSqlBridge.drainListenerBus(sc)
       val jobs = listener.jobs
+      val (compiles, compileSeconds) = codegen
       Pass(Phase("build", t0, t1, jobs.filter(_.phase == "build")),
         Phase("action", t1, t2, jobs.filter(_.phase == "action")), jobs,
-        reg.hits - hits0, reg.misses - misses0)
+        reg.hits - hits0, reg.misses - misses0,
+        compiles - compiles0, compileSeconds - compileSeconds0)
     } finally {
       sc.setLocalProperty(PhaseKey, null)
       sc.removeSparkListener(listener)
@@ -172,6 +187,7 @@ object Probe {
     if (unknown.nonEmpty) usage(s"unknown queries: ${unknown.mkString(", ")}")
 
     val spark = GraftSession.local(appName = "graft-probe")
+    val (compiles0, compileSeconds0) = codegen
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
     val minima = names.map { name =>
       val df = planDir.fold(SparkEntry.queries(name)(spark, sfDir))(writePlans(spark, name, sfDir, _))
@@ -181,14 +197,15 @@ object Probe {
         val runs = (1 to passes).map { i =>
           val p = profile(spark, name, sfDir)
           println(f"[probe] $name pass $i: ${p.seconds}%.3f s  " +
-            f"(build ${p.build.seconds}%.3f s, action ${p.action.seconds}%.3f s)")
+            f"(build ${p.build.seconds}%.3f s, action ${p.action.seconds}%.3f s)  compiles=${p.compiles}")
           p
         }
         val (last, min) = (runs.last, runs.map(_.seconds).min)
         println(f"[probe] $name min: $min%.3f s")
         println(s"[probe] $name last pass: jobs=${last.jobs.size} (build ${last.build.jobs.size}, " +
           s"action ${last.action.jobs.size}, untagged ${last.jobs.count(_.phase == null)})  " +
-          s"table registry: hits=${last.tableHits} misses=${last.tableMisses}")
+          s"table registry: hits=${last.tableHits} misses=${last.tableMisses}  " +
+          f"codegen compiles=${last.compiles} compile_s=${last.compileSeconds}%.3f")
         Seq(last.build, last.action).foreach { ph =>
           println(f"[probe]   ${ph.name}%-6s ${ph.seconds}%7.3f s  jobs=${ph.jobs.size}%3d  " +
             f"jobSum=${ph.jobs.map(_.seconds).sum}%.3f s  driver outside jobs=${ph.driverSeconds}%.3f s")
@@ -203,6 +220,11 @@ object Probe {
     if (passes > 0) println(f"[probe] TOTAL ${minima.sum}%8.3f s over ${names.length} queries")
     val reg = Tables.registry
     println(s"[probe] table registry: entries=${reg.size} hits=${reg.hits} misses=${reg.misses}")
+    val (compiles, compileSeconds) = codegen
+    val metaspace = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").fold(0L)(_.getUsage.getUsed)
+    println(f"[probe] codegen: compiles=${compiles - compiles0} " +
+      f"compile_s=${compileSeconds - compileSeconds0}%.3f  metaspace=${metaspace / 1048576.0}%.1f MB")
     spark.stop()
   }
 }

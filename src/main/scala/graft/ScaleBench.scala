@@ -11,14 +11,15 @@ import org.apache.spark.sql.SparkSession
   * that silently became global, a broadcast that grew with the corpus).
   *
   * Method: per scale dir, the MIN of two timed passes per query (after a
-  * warmup pass at the smallest dir for JIT/codegen), rows counted from
+  * warmup pass at the smallest dir for JIT and the codegen cache, which
+  * GraftSession sizes to hold the catalog's classes), rows counted from
   * parquet metadata. Min-of-2, because a single pass fabricates flags: a
   * one-off GC pause or codec-provider stall at the largest point once
   * measured a steady-state 2.7 s query at 13.7 s — a 2.4 growth excess
   * on a query whose honest excess is 0.5.
   * Classification uses only the two LARGEST scale points: at small SFs
   * every query is dominated by the fixed per-job floor (scheduling,
-  * codegen cache hits, parquet footers — ~0.2 s), so small-point ratios
+  * code generation, parquet footers — ~0.2 s), so small-point ratios
   * carry no signal about the data-dependent term. A linear-class query's
   * top-pair time ratio is therefore WELL below the rows ratio (the fixed
   * floor amortizes); a quadratic term that matters at all shows up as a
@@ -124,7 +125,7 @@ object ScaleBench {
     * query subset end-to-end. */
   def runScale(spark: SparkSession, dirs: Seq[String],
       names: Seq[String]): Map[String, Seq[Point]] = {
-    // warmup on the smallest dir: JIT + codegen + catalog init
+    // warmup on the smallest dir: JIT, the codegen cache, catalog init
     timedPass(spark, dirs.head, names)
     val byDir = dirs.map { d =>
       val rows = corpusRows(spark, d)

@@ -908,7 +908,7 @@ object SimilarityOps {
   def pqEncode(
       emb: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, dim: Int, m: Int): DataFrame = {
-    pqCodes(pqSubvectors(emb, idCol, vecCol, m, dim / m), codebooks,
+    pqCodes(pqSubvectors(emb, idCol, vecCol, m, subLenOf(dim, m)), codebooks,
       Seq(col("id"), col("sub")), "code")
   }
 
@@ -927,6 +927,7 @@ object SimilarityOps {
       emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, ksub: Int, iters: Int,
       queryMod: Int, k: Int): DataFrame = {
+    val subLen = subLenOf(dim, m)
     // the trained codebooks + code table through the session memo (r14):
     // a PQ deployment trains once and PERSISTS the index; repeated
     // searches over the same corpus and parameters read the artifacts.
@@ -942,7 +943,7 @@ object SimilarityOps {
       (cb, pqEncode(emb, idCol, vecCol, cb, dim, m).localCheckpoint())
     }
     val lut = pqSubvectors(
-        emb.filter(col(idCol) % queryMod === 0), idCol, vecCol, m, dim / m)
+        emb.filter(col(idCol) % queryMod === 0), idCol, vecCol, m, subLen)
       .join(broadcast(codebooks.select(col("sub"), col("cid"), col("cv"))), "sub")
       .select(col("id").as("query_id"), col("sub"), col("cid"),
         e6(l2sq(col("sv"), col("cv"))).as("d_e6"))

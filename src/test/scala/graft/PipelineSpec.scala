@@ -7,6 +7,7 @@ import graft.io.Tables
 import graft.model.Defaults
 import graft.pipeline.{AnalysisReport, Pipeline}
 import graft.text.SimpleAnalyzer
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{CachedData, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions.{col, lit, raise_error, udf, when}
@@ -61,6 +62,23 @@ class PipelineSpec extends AnyFunSuite {
       Pipeline.writeReports(report, out)
       assert(new File(s"$out/industry_counts").exists())
     } finally Pipeline.unpersist(report)
+  }
+
+  test("a second run/writeReports/writeCharts/unpersist cycle compiles no class") {
+    // the session's codegen cache holds every class the first cycle
+    // generated; at Spark's default size each cycle recompiled about 100
+    def cycle(): Unit = {
+      val report = runReport()
+      try {
+        Pipeline.writeReports(report, tmpDir("graft_reports_codegen"))
+        Pipeline.writeCharts(report, tmpDir("graft_charts_codegen"))
+      } finally Pipeline.unpersist(report)
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    cycle()
+    val before = compiles
+    cycle()
+    assert(compiles - before == 0, s"${compiles - before} classes recompiled by the second cycle")
   }
 
   test("failing sinks: writeReports waits for every sink, then throws the first failure " +

@@ -31,6 +31,8 @@ class ProbeSpec extends AnyFunSuite {
     val p = Probe.profile(spark, "q01_industry_counts", sf)
     assert(p.build.jobs.isEmpty, p.build.jobs.map(_.desc))
     assert(p.tableMisses == 0 && p.tableHits > 0)
+    // the session's codegen cache still holds the first pass's classes
+    assert(p.compiles == 0, s"${p.compiles} classes recompiled on a warm pass")
     assert(p.action.jobs.nonEmpty)
     assert(p.build.jobs.size + p.action.jobs.size == p.jobs.size)
   }

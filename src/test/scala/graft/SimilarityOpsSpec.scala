@@ -258,6 +258,16 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(again.toSeq == ann.toSeq, "memo hit diverged from the training call")
   }
 
+  test("pq: pqEncode refuses a dim that does not split evenly into m subspaces") {
+    import spark.implicits._
+    val df = Seq((1L, Array(1f, 2f, 3f, 4f, 5f))).toDF("vec_id", "embedding")
+    val books = Seq((0, 0L, Seq(1.0, 2.0))).toDF("sub", "cid", "cv")
+    // two subvectors of 5 / 2 = 2 components would drop the fifth
+    val e = intercept[IllegalArgumentException](
+      SimilarityOps.pqEncode(df, "vec_id", "embedding", books, dim = 5, m = 2))
+    assert(e.getMessage.contains("dim 5 must split evenly into 2 subspaces"))
+  }
+
   test("pq: IVF-PQ over one all-zero coarse cell trains and encodes exactly like plain PQ") {
     import spark.implicits._
     // one zero centroid: every residual is the raw vector, and the lone

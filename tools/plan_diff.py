@@ -17,7 +17,11 @@ comparing, every run-dependent token is masked:
     (`[codegen id : 13]`) and query-stage ids (`Arguments: 17` under a
     `...QueryStage` node). Adaptive execution cancels and re-creates
     stages as their runtimes interleave, so both counters can differ
-    between two runs of the same commit (q146 shows it).
+    between two runs of the same commit (q146 shows it),
+  - the random suffix of a temporary directory
+    (`/tmp/graft-unigram-vocab9523082666350974088/` ->
+    `/tmp/graft-unigram-vocabN/`; q191's build writes its vocabulary
+    to one).
 What is left is the plan's shape, operators, expressions and aliases,
 so two runs of the same code compare equal and a refactor that keeps
 every plan reports no difference.
@@ -52,6 +56,7 @@ MASKS = [
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda"),
     (re.compile(r"(?<=lambda )(\w+?)_\d+\b"), r"\1_"),
     (re.compile(r"codegen id : \d+"), "codegen id : N"),
+    (re.compile(r"(?<=[A-Za-z_-])\d{8,}(?=/)"), "N"),
     (re.compile(r"(QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: )\d+"), r"\1N"),
 ]
 
